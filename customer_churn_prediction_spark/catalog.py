@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import memo
+
 TABLES = (
     "region",
     "nation",
@@ -24,32 +26,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# Per-session relation memo (r14 optimization): every load_table call
-# paid a parquet footer/schema read plus (for spread) an inputFiles()
-# listing — ~70 ms of py4j/JVM work per call, and the heavy composed
-# queries build 2-9 scans each, every bench pass. Spark's own session
-# catalog caches resolved table relations the same way. The cached
-# object is a LAZY plan — all data is still read from parquet at
-# every execution; nothing resembling a result is stored. The key
-# carries the path's mtime so a RE-INGESTED table at the same path
-# (the corpus-rewrite contract pinned by
-# tests/test_selection.py::test_band_cache_refits_on_same_path)
-# misses the memo and re-resolves its file listing; one os.stat per
-# call is the entire overhead.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _path_version(path: str) -> float:
-    """mtime of the table file/dir (0.0 when absent): rewriting a
-    parquet dir adds/removes part files, which bumps the dir mtime."""
-    import os
-
-    try:
-        return os.stat(path).st_mtime
-    except OSError:
-        return 0.0
 
 
 def load_table(
@@ -68,14 +44,9 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        spread,
-        _path_version(f"{sf_dir}/{name}.parquet"),
-    )
-    hit = _RELATION_CACHE.get(key)
+    key = (spark.sparkContext.applicationId, sf_dir, name, spread)
+    version = memo.table_version(sf_dir, name)
+    hit = memo.get("relation", key, version)
     if hit is not None:
         return hit
     if name == "events":
@@ -113,14 +84,7 @@ def load_table(
         target = spark.sparkContext.defaultParallelism
         if len(df.inputFiles()) < target:
             df = df.repartition(target)
-    # Evict stale versions of the SAME relation (r15, VERDICT r14 item
-    # 7): the memo is keyed on mtime, so a long-lived session that
-    # re-ingests the same path would otherwise accumulate dead entries
-    # holding JVM-side plan references forever.
-    for stale in [k for k in _RELATION_CACHE if k[:4] == key[:4] and k != key]:
-        del _RELATION_CACHE[stale]
-    _RELATION_CACHE[key] = df
-    return df
+    return memo.put("relation", key, version, df)
 
 
 def register_views(

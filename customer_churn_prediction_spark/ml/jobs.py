@@ -16,44 +16,24 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from . import dataset, evaluation, models
 from .pipeline import build_feature_pipeline
 
 
 ROWS_PER_FIT_PARTITION = 20_000
 
-# Cached (sized training frame, row count) per (application, sf_dir),
-# shared by the four registry model jobs so features ⋈ label is computed
-# once, not four times. Only the registry path opts in
-# (share_cache=True); the default API path keeps its own cache +
-# unpersist lifecycle. Keyed on applicationId, NOT id(spark): CPython
-# can reuse a stopped session's id() for a new session, which would
-# serve cached frames bound to a dead SparkContext (r2 ADVICE).
-_SHARED_TRAINING: dict[tuple[str, str], tuple[DataFrame, int]] = {}
+# The tables ``dataset.churn_training_set`` reads: the version of the
+# two shared memos below, so a re-ingest of any of them refits.
+_TRAINING_TABLES = ("customer", "nation", "orders", "lineitem", "part")
+memo.on_release("ml.training", lambda v: v[2].unpersist())
+memo.on_release(
+    "ml.vectorized", lambda v: (v[0].unpersist(), v[1].unpersist())
+)
 
 
 def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return (spark.sparkContext.applicationId, sf_dir)
-
-
-def clear_shared_caches(unpersist: bool = True) -> None:
-    """Release the registry-path shared frames (call between sessions
-    or to free executor memory mid-session)."""
-    for frame, _ in _SHARED_TRAINING.values():
-        if unpersist:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped
-    _SHARED_TRAINING.clear()
-    for train_t, test_t, _, _ in _SHARED_VECTORIZED.values():
-        if unpersist:
-            try:
-                train_t.unpersist()
-                test_t.unpersist()
-            except Exception:
-                pass
-    _SHARED_VECTORIZED.clear()
 
 
 def _sized(data: DataFrame, n_rows: int) -> DataFrame:
@@ -69,37 +49,41 @@ def _sized(data: DataFrame, n_rows: int) -> DataFrame:
 def _shared_training_set(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
-    key = _cache_key(spark, sf_dir)
-    hit = _SHARED_TRAINING.get(key)
-    if hit is None:
+    """(sized training frame, row count), cached once and shared by the
+    four registry model jobs (share_cache=True) so features ⋈ label is
+    computed once, not four times."""
+
+    def fit() -> tuple:
         data = dataset.churn_training_set(spark, sf_dir).cache()
         n_rows = data.count()
-        hit = (_sized(data, n_rows), n_rows)
-        _SHARED_TRAINING[key] = hit
-    return hit
+        return _sized(data, n_rows), n_rows, data
 
-
-# (fitted-feature train, test, n_train, n_test) per (application,
-# sf_dir): the four registry model jobs share one feature-pipeline fit
-# and one pair of cached vectorized splits — the standard
-# fit-features-once, sweep-estimators pattern. Results are
-# bit-identical to fitting the composed Pipeline per job (the feature
-# stages fit on the same train split either way).
-_SHARED_VECTORIZED: dict[tuple[str, str], tuple] = {}
+    sized, n_rows, _ = memo.cached(
+        "ml.training", _cache_key(spark, sf_dir),
+        memo.table_version(sf_dir, *_TRAINING_TABLES), fit,
+    )
+    return sized, n_rows
 
 
 def _shared_vectorized_split(spark: SparkSession, sf_dir: str) -> tuple:
-    key = _cache_key(spark, sf_dir)
-    hit = _SHARED_VECTORIZED.get(key)
-    if hit is None:
+    """(fitted-feature train, test, n_train, n_test): the four registry
+    model jobs share one feature-pipeline fit and one pair of cached
+    vectorized splits — fit features once, sweep estimators. Results
+    are bit-identical to fitting the composed Pipeline per job (the
+    feature stages fit on the same train split either way)."""
+
+    def fit() -> tuple:
         sized, _ = _shared_training_set(spark, sf_dir)
         train, test = dataset.train_test_split(sized)
         feat = build_feature_pipeline().fit(train)
         train_t = feat.transform(train).select("features", "label").cache()
         test_t = feat.transform(test).select("features", "label").cache()
-        hit = (train_t, test_t, train_t.count(), test_t.count())
-        _SHARED_VECTORIZED[key] = hit
-    return hit
+        return train_t, test_t, train_t.count(), test_t.count()
+
+    return memo.cached(
+        "ml.vectorized", _cache_key(spark, sf_dir),
+        memo.table_version(sf_dir, *_TRAINING_TABLES), fit,
+    )
 
 
 def train_and_evaluate(

@@ -44,6 +44,7 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from . import dataset
 
 _MANIFEST = "manifest.json"
@@ -55,15 +56,6 @@ _MODEL_DIR = "model"
 # any unseen/missing label lands in the reserved extra slot.
 _NUMERIC_FILL = 0.0
 _CATEGORICAL_FILL = "__missing__"
-
-# path -> (model, manifest, manifest_stat). The stat fingerprint
-# ((mtime_ns, size) of manifest.json) makes cache invalidation work
-# ACROSS processes: the realistic deploy is trainer-writes /
-# scorer-serves, where the scorer process never sees the trainer's
-# in-process cache pop — every load re-stats the manifest (one cheap
-# syscall, no deserialization) and drops a stale entry itself.
-_MODEL_CACHE: dict[str, tuple[PipelineModel, dict, tuple]] = {}
-
 
 def _manifest_from_model(fitted: PipelineModel) -> dict:
     """Derive the request schema from the FITTED stages, not from the
@@ -128,11 +120,6 @@ def export_serving_bundle(fitted: PipelineModel, path: str) -> dict:
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
     os.replace(tmp, os.path.join(path, _MANIFEST))  # atomic publish
-    # Re-exporting over a served path must not keep answering with the
-    # previous model (review r6): drop any memoized load for it (cache
-    # keys are absolute paths — see load_serving_bundle). Cross-process
-    # staleness is handled by the stat fingerprint at load time.
-    _MODEL_CACHE.pop(os.path.abspath(path), None)
     return manifest
 
 
@@ -142,12 +129,11 @@ def load_serving_bundle(path: str) -> tuple[PipelineModel, dict]:
     the deserialization per call, which is also why the reference's
     per-process unpickle is its scoring bottleneck). Keys are
     normalized to the absolute path so a relative-path load and an
-    absolute-path re-export hit the SAME cache entry (otherwise the
-    re-export invalidation could miss).
+    absolute-path re-export hit the SAME cache entry.
 
     Every hit re-reads ``manifest.json`` (a few hundred bytes — no
-    model deserialization): a bundle re-exported by a DIFFERENT
-    process (trainer writes, this scorer serves) changes the
+    model deserialization): a bundle re-exported by this or a
+    DIFFERENT process (trainer writes, this scorer serves) changes the
     manifest's (mtime_ns, size, content-hash) fingerprint, and the
     stale cache entry is dropped and reloaded instead of answering
     with the previous model. The content hash is load-bearing, not
@@ -167,17 +153,17 @@ def load_serving_bundle(path: str) -> tuple[PipelineModel, dict]:
     fingerprint = (
         st.st_mtime_ns, st.st_size, hashlib.md5(raw).hexdigest()
     )
-    cached = _MODEL_CACHE.get(path)
-    if cached is None or cached[2] != fingerprint:
-        manifest = json.loads(raw)
-        model = PipelineModel.load(os.path.join(path, _MODEL_DIR))
-        _MODEL_CACHE[path] = (model, manifest, fingerprint)
-    model, manifest, _ = _MODEL_CACHE[path]
-    return model, manifest
+    return memo.cached(
+        "serving.model", path, fingerprint,
+        lambda: (
+            PipelineModel.load(os.path.join(path, _MODEL_DIR)),
+            json.loads(raw),
+        ),
+    )
 
 
 def clear_serving_cache() -> None:
-    _MODEL_CACHE.clear()
+    memo.clear("serving.model")
 
 
 def _request_frame(

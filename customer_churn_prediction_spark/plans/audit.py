@@ -56,13 +56,23 @@ def count_shuffles_in_plan_string(plan: str) -> int:
     return n
 
 
+def _static_plan_string(df: DataFrame) -> str:
+    """``df``'s physical plan as planned, before any AQE re-planning.
+    Once an adaptive plan has executed, its string prints both the
+    ``== Final Plan ==`` and the ``== Initial Plan ==`` trees, which
+    would double every count on a second look at the same frame; the
+    initial plan is the same text whether or not ``df`` ran."""
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    if text.startswith("AdaptiveSparkPlan"):
+        text = plan.initialPlan().toString()
+    return text
+
+
 def count_shuffle_exchanges(df: DataFrame) -> int:
-    """Runtime shuffle count of ``df``'s executed plan (pre-execution:
-    with AQE this is the statically planned shape, the comparable and
-    deterministic form for regression testing)."""
-    return count_shuffles_in_plan_string(
-        df._jdf.queryExecution().executedPlan().toString()
-    )
+    """Runtime shuffle count of ``df``'s statically planned shape —
+    the comparable and deterministic form for regression testing."""
+    return count_shuffles_in_plan_string(_static_plan_string(df))
 
 
 # A FileScan line carries everything scan hygiene needs on one line:
@@ -91,8 +101,7 @@ def scan_profiles(df: DataFrame, data_root: str) -> dict:
     their layouts are narrow by construction and their names embed
     fixture tags."""
     out: dict[str, dict] = {}
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
+    for line in _static_plan_string(df).splitlines():
         if "FileScan" not in line:
             continue
         path = _SCAN_PATH.search(line)

@@ -170,17 +170,6 @@ RETIRED = {
     "text_logprob": "corpus_keep_decision",
 }
 
-# Deliberate non-scale baselines kept registered for recall/correctness
-# grounding (VERDICT r5 item 8). EMPTY since r10: every former baseline
-# is retired to a registered deployable sibling (see RETIRED) — the
-# exact/inline forms now run as graded components inside
-# ann_recall_matrix / dedup_recall_eval instead of holding their own
-# registry slots, so the registry no longer carries any query marked
-# weak by the scale rubric. QUERIES.md still prints the deploy-the-twin
-# guidance from the RETIRED mapping.
-BASELINES: dict[str, str] = {}
-
-
 # Driver-budget rotation (the driver checks ~50 entries per round):
 # round 10 front-loads the entries whose most recent driver row is
 # round 8 (everything r9's PRIORITY did not cover, minus the five
@@ -249,100 +238,44 @@ PRIORITY = [
 
 
 # ----------------------------------------------------------- plan memo
-# Per-session LAZY-PLAN memo over whole registered queries (r15,
-# VERDICT r14 items 6/"what's wrong 6": the sub-second tier is
-# planning/py4j-bound — 36 s of the 84 s solo bench total is spent
-# CONSTRUCTING DataFrames, because classic PySpark analyzes eagerly
-# per transformation). This extends the r14 `catalog._RELATION_CACHE`
-# discipline (verdict-sanctioned: "the relation-memo pattern applies
-# more broadly") from table relations to full query plans:
-#
-# * The cached object is a LAZY DataFrame — a plan, never data. Every
-#   execution re-reads parquet and re-runs every shuffle
-#   (tests/test_plan_memo.py proves identical source-record counts on
-#   repeated executions of a memo hit).
-# * The key carries every catalog table's mtime, so a re-ingested
-#   sf_dir misses the memo and re-resolves (the same refit contract
-#   the relation memo pins); stale keys are evicted on insert.
-# * AUTO-EXCLUDED: any build that performed a per-run
-#   materialization (checkpointing.run_materialize/loop_checkpoint —
-#   the dedup verify tails, the connected-components / BPE loops, the
-#   rec-eval shared frames): those plans hang off localCheckpoint
-#   blocks (materialized per-run state) or collect-gated loop
-#   decisions, and reusing them WOULD be result caching. They rebuild
-#   from scratch every call, exactly as before (this also keeps
-#   bench.py's _FIT_MEMOS clearing contract for vocab_bpe_merges
-#   intact).
-# * EXPLICITLY EXCLUDED: the at-rest/ingest-backed forms, whose
-#   constructors are also responsible for the idempotent
-#   ingest-or-rebuild check against the warehouse.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
+# Whole registered queries are memoized as lazy plans in the ``plan``
+# kind of ``memo`` (keyed by application, sf_dir and name; versioned
+# by every catalog table). A build that performed a per-run
+# materialization (``checkpointing.run_materialize`` /
+# ``loop_checkpoint``) hangs off per-run blocks, so reusing it would
+# serve data: it is never stored and rebuilds on every call. The
+# at-rest/ingest-backed constructors below run their idempotent
+# warehouse check per call by design and are never memoized.
 _PLAN_MEMO_EXCLUDE = {
-    # managed-ingest / bucketed-at-rest constructors (warehouse check
-    # runs per call by design)
     "ann_ivf_materialized",
     "ann_bruteforce_int8_stored",
     "ann_ivf_pq_stored",
     "corpus_split_leakproof",
     "dedup_incremental_materialized",
-    # bench clears this fit memo per pass to measure the fit — a plan
-    # memo would defeat that contract (also auto-excluded: its plan
-    # carries the per-round checkpoint barriers)
+    # bench.py clears this fit memo per pass to time the fit; its plan
+    # also carries the per-round checkpoint barriers
     "vocab_bpe_merges",
 }
-
-
-def _sf_version(sf_dir: str) -> tuple:
-    """(table, mtime) for every catalog table under sf_dir — the memo
-    key component that makes a re-ingested corpus miss (one stat per
-    table, the relation-memo rule applied at query granularity)."""
-    import os
-
-    from ..catalog import TABLES
-
-    out = []
-    for t in TABLES:
-        try:
-            out.append((t, os.stat(f"{sf_dir}/{t}.parquet").st_mtime))
-        except OSError:
-            out.append((t, 0.0))
-    return tuple(out)
 
 
 def _plan_memoized(name: str, fn: QueryFn) -> QueryFn:
     import functools
 
+    from .. import memo
+    from ..catalog import TABLES
+    from ..checkpointing import materialize_count
+
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            name,
-            _sf_version(sf_dir),
-        )
-        hit = _PLAN_MEMO.get(key)
+        key = (spark.sparkContext.applicationId, sf_dir, name)
+        version = memo.table_version(sf_dir, *TABLES)
+        hit = memo.get("plan", key, version)
         if hit is not None:
             return hit
-        from ..checkpointing import materialize_count
-
         before = materialize_count()
         df = fn(spark, sf_dir)
-        # A build that materialized ANY per-run intermediate
-        # (run_materialize / loop_checkpoint — every localCheckpoint
-        # in the query modules routes through them; the convention is
-        # pinned by tests/test_plan_memo.py) hangs off per-run blocks:
-        # memoizing it would serve data, not a plan. Plan-text
-        # LogicalRDD sniffing is NOT equivalent — driver-local model
-        # literals (createDataFrame of fitted centroids/LUTs) are
-        # LogicalRDDs too, and they are deterministic per
-        # (app, sf_dir, mtime) via the sanctioned fit memos.
         if materialize_count() == before:
-            for stale in [
-                k for k in _PLAN_MEMO if k[:3] == key[:3] and k != key
-            ]:
-                del _PLAN_MEMO[stale]
-            _PLAN_MEMO[key] = df
+            memo.put("plan", key, version, df)
         return df
 
     return wrapped

@@ -27,6 +27,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 
 N_QUERIES = 5  # vec_id < 5 plays the query set
@@ -69,7 +70,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the query set against all vectors.
 
     BASELINE — ground truth for recall grading; at scale deploy
-    ``ann_lsh_bucketed`` / ``ann_ivf_materialized`` (registry.BASELINES).
+    ``ann_lsh_bucketed`` / ``ann_ivf_materialized``.
     """
     e = _embeddings(spark, sf_dir)
     q = e.where(F.col("vec_id") < N_QUERIES).select(
@@ -217,26 +218,29 @@ N_PROBE = 2
 # this rule; SCALE.md §10.2).
 SEMANTIC_CELL_TARGET = 64
 
-_CENT_CACHE: dict[str, list] = {}
+
+def _centroid_rows(raw: DataFrame, k: int) -> list:
+    """The k fixture rows from vec_id 100, normalized, sorted by id.
+    The vec_id range predicate pushes into the parquet scan, so the
+    fetch is a pruned k-row read, not a pass over the table."""
+    return sorted(
+        _with_norm(
+            raw.where((F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + k))
+            .select("vec_id", _vec("embedding").alias("v"))
+        ).collect(),
+        key=lambda r: r.vec_id,
+    )
 
 
 def _centroids(spark: SparkSession, sf_dir: str) -> list:
     """The 'fitted model' fetch, memoized per sf_dir (a model is fit
-    once, scored many times). The vec_id range predicate pushes into
-    the parquet scan, so the cold fetch is a pruned 8-row read, not a
-    pass over the table."""
-    if sf_dir not in _CENT_CACHE:
-        raw = load_table(spark, sf_dir, "embeddings")
-        _CENT_CACHE[sf_dir] = sorted(
-            _with_norm(
-                raw.where(
-                    (F.col("vec_id") >= 100)
-                    & (F.col("vec_id") < 100 + N_CENTROIDS)
-                ).select("vec_id", _vec("embedding").alias("v"))
-            ).collect(),
-            key=lambda r: r.vec_id,
-        )
-    return _CENT_CACHE[sf_dir]
+    once, scored many times)."""
+    return memo.cached(
+        "ann.centroids", sf_dir, memo.table_version(sf_dir, "embeddings"),
+        lambda: _centroid_rows(
+            load_table(spark, sf_dir, "embeddings"), N_CENTROIDS
+        ),
+    )
 
 
 def _semantic_centroids(spark: SparkSession, sf_dir: str) -> list:
@@ -247,21 +251,18 @@ def _semantic_centroids(spark: SparkSession, sf_dir: str) -> list:
     oracle computes the identical k from ``count(*)`` in SQL, so both
     engines always agree on the model. Memoized like ``_centroids``
     (fit once, score many); the count is a metadata-only parquet job."""
-    key = f"sem:{sf_dir}"
-    if key not in _CENT_CACHE:
+
+    def fit() -> list:
         raw = load_table(spark, sf_dir, "embeddings")
         n = raw.count()
-        k = max(N_CENTROIDS, -(-n // SEMANTIC_CELL_TARGET))
-        _CENT_CACHE[key] = sorted(
-            _with_norm(
-                raw.where(
-                    (F.col("vec_id") >= 100)
-                    & (F.col("vec_id") < 100 + k)
-                ).select("vec_id", _vec("embedding").alias("v"))
-            ).collect(),
-            key=lambda r: r.vec_id,
+        return _centroid_rows(
+            raw, max(N_CENTROIDS, -(-n // SEMANTIC_CELL_TARGET))
         )
-    return _CENT_CACHE[key]
+
+    return memo.cached(
+        "ann.semantic_centroids", sf_dir,
+        memo.table_version(sf_dir, "embeddings"), fit,
+    )
 
 
 def _cells_expr(cent_rows) -> "F.Column":
@@ -357,7 +358,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     BASELINE — the inline form re-assigns the whole corpus per query
     (3.7× at ×10 data); deploy ``ann_ivf_materialized``, which serves
-    from the at-rest cell-partitioned lists (registry.BASELINES).
+    from the at-rest cell-partitioned lists.
 
     The centroid set is the fitted model: collected once (8 rows) and
     re-emitted as expression literals — exactly how a k-means model is
@@ -439,7 +440,7 @@ def ann_bruteforce_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     BASELINE — re-quantizes the corpus per query (6.8× at ×10 data);
     deploy ``ann_bruteforce_int8_stored``, which reads the at-rest
-    int8 table (registry.BASELINES). Similarity is the int8 dot product rescaled by the two
+    int8 table. Similarity is the int8 dot product rescaled by the two
     scales and normalized by the int8 norms (so quantization error
     shifts scores a little — recall vs the float baseline is asserted
     in tests — but ranking is fully deterministic: the integer dot is

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from .ann import (
     DIM,
     N_CENTROIDS,
@@ -85,12 +86,6 @@ def _dists_expr(sv_sql: str, cb_m_sql: str) -> str:
     )
 
 
-# The fit is deterministic, so one codebook serves every query in a
-# session; keyed by applicationId so a restarted session refits
-# (the house cache discipline, see catalog.py's table tags).
-_CB_CACHE: dict[tuple[str, str, int], list[list[list[float]]]] = {}
-
-
 def train_pq(spark: SparkSession, sf_dir: str,
              iters: int = PQ_ITERS) -> list[list[list[float]]]:
     """Lloyd-refined per-subspace codebooks (deterministic, 6dp).
@@ -98,7 +93,8 @@ def train_pq(spark: SparkSession, sf_dir: str,
     ``ann_pq_adc`` share one fit instead of each re-running the
     distributed Lloyd passes."""
     key = (spark.sparkContext.applicationId, sf_dir, iters)
-    cached = _CB_CACHE.get(key)
+    version = memo.table_version(sf_dir, "embeddings")
+    cached = memo.get("pq.codebook", key, version)
     if cached is not None:
         return cached
     e = _embeddings(spark, sf_dir).cache()
@@ -162,8 +158,7 @@ def train_pq(spark: SparkSession, sf_dir: str,
                 ]
                 for m in range(PQ_M)
             ]
-        _CB_CACHE[key] = cb
-        return cb
+        return memo.put("pq.codebook", key, version, cb)
     finally:
         e.unpersist()
 
@@ -228,8 +223,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     code table — M lookups + a fixed-order sum per stored vector.
 
     BASELINE — prices the FULL corpus per query (no cell pruning) and
-    re-encodes it inline; deploy ``ann_ivf_pq_stored``
-    (registry.BASELINES)."""
+    re-encodes it inline; deploy ``ann_ivf_pq_stored``."""
     cb = train_pq(spark, sf_dir)
     e = _embeddings(spark, sf_dir)
     # Engine-computed LUT (rounded 6dp) so literals match the oracle's
@@ -287,7 +281,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     BASELINE — the inline form re-encodes the corpus per query; deploy
     ``ann_ivf_pq_stored``, which serves the same relation from the
-    at-rest cell-partitioned code table (registry.BASELINES)."""
+    at-rest cell-partitioned code table."""
     cb = train_pq(spark, sf_dir)
     cent_rows = _centroids(spark, sf_dir)
     e = _embeddings(spark, sf_dir)
@@ -301,20 +295,15 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _probe_and_adc_rank(spark, sf_dir, coded, cb, cent_rows)
 
 
-# LUT fetch memo — the fitted-model-derivative discipline of _CB_CACHE:
-# the per-query lookup tables are a deterministic function of the
-# memoized codebook and the 5 fixture query vectors, so one engine
-# fetch serves every ADC build in a session (ann_pq_adc, ann_ivf_pq,
-# ann_ivf_pq_stored, and the recall matrix's composition of them).
-_LUT_CACHE: dict[tuple[str, str, int], list] = {}
-
-
 def _lut_rows(spark: SparkSession, sf_dir: str, cb) -> list:
     """Engine-computed, 6dp-rounded per-(query, subspace) LUT rows,
     sorted by vec_id; memoized per (application, sf_dir, PQ_ITERS).
+    The LUTs are a function of the memoized codebook and the fixture
+    query vectors, so one fetch serves every ADC build in a session.
     The codebook literal is parsed once (the _codes_frame r14 shape)."""
     key = (spark.sparkContext.applicationId, sf_dir, PQ_ITERS)
-    cached = _LUT_CACHE.get(key)
+    version = memo.table_version(sf_dir, "embeddings")
+    cached = memo.get("pq.lut", key, version)
     if cached is not None:
         return cached
     e = _embeddings(spark, sf_dir)
@@ -340,8 +329,7 @@ def _lut_rows(spark: SparkSession, sf_dir: str, cb) -> list:
         ).collect(),
         key=lambda r: r.vec_id,
     )
-    _LUT_CACHE[key] = rows
-    return rows
+    return memo.put("pq.lut", key, version, rows)
 
 
 def _adc_lut_expr(spark: SparkSession, sf_dir: str, cb) -> str:

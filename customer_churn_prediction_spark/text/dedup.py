@@ -456,8 +456,7 @@ def ngram_jaccard_pairs(
     LSH tier replaces at scale.
 
     BASELINE — deploy ``dedup_lsh_verified`` at scale: it computes the
-    same exact Jaccard but only for band-collision candidates
-    (registry.BASELINES).
+    same exact Jaccard but only for band-collision candidates.
 
     Each doc's distinct-gram array is computed once per join side and
     exploded CARRYING ITS OWN SIZE, so the intersection count and both

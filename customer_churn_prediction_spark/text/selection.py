@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 
 DSIR_B = 2048          # hashed feature buckets (power of two, tiny)
@@ -134,23 +135,6 @@ def bucket_model(grams: DataFrame) -> DataFrame:
     )
 
 
-# Band-stats fit memo, keyed by sf_dir (the ``similarity/ann.py``
-# ``_CENT_CACHE`` fit-once precedent), guarded by a corpus
-# fingerprint: unlike stale centroids (still self-consistent
-# approximate answers), stale band stats would make an EXACT-
-# semantics output wrong. r12 (ADVICE r11): the fingerprint is a
-# CONTENT hash — (count, bit_xor of per-row xxhash64) over the frame
-# the fit reads — not the doc count alone, so a corpus re-ingested at
-# the same path with an equal row count but different content misses
-# the memo and refits. One linear scan, order-independent (bit_xor
-# commutes), no overflow (XOR, not SUM), never compared against the
-# oracle (driver-side refit decision only). The cached value is
-# (fingerprint, stats).
-_BAND_CACHE: dict[
-    str, tuple[tuple[int, int], tuple[int, int, float, float]]
-] = {}
-
-
 def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
     """(row count, bit_xor of xxhash64(cols)) — the cheap content
     identity used to validate fit-once memos. XOR-fold of per-row
@@ -171,13 +155,15 @@ def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
 def _band_stats_for(
     key: str, scored_src: DataFrame, fingerprint: tuple[int, int]
 ) -> tuple[int, int, float, float]:
-    """Fingerprinted memo fetch: refit when the corpus CONTENT at
-    ``key`` changed since the cached fit (re-ingested corpus at the
-    same path — equal count no longer enough to hit the memo)."""
-    hit = _BAND_CACHE.get(key)
-    if hit is None or hit[0] != fingerprint:
-        _BAND_CACHE[key] = (fingerprint, _band_stats(scored_src))
-    return _BAND_CACHE[key][1]
+    """Band-stats fit memo, versioned by a content fingerprint rather
+    than mtimes: stale band stats would make an EXACT-semantics output
+    wrong, so a corpus re-ingested at the same path with an equal row
+    count but different content must refit. The fingerprint is one
+    order-independent scan and is never compared against the oracle
+    (driver-side refit decision only)."""
+    return memo.cached(
+        "dsir.bands", key, fingerprint, lambda: _band_stats(scored_src)
+    )
 
 
 def corpus_select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 
 N_MERGES = 6
@@ -100,19 +101,16 @@ def _best_pair(words: DataFrame):
     return top[0] if top else None
 
 
-# Fit-once memo per (application, sf_dir, rounds) — the codebook
-# discipline from similarity/pq.py: the merge table is a model
-# artifact; encode and repeated reports reuse one fit.
-_MERGE_CACHE: dict[tuple[str, str, int], list[tuple]] = {}
-
-
 def bpe_merges(spark: SparkSession, sf_dir: str,
                n_merges: int = N_MERGES) -> DataFrame:
-    """The learned merge table: (rnd, left, right, merged, pair_count)."""
+    """The learned merge table: (rnd, left, right, merged, pair_count),
+    fit once per (application, sf_dir, rounds): encode and repeated
+    reports reuse one fit."""
     schema = ("rnd int, left string, right string, merged string,"
               " pair_count long")
     key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    cached = _MERGE_CACHE.get(key)
+    version = memo.table_version(sf_dir, "documents")
+    cached = memo.get("bpe.merges", key, version)
     if cached is not None:
         return spark.createDataFrame(cached, schema)
     # The fit table is VOCABULARY-sized (a few million rows at any
@@ -167,7 +165,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str,
                 "freq",
             )
         )
-    _MERGE_CACHE[key] = out
+    memo.put("bpe.merges", key, version, out)
     return spark.createDataFrame(out, schema)
 
 

@@ -31,6 +31,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from customer_churn_prediction_spark import memo  # noqa: E402
 from customer_churn_prediction_spark.session import get_spark  # noqa: E402
 from customer_churn_prediction_spark.sources.writers import (  # noqa: E402
     sf_tag,
@@ -72,7 +73,7 @@ def main() -> None:
     for tag, sf_dir in POINTS:
         # warm codegen on the smallest fixture semantics: one full
         # inline pass at this sf (also fits the inline memo once)
-        selection._BAND_CACHE.clear()
+        memo.clear("dsir.bands")
         force(selection.corpus_select_dsir(spark, sf_dir))
 
         def ingest_cold():
@@ -82,7 +83,7 @@ def main() -> None:
         t_ingest = _timed(ingest_cold)
 
         def serve_cold_fit():
-            selection._BAND_CACHE.clear()
+            memo.clear("dsir.bands")
             force(selection.corpus_select_dsir_stored(spark, sf_dir))
 
         t_serve = _timed(serve_cold_fit)
@@ -91,7 +92,7 @@ def main() -> None:
         )
 
         def inline_cold_fit():
-            selection._BAND_CACHE.clear()
+            memo.clear("dsir.bands")
             force(selection.corpus_select_dsir(spark, sf_dir))
 
         t_inline = _timed(inline_cold_fit)

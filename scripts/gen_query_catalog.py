@@ -33,7 +33,6 @@ def main() -> None:
     from customer_churn_prediction_spark.plans import registry
 
     oracles = registry.get_oracles()
-    baselines = getattr(registry, "BASELINES", {})
     lines = [
         "# Query catalog",
         "",
@@ -41,23 +40,17 @@ def main() -> None:
         "hand. Every name is callable as",
         "`plans.registry.QUERIES[name](spark, sf_dir)`; oracle-paired",
         "queries hash-check against their DuckDB SQL twin at driver",
-        "rigor. BASELINE entries are deliberate non-scale reference",
-        "implementations; deploy their named twin instead.",
+        "rigor.",
         "",
         f"## Registered ({len(registry.QUERIES)})",
         "",
-        "| query | what it computes | oracle | scale note |",
-        "|---|---|---|---|",
+        "| query | what it computes | oracle |",
+        "|---|---|---|",
     ]
     for name, fn in registry.QUERIES.items():
         oracle = "sql" if name in oracles else "rows-only"
-        note = (
-            f"BASELINE — deploy `{baselines[name]}`"
-            if name in baselines
-            else ""
-        )
         lines.append(
-            f"| `{name}` | {_first_line(fn)} | {oracle} | {note} |"
+            f"| `{name}` | {_first_line(fn)} | {oracle} |"
         )
     staged = registry.get_staged_queries()
     lines += [

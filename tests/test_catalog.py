@@ -64,7 +64,7 @@ def test_relation_cache_evicts_stale_mtime_entries(spark, sf_dir, tmp_path):
     import os
     import shutil
 
-    from customer_churn_prediction_spark import catalog
+    from customer_churn_prediction_spark import memo
 
     sf_copy = str(tmp_path / "sf_copy")
     os.makedirs(sf_copy)
@@ -72,22 +72,23 @@ def test_relation_cache_evicts_stale_mtime_entries(spark, sf_dir, tmp_path):
         shutil.copy(f"{sf_dir}/{t}.parquet", f"{sf_copy}/{t}.parquet")
 
     def entries():
-        return [
-            k
-            for k in catalog._RELATION_CACHE
+        """{key: version} of this table's relation memo entries."""
+        return {
+            k: version
+            for k, (version, _) in memo.entries("relation").items()
             if k[1] == sf_copy and k[2] == "documents"
-        ]
+        }
 
     load_table(spark, sf_copy, "documents")
     assert len(entries()) == 1
-    first_key = entries()[0]
+    first = entries()
 
     # Re-ingest: rewrite the file so its mtime moves.
     shutil.copy(f"{sf_dir}/documents.parquet", f"{sf_copy}/documents.parquet")
     os.utime(f"{sf_copy}/documents.parquet", (1, 1))
     load_table(spark, sf_copy, "documents")
     assert len(entries()) == 1, "stale mtime entry must be evicted"
-    assert entries()[0] != first_key
+    assert entries() != first
 
     # A different spread flag is a DIFFERENT relation, not a stale one.
     load_table(spark, sf_copy, "documents", spread=True)

@@ -1,17 +1,23 @@
-"""The registered-query plan memo (r15): lazy plans only, never data.
+"""The registered-query plan memo: lazy plans only, never data.
 
-Pins the three contracts that keep the memo an optimization rather
-than result caching:
+Pins the contracts that keep the memo an optimization rather than
+result caching:
 
 1. A memo hit is a LAZY plan — every execution re-reads the parquet
    sources in full (identical source-record counts across repeated
    executions of the same memoized frame).
-2. Re-ingesting a table at the same path misses the memo (mtime key),
-   the same refit contract the r14 relation memo pins.
-3. Checkpoint-barrier queries (LogicalRDD in the analyzed plan — the
-   dedup verify tails, iterative loops, rec-eval shared frames) are
-   NEVER memoized: their plans hang off materialized per-run blocks,
-   so reuse would serve cached data.
+2. Re-ingesting a table at the same path misses the memo: its version
+   is every catalog table's mtime (``memo.table_version``).
+3. A build that performed a per-run materialization is NEVER
+   memoized: the wrapper compares ``checkpointing.materialize_count()``
+   before and after the build, so the dedup verify tails, iterative
+   loops and rec-eval shared frames — whose plans hang off per-run
+   blocks — rebuild on every call. Model literals from the fit memos
+   do not count as materializations and stay memoized. Query modules
+   must route every checkpoint through ``checkpointing`` so the
+   counter sees it.
+4. The plan guards give the same answer on a memo hit whether or not
+   the memoized frame has executed.
 """
 
 from __future__ import annotations
@@ -20,7 +26,11 @@ import os
 import shutil
 
 from customer_churn_prediction_spark.plans import registry
-from customer_churn_prediction_spark.plans.audit import run_with_metrics
+from customer_churn_prediction_spark.plans.audit import (
+    count_shuffle_exchanges,
+    run_with_metrics,
+    scan_profiles,
+)
 
 from .conftest import SF_SMOKE
 
@@ -54,13 +64,28 @@ def test_memo_misses_on_reingest(spark, tmp_path):
     assert df2 is not df1, "re-ingested table must miss the memo"
 
 
+def test_plan_guards_ignore_prior_execution(spark):
+    """Executing a memoized adaptive plan makes its string print the
+    final AND the initial plan; the guards must read the planned shape
+    only, so a memo hit audits the same before and after a run."""
+    df = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
+    shuffles = count_shuffle_exchanges(df)
+    scans = scan_profiles(df, SF_SMOKE)
+    assert shuffles > 0 and scans
+    df.toPandas()
+    again = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
+    assert again is df, "second build must be a memo hit"
+    assert count_shuffle_exchanges(again) == shuffles
+    assert scan_profiles(again, SF_SMOKE) == scans
+
+
 def test_checkpoint_barrier_queries_are_not_memoized(spark):
     queries = registry.get_queries()
     a = queries["dedup_lsh_components"](spark, SF_SMOKE)
     b = queries["dedup_lsh_components"](spark, SF_SMOKE)
     assert b is not a, (
-        "a LogicalRDD-bearing plan hangs off per-run checkpoint blocks "
-        "and must be rebuilt from parquet on every call"
+        "a build that materialized per-run blocks must be rebuilt "
+        "from parquet on every call"
     )
 
 

@@ -106,18 +106,6 @@ def test_driver_entry_matches_registry():
     assert len(o) >= 55, "oracle coverage must not regress"
 
 
-def test_baseline_queries_are_marked_and_point_at_registered_twins():
-    """registry.BASELINES is deployment guidance: every key must be a
-    registered query whose docstring carries the BASELINE marker, and
-    every value (the deployable twin) must be registered too."""
-    queries = registry.get_queries()
-    for base, twin in registry.BASELINES.items():
-        assert base in queries, base
-        assert twin in queries, (base, twin)
-        doc = queries[base].__doc__ or ""
-        assert "BASELINE" in doc, f"{base} lacks the BASELINE marker"
-
-
 def test_round1_unverified_queries_lead_iteration_order():
     names = list(registry.get_queries())
     assert names[: len(registry.PRIORITY)] == registry.PRIORITY

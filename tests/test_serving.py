@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.ml import Pipeline
 
+from customer_churn_prediction_spark import memo
 from customer_churn_prediction_spark.ml import dataset, models, serving
 
 # noqa: dataset is also used by the manifest-derivation test
@@ -125,7 +126,7 @@ def test_coarse_mtime_cross_process_reexport_still_detected(
     rec = _feature_dict(data.limit(1).collect()[0], manifest)
     first = serving.score_records(spark, path, [rec])[0]  # caches
     key = os.path.abspath(path)
-    stale_entry = serving._MODEL_CACHE[key]
+    stale_entry = memo.entries("serving.model")[key]  # (version, value)
     mpath = os.path.join(path, "manifest.json")
     st = os.stat(mpath)
 
@@ -149,7 +150,7 @@ def test_coarse_mtime_cross_process_reexport_still_detected(
     )
     assert os.stat(mpath).st_mtime_ns == st.st_mtime_ns
     # this scorer process never saw the export: restore its stale entry
-    serving._MODEL_CACHE[key] = stale_entry
+    memo.put("serving.model", key, *stale_entry)
     second = serving.score_records(spark, path, [rec])[0]
     assert second["p_churn"] != first["p_churn"], (
         "stale model served: content hash missing from fingerprint"

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.ml import Pipeline
 
+from customer_churn_prediction_spark import memo
 from customer_churn_prediction_spark.ml import dataset, models, serving
 from customer_churn_prediction_spark.ml.pipeline import build_feature_pipeline
 from customer_churn_prediction_spark.ml.serving_http import (
@@ -125,7 +126,7 @@ def test_reexport_is_picked_up_without_restart(served, tmp_path):
 
     rec = {"id": 7, **_feature_dict(data.limit(1).collect()[0], manifest)}
     first = client.post("/predict", json=[rec]).get_json()
-    stale_entry = dict(serving._MODEL_CACHE)  # the old model, memoized
+    stale = memo.entries("serving.model")  # the old model, memoized
 
     inv = data.withColumn("label", 1 - F.col("label"))
     stages = fitted.stages[:-1]
@@ -138,7 +139,8 @@ def test_reexport_is_picked_up_without_restart(served, tmp_path):
     # simulate "different process": the exporter's in-process cache pop
     # never reached this server — put the stale memoized entry back and
     # rely ONLY on the stat-fingerprint revalidation to drop it
-    serving._MODEL_CACHE.update(stale_entry)
+    for key, (version, value) in stale.items():
+        memo.put("serving.model", key, version, value)
 
     second = client.post("/predict", json=[rec]).get_json()
     assert second["export_id"] == new_manifest["export_id"]
