@@ -116,8 +116,7 @@ BENCH_QUERIES = [
     "feature_iv",
     "event_sessions",
     # r7 addition: BPE tokenizer training graduated from the staged
-    # tier (feature_assembly_onepass retired to its verified-equal
-    # chain twin, freeing the slot).
+    # tier.
     "vocab_bpe_merges",
     # r8 addition: the encode step — applies the memoized merge table
     # as a pure map over the corpus (the fit memo FEEDS per-call work,

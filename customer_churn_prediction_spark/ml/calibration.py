@@ -25,9 +25,10 @@ aggregate (≤ 3 features × ≤ 10 bands rows).
 
 Determinism: the score is rounded to 6 dp upstream
 (``monitoring._scored_customers``); bands are integer expressions on
-literal edges; remaining floats are ratios of integers or of rounded
-scores, rounded to 6 dp — the same oracle-hash discipline the
-registered monitoring tier ships.
+literal edges; the calibration sums are exact integers (scores in
+micro-units), so every remaining float is one division of operands
+identical in both engines, rounded to 6 dp — the same oracle-hash
+discipline the registered monitoring tier ships.
 """
 
 from __future__ import annotations
@@ -40,33 +41,46 @@ from .monitoring import _SCORED_CTE, _scored_customers
 # ------------------------------------------------------------ calibration
 
 _CAL_BANDS = 10
+_MICRO = 1_000_000  # scores are rounded to 6 dp upstream
 
 
 def calibration_frame(scored: DataFrame) -> DataFrame:
-    """Reliability table over any (score, label) frame."""
+    """Reliability table over any (score, label) frame.
+
+    Scores carry 6 dp, so every per-band sum is taken exactly in
+    integer micro-units (squared errors in DECIMAL): a float sum's
+    result depends on the order the engine adds in, and a band mean of
+    6-dp scores often lands exactly on a 6-dp rounding half-boundary,
+    where one ulp decides the rounded digit. Each reported ratio is
+    then one IEEE division of exact operands."""
     band = F.least(
         F.floor(F.col("score") * _CAL_BANDS), F.lit(_CAL_BANDS - 1)
     ).cast("int")
+    score_micro = F.round(F.col("score") * _MICRO).cast("long")
+    err_micro = (score_micro - F.col("label") * _MICRO).cast("decimal(20,0)")
     per_band = (
         scored.select(band.alias("band"), "label", "score")
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
             F.sum("label").alias("n_churned"),
-            F.sum("score").alias("_sum_score"),
-            F.sum(
-                (F.col("score") - F.col("label"))
-                * (F.col("score") - F.col("label"))
-            ).alias("_sum_sq_err"),
+            F.sum(score_micro).alias("_sum_score"),
+            F.sum(err_micro * err_micro).alias("_sum_sq_err"),
         )
     )
     w_all = Window.partitionBy()
-    avg_score = F.col("_sum_score") / F.col("n_customers")
+    n_micro = F.col("n_customers").cast("double") * _MICRO
+    gap_micro = F.col("_sum_score") - F.col("n_churned") * _MICRO
+    avg_score = F.col("_sum_score").cast("double") / n_micro
     churn_rate = F.col("n_churned") / F.col("n_customers")
-    gap = avg_score - churn_rate
-    n_total = F.sum("n_customers").over(w_all)
-    ece = F.sum(F.abs(gap) * F.col("n_customers")).over(w_all) / n_total
-    brier = F.sum("_sum_sq_err").over(w_all) / n_total
+    gap = gap_micro.cast("double") / n_micro
+    n_total = F.sum("n_customers").over(w_all).cast("double")
+    ece = F.sum(F.abs(gap_micro)).over(w_all).cast("double") / (
+        n_total * _MICRO
+    )
+    brier = F.sum("_sum_sq_err").over(w_all).cast("double") / (
+        n_total * (_MICRO * _MICRO)
+    )
     return per_band.select(
         "band",
         "n_customers",
@@ -166,25 +180,38 @@ def feature_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CALIBRATION_ORACLE = f"""
 WITH {_SCORED_CTE},
-per_band AS (
+micro AS (
   SELECT least(CAST(floor(score * {_CAL_BANDS}) AS INT), {_CAL_BANDS - 1}) AS band,
+         label,
+         CAST(round(score * {_MICRO}) AS BIGINT) AS score_micro,
+         CAST(round(score * {_MICRO}) AS BIGINT) - label * {_MICRO} AS err_micro
+  FROM s2
+),
+per_band AS (
+  SELECT band,
          count(*) AS n_customers,
          CAST(sum(label) AS BIGINT) AS n_churned,
-         sum(score) AS _sum_score,
-         sum((score - label) * (score - label)) AS _sum_sq_err
-  FROM s2 GROUP BY 1
+         CAST(sum(score_micro) AS BIGINT) AS _sum_score,
+         sum(CAST(err_micro AS HUGEINT) * err_micro) AS _sum_sq_err
+  FROM micro GROUP BY 1
+),
+ratios AS (
+  SELECT *,
+         _sum_score - n_churned * {_MICRO} AS gap_micro,
+         CAST(n_customers AS DOUBLE) * {_MICRO} AS n_micro,
+         CAST(sum(n_customers) OVER () AS DOUBLE) AS n_total
+  FROM per_band
 )
 SELECT
   band, n_customers, n_churned,
-  round(_sum_score / n_customers, 6) AS avg_score,
+  round(CAST(_sum_score AS DOUBLE) / n_micro, 6) AS avg_score,
   round(CAST(n_churned AS DOUBLE) / n_customers, 6) AS churn_rate,
-  round(_sum_score / n_customers
-        - CAST(n_churned AS DOUBLE) / n_customers, 6) AS calib_gap,
-  round(sum(abs(_sum_score / n_customers
-                - CAST(n_churned AS DOUBLE) / n_customers) * n_customers)
-          OVER () / sum(n_customers) OVER (), 6) AS ece,
-  round(sum(_sum_sq_err) OVER () / sum(n_customers) OVER (), 6) AS brier
-FROM per_band
+  round(CAST(gap_micro AS DOUBLE) / n_micro, 6) AS calib_gap,
+  round(CAST(sum(abs(gap_micro)) OVER () AS DOUBLE)
+          / (n_total * {_MICRO}), 6) AS ece,
+  round(CAST(sum(_sum_sq_err) OVER () AS DOUBLE)
+          / (n_total * {_MICRO * _MICRO}), 6) AS brier
+FROM ratios
 ORDER BY band
 """
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.assembly import feature_assembly_onepass
+from ..operators.assembly import feature_assembly
 from ..operators.labeling import label_churn
 
 SEED = 42
@@ -52,7 +52,7 @@ LABEL = "label"
 
 def churn_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature table joined with the churn label (J2 + J3)."""
-    feats = feature_assembly_onepass(spark, sf_dir)
+    feats = feature_assembly(spark, sf_dir)
     labels = label_churn(spark, sf_dir)
     return feats.join(labels, "c_custkey")
 

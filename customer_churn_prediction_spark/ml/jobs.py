@@ -4,14 +4,15 @@ registry queries (rows-only: ML fits are not SQL-expressible; the
 driver records the weaker check per the contract).
 
 Each job: training set (features ⋈ label) → seeded 80/20 split →
-feature pipeline + estimator in one ``Pipeline`` → fit → score test →
-one metrics row (model, n_train, n_test, auc, accuracy, precision,
-recall, f1).
+feature pipeline fit on the train side → estimator fit on the
+vectorized train split → score test → one metrics row (model, n_train,
+n_test, auc, accuracy, precision, recall, f1). Everything before the
+estimator is memoized per dataset, so every model family fits on the
+same vectorized split and features ⋈ label is built once.
 """
 
 from __future__ import annotations
 
-from pyspark.ml import Pipeline
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +27,7 @@ ROWS_PER_FIT_PARTITION = 20_000
 # The tables ``dataset.churn_training_set`` reads: the version of the
 # two shared memos below, so a re-ingest of any of them refits.
 _TRAINING_TABLES = ("customer", "nation", "orders", "lineitem", "part")
-memo.on_release("ml.training", lambda v: v[2].unpersist())
+memo.on_release("ml.training", lambda v: v[1].unpersist())
 memo.on_release(
     "ml.vectorized", lambda v: (v[0].unpersist(), v[1].unpersist())
 )
@@ -46,34 +47,30 @@ def _sized(data: DataFrame, n_rows: int) -> DataFrame:
     return data.coalesce(parts)
 
 
-def _shared_training_set(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int]:
-    """(sized training frame, row count), cached once and shared by the
-    four registry model jobs (share_cache=True) so features ⋈ label is
-    computed once, not four times."""
+def _shared_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sized training frame, cached once and shared by every model
+    job and the feature-vector query, so features ⋈ label is computed
+    once per dataset."""
 
     def fit() -> tuple:
         data = dataset.churn_training_set(spark, sf_dir).cache()
-        n_rows = data.count()
-        return _sized(data, n_rows), n_rows, data
+        return _sized(data, data.count()), data
 
-    sized, n_rows, _ = memo.cached(
+    return memo.cached(
         "ml.training", _cache_key(spark, sf_dir),
         memo.table_version(sf_dir, *_TRAINING_TABLES), fit,
-    )
-    return sized, n_rows
+    )[0]
 
 
 def _shared_vectorized_split(spark: SparkSession, sf_dir: str) -> tuple:
-    """(fitted-feature train, test, n_train, n_test): the four registry
-    model jobs share one feature-pipeline fit and one pair of cached
-    vectorized splits — fit features once, sweep estimators. Results
-    are bit-identical to fitting the composed Pipeline per job (the
-    feature stages fit on the same train split either way)."""
+    """(fitted-feature train, test, n_train, n_test): every model job
+    shares one feature-pipeline fit and one pair of cached vectorized
+    splits — fit features once, sweep estimators. The feature stages
+    fit on the train split alone, exactly as they would as the leading
+    stages of one composed ``Pipeline`` per model."""
 
     def fit() -> tuple:
-        sized, _ = _shared_training_set(spark, sf_dir)
+        sized = _shared_training_set(spark, sf_dir)
         train, test = dataset.train_test_split(sized)
         feat = build_feature_pipeline().fit(train)
         train_t = feat.transform(train).select("features", "label").cache()
@@ -91,37 +88,15 @@ def train_and_evaluate(
     sf_dir: str,
     model_key: str,
     profile: str = "reference",
-    share_cache: bool = False,
 ) -> DataFrame:
-    if share_cache:
-        train, test, n_train, n_test = _shared_vectorized_split(spark, sf_dir)
-        estimator = models.make_estimator(model_key, profile)
-        model = estimator.fit(train)
-        scored = model.transform(test).cache()
-        try:
-            m = evaluation.confusion_metrics(scored)
-            roc = evaluation.auc(scored)
-        finally:
-            scored.unpersist()
-    else:
-        data = dataset.churn_training_set(spark, sf_dir).cache()
-        try:
-            sized = _sized(data, data.count())
-            train, test = dataset.train_test_split(sized)
-            estimator = models.make_estimator(model_key, profile)
-            pipe = Pipeline(
-                stages=[*build_feature_pipeline().getStages(), estimator]
-            )
-            fitted = pipe.fit(train)
-            scored = fitted.transform(test).cache()
-            try:
-                m = evaluation.confusion_metrics(scored)
-                roc = evaluation.auc(scored)
-                n_train, n_test = train.count(), test.count()
-            finally:
-                scored.unpersist()
-        finally:
-            data.unpersist()
+    train, test, n_train, n_test = _shared_vectorized_split(spark, sf_dir)
+    model = models.make_estimator(model_key, profile).fit(train)
+    scored = model.transform(test).cache()
+    try:
+        m = evaluation.confusion_metrics(scored)
+        roc = evaluation.auc(scored)
+    finally:
+        scored.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -149,7 +124,7 @@ def features_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks labels by frequency desc, ties alphabetically — reproduced
     in SQL with row_number()), so every vector slot is a plain SQL
     expression over the training table."""
-    data, _ = _shared_training_set(spark, sf_dir)
+    data = _shared_training_set(spark, sf_dir)
     fitted = build_feature_pipeline().fit(data)
     out = fitted.transform(data)
     return out.select(
@@ -178,9 +153,7 @@ def banded_fit(spark: SparkSession, sf_dir: str, model_key: str) -> DataFrame:
     reference-profile suite (tests/test_ml_reference_profile.py)."""
     import math
 
-    full = train_and_evaluate(
-        spark, sf_dir, model_key, "small", share_cache=True
-    ).collect()[0]
+    full = train_and_evaluate(spark, sf_dir, model_key, "small").collect()[0]
     _, test, _, _ = _shared_vectorized_split(spark, sf_dir)
     counts = test.agg(
         F.sum(F.col("label").cast("long")).alias("pos"),

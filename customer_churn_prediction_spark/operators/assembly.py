@@ -9,20 +9,14 @@ dimensions, and per-category membership flags (J4), with the
 reference's null policy (strings → "unknow", numerics → 0,
 ``RF/randomforest_churn.scala:180,200``).
 
-Two verified-equal physical forms:
-
-* ``feature_assembly`` — the reference-faithful **join chain**
-  (``RF/randomforest_churn.scala:169-198``): one small aggregate frame
-  per feature family, all left-joined on the customer key. Because
-  every frame shares the same join key, Catalyst reuses one hash
-  partitioning across the chain, but it is still ~12 shuffled joins.
-
-* ``feature_assembly_onepass`` — the **scale form**: conditional
-  aggregation collapses the per-family frames into exactly two hash
-  aggregates (one over orders, one over the orders⋈lineitem⋈part
-  detail) plus broadcast dimension joins. At 100 TB this turns ~12
-  wide shuffles into 2, with map-side partial aggregation shrinking
-  each shuffle to one row per customer per side.
+The reference builds one small aggregate frame per feature family and
+left-joins them all on the customer key (``:169-198``, J2). Here
+conditional aggregation collapses those families into exactly two hash
+aggregates — one over the feature-window orders (``rfm``'s six
+aggregates plus the recent, weekend and channel columns), one over the
+orders⋈lineitem⋈part detail — plus broadcast dimension joins. Each
+source table is scanned once, and map-side partial aggregation shrinks
+each of the two wide shuffles to one row per customer per side.
 
 Determinism contract with the DuckDB oracle: sums of money are rounded
 to their decimal grid (2dp for prices, 4dp for price*discount);
@@ -33,13 +27,12 @@ of a ratio can straddle a tie differently per engine.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START, RECENT_START
+from .rfm import feature_orders, rfm_aggs
 
 # p_type vocabulary of the star schema plays the reference's 13
 # product-category groups (RF/randomforest_churn.scala:140-152).
@@ -72,17 +65,11 @@ FINAL_COLS = [
 ] + [f"{t.lower()}_group" for t in FLAG_TYPES]
 
 
-def _feat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
-
-
-def _detail_from(
+def _detail(
     orders: DataFrame, lineitem: DataFrame, part: DataFrame
 ) -> DataFrame:
-    """orders ⋈ lineitem ⋈ part within the feature window.
+    """orders ⋈ lineitem ⋈ part over the caller's (feature-window)
+    orders.
 
     The part side is an explicit broadcast (J1): parts are a dimension
     table orders of magnitude smaller than lineitem at any scale.
@@ -96,14 +83,6 @@ def _detail_from(
     return (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-    )
-
-
-def _detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _detail_from(
-        _feat_orders(spark, sf_dir),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
     )
 
 
@@ -144,12 +123,7 @@ def _orders_agg(o: DataFrame) -> DataFrame:
     (RF/randomforest_churn.scala:155-167)."""
     dow = F.dayofweek("o_orderdate")
     return o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        F.datediff(F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate"))).alias("recency"),
-        F.datediff(F.lit(ASOF).cast("date"), F.min(F.to_date("o_orderdate"))).alias("shop_duration"),
-        F.countDistinct("o_orderkey").alias("frequency"),
-        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-        F.round(F.max("o_totalprice"), 2).alias("max_amount"),
-        F.count("o_orderkey").alias("items_count"),
+        *rfm_aggs(),
         F.round(
             F.sum(F.when(_recent("o_orderdate"), F.col("o_totalprice"))), 2
         ).alias("monetary3"),
@@ -177,24 +151,20 @@ def _channel(df: DataFrame) -> DataFrame:
     ).drop("_urgent", "_high")
 
 
-def feature_assembly_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale form: 2 hash aggregates + broadcast dims, single join each."""
-    return _onepass_from(
-        spark, sf_dir,
-        _feat_orders(spark, sf_dir),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+def feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer churn feature table: two hash aggregates + broadcast dims.
 
-
-def _onepass_from(
-    spark: SparkSession, sf_dir: str, orders: DataFrame, lineitem: DataFrame
-) -> DataFrame:
-    """Onepass assembly over caller-supplied orders (already filtered to
-    the feature window) and lineitem frames — shared by the plain and
-    bucketed-at-rest variants."""
+    The orders aggregate and the detail aggregate are left-joined on
+    the customer key, then the dimensions; ``_finalize`` adds the
+    ratios and the null fill."""
+    orders = feature_orders(spark, sf_dir)
     orders_feats = _channel(_orders_agg(orders))
 
-    d = _detail_from(orders, lineitem, load_table(spark, sf_dir, "part"))
+    d = _detail(
+        orders,
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "part"),
+    )
     detail_aggs = [
         F.count(F.lit(1)).alias("lineitem_count"),
         F.round(F.sum("l_quantity"), 2).alias("quantity_sum"),
@@ -211,125 +181,6 @@ def _onepass_from(
         orders_feats.join(detail_feats, "c_custkey", "left")
         .join(_dims(spark, sf_dir), "c_custkey", "left")
     )
-    return _finalize(out)
-
-
-BUCKET_N = 16
-
-
-def _sf_tag(sf_dir: str) -> str:
-    # Compatibility alias — the shared tag lives with the at-rest
-    # machinery in sources/writers.py.
-    from ..sources.writers import sf_tag
-
-    return sf_tag(sf_dir)
-
-
-def bucketed_ingest(
-    spark: SparkSession, sf_dir: str, n_buckets: int = BUCKET_N
-) -> tuple[DataFrame, DataFrame]:
-    """Materialize orders + lineitem as order-key-bucketed managed
-    tables (idempotent per sf_dir via ``writers.managed_ingest``): the
-    flagship's one big fact⋈fact shuffle is paid ONCE at ingest, after
-    which every orders⋈lineitem equi-join plans with zero Exchange
-    (bucketed SMJ, pre-sorted by the key at write). This is the
-    at-rest layout a 100 TB deployment would use; at that scale
-    `n_buckets` is sized so each bucket is a few GB (e.g. 4096), not
-    this test default."""
-    from ..sources.writers import managed_ingest, sf_tag, write_bucketed
-
-    tag = sf_tag(sf_dir)
-    orders = managed_ingest(
-        spark,
-        f"orders_obkt_{tag}",
-        lambda path: write_bucketed(
-            load_table(spark, sf_dir, "orders"), "o_orderkey",
-            f"orders_obkt_{tag}", n_buckets, path=path,
-        ),
-    )
-    lineitem = managed_ingest(
-        spark,
-        f"lineitem_obkt_{tag}",
-        lambda path: write_bucketed(
-            load_table(spark, sf_dir, "lineitem"), "l_orderkey",
-            f"lineitem_obkt_{tag}", n_buckets, path=path,
-        ),
-    )
-    return orders, lineitem
-
-
-def feature_assembly_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The onepass flagship reading the bucketed-at-rest layout: same
-    rows as ``feature_assembly_onepass`` (same oracle), but the
-    orders⋈lineitem detail join is Exchange-free — the date filter
-    prunes on top of the bucketed scan without disturbing the bucket
-    distribution (proven in tests/test_assembly.py)."""
-    orders, lineitem = bucketed_ingest(spark, sf_dir)
-    orders = orders.where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
-    return _onepass_from(spark, sf_dir, orders, lineitem)
-
-
-def feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference-faithful join chain (RF/randomforest_churn.scala:169-198):
-    one aggregate frame per feature family, left-joined on c_custkey."""
-    o = _feat_orders(spark, sf_dir)
-    key = F.col("o_custkey").alias("c_custkey")
-
-    base = o.groupBy(key).agg(
-        F.datediff(F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate"))).alias("recency"),
-        F.datediff(F.lit(ASOF).cast("date"), F.min(F.to_date("o_orderdate"))).alias("shop_duration"),
-        F.countDistinct("o_orderkey").alias("frequency"),
-        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-        F.round(F.max("o_totalprice"), 2).alias("max_amount"),
-        F.count("o_orderkey").alias("items_count"),
-    )
-    # Reference's 3-month features re-scan with a narrower predicate
-    # (RF/randomforest_churn.scala:155-167).
-    recent = (
-        o.where(_recent("o_orderdate"))
-        .groupBy(key)
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("monetary3"),
-            F.countDistinct("o_orderkey").alias("frequence3"),
-            F.round(F.max("o_totalprice"), 2).alias("max_amount3"),
-        )
-    )
-    weekend = o.groupBy(key).agg(
-        F.avg(F.dayofweek("o_orderdate").isin(1, 7).cast("int")).alias("week_percent")
-    )
-    channel = _channel(
-        o.groupBy(key).agg(
-            F.max((F.col("o_orderpriority") == "1-URGENT").cast("int")).alias("_urgent"),
-            F.max((F.col("o_orderpriority") == "2-HIGH").cast("int")).alias("_high"),
-        )
-    )
-
-    d = _detail(spark, sf_dir)
-    items = d.groupBy(key).agg(
-        F.count(F.lit(1)).alias("lineitem_count"),
-        F.round(F.sum("l_quantity"), 2).alias("quantity_sum"),
-    )
-    shops = d.groupBy(key).agg(F.countDistinct("l_suppkey").alias("shops_count"))
-    promote = d.groupBy(key).agg(
-        F.sum((F.col("l_discount") > 0).cast("int")).alias("promote_items_count"),
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 4).alias("save_amount"),
-    )
-    # J4: per-category distinct-member frame + constant flag column
-    # (RF/randomforest_churn.scala:132-152), one per group.
-    flag_frames = [
-        d.where(F.col("p_type") == t)
-        .select(key)
-        .distinct()
-        .withColumn(f"{t.lower()}_group", F.lit(1))
-        for t in FLAG_TYPES
-    ]
-
-    frames = [recent, weekend, channel, items, shops, promote, *flag_frames,
-              _dims(spark, sf_dir)]
-    out = reduce(lambda acc, f: acc.join(f, "c_custkey", "left"), frames, base)
     return _finalize(out)
 
 
@@ -415,12 +266,8 @@ LEFT JOIN nation n ON n.n_nationkey = c.c_nationkey
 
 QUERIES = {
     "feature_assembly": feature_assembly,
-    "feature_assembly_onepass": feature_assembly_onepass,
-    "feature_assembly_bucketed": feature_assembly_bucketed,
 }
 
 ORACLES = {
     "feature_assembly": ASSEMBLY_ORACLE,
-    "feature_assembly_onepass": ASSEMBLY_ORACLE,
-    "feature_assembly_bucketed": ASSEMBLY_ORACLE,
 }

@@ -1,12 +1,11 @@
-"""Churn labeling — the reference's label join (J3) in three forms.
+"""Churn labeling — the reference's label join (J3).
 
 Reference (``RF/randomforest_churn.scala:212-227``): customers active
 in the feature window are left-joined against the distinct buyers of
 the later label window with a constant ``label = 0`` column; the nulls
-left by the outer join are filled with 1 (churned). Semantically this
-is an anti-join flag, so we also expose the true ``left_semi`` /
-``left_anti`` forms Spark has natively — all three verified against
-one EXISTS-based oracle family.
+left by the outer join are filled with 1 (churned). Churned customers
+are the outer join's anti-join side and retained ones its semi-join
+side, so one labelled frame carries both.
 
 Plus the class-balance report (A5, ``RF/randomforest_churn.scala:221``).
 """
@@ -18,15 +17,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL, LABEL_START
+from .rfm import feature_orders
 
 
 def _active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.where(
-            (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-        )
+        feature_orders(spark, sf_dir)
         .select(F.col("o_custkey").alias("c_custkey"))
         .distinct()
     )
@@ -49,20 +45,6 @@ def label_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     active = _active_customers(spark, sf_dir)
     buyers = _label_buyers(spark, sf_dir).withColumn("label", F.lit(0))
     return active.join(buyers, "c_custkey", "left").na.fill(1, ["label"])
-
-
-def churned_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_anti form: customers active before, absent in label window."""
-    return _active_customers(spark, sf_dir).join(
-        _label_buyers(spark, sf_dir), "c_custkey", "left_anti"
-    )
-
-
-def retained_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_semi form: customers who purchased again in the label window."""
-    return _active_customers(spark, sf_dir).join(
-        _label_buyers(spark, sf_dir), "c_custkey", "left_semi"
-    )
 
 
 def class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,23 +72,11 @@ FROM active a LEFT JOIN buyers b USING (c_custkey)
 
 QUERIES = {
     "label_churn": label_churn,
-    "label_churned_anti": churned_anti,
-    "label_retained_semi": retained_semi,
     "label_class_balance": class_balance,
 }
 
 ORACLES = {
     "label_churn": LABEL_ORACLE,
-    "label_churned_anti": f"""
-WITH active AS ({_ACTIVE_SQL}), buyers AS ({_BUYERS_SQL})
-SELECT c_custkey FROM active a
-WHERE NOT EXISTS (SELECT 1 FROM buyers b WHERE b.c_custkey = a.c_custkey)
-""",
-    "label_retained_semi": f"""
-WITH active AS ({_ACTIVE_SQL}), buyers AS ({_BUYERS_SQL})
-SELECT c_custkey FROM active a
-WHERE EXISTS (SELECT 1 FROM buyers b WHERE b.c_custkey = a.c_custkey)
-""",
     "label_class_balance": f"""
 WITH active AS ({_ACTIVE_SQL}), buyers AS ({_BUYERS_SQL})
 SELECT CAST(CASE WHEN b.c_custkey IS NULL THEN 1 ELSE 0 END AS INTEGER) AS label,

@@ -13,18 +13,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START
+from .rfm import feature_orders
 
 _WINDOW_PRED_SQL = (
     f"o_orderdate >= TIMESTAMP '{FEAT_START}' "
     f"AND o_orderdate < TIMESTAMP '{FEAT_END_EXCL}'"
 )
-
-
-def _feat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
 
 
 def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,7 +28,7 @@ def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     to_date BETWEEN) and :83 (inequality filter).
     """
     return (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .where(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -49,7 +43,7 @@ def having_repurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 (RF/randomforest_churn.scala:90-92): agg + filter-on-aggregate
     == SQL HAVING; customers who purchased on more than one day."""
     return (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(F.countDistinct(F.to_date("o_orderdate")).alias("purchase_days"))
         .filter(F.col("purchase_days") > 1)
@@ -71,7 +65,7 @@ def na_fill_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer join — strings -> 'unknow', numerics -> 0, in that order."""
     customer = load_table(spark, sf_dir, "customer").select("c_custkey")
     agg = (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(
             F.max("o_orderpriority").alias("last_priority"),
@@ -84,7 +78,7 @@ def na_fill_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k with deterministic tie-break (sort + limit)."""
     return (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .limit(10)
@@ -93,7 +87,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def set_ops_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """union / intersect / except over PROMO- vs ECONOMY-part buyers."""
-    orders = _feat_orders(spark, sf_dir).select("o_orderkey", "o_custkey")
+    orders = feature_orders(spark, sf_dir).select("o_orderkey", "o_custkey")
     lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     detail = orders.join(
@@ -118,7 +112,7 @@ def set_ops_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 (RF/randomforest_churn.scala:72): projection + distinct."""
     return (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .select(F.col("o_custkey").alias("c_custkey"), "o_orderpriority")
         .distinct()
     )

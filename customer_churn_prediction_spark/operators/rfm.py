@@ -7,12 +7,13 @@ items count (window count) via unbounded-partition window functions
 followed by ``distinct()``; frequency is a separate
 ``groupBy().agg(countDistinct(TML_NUM_ID))`` at ``:74-76``.
 
-We implement BOTH forms — the window+distinct idiom (reference-faithful,
-``rfm_window``) and the direct groupBy aggregation (``rfm_groupby``) —
-and verify them equal. The groupBy form is the one to run at 100 TB:
-it is a single partial+final hash aggregate (map-side combine shrinks
-the shuffle to one row per customer), while the window form shuffles
-every order row into a per-customer sort before deduplicating.
+The engine computes the same six values with one groupBy aggregation
+(``rfm_groupby``): a single partial+final hash aggregate whose
+map-side combine shrinks the shuffle to one row per customer, where
+the window idiom shuffles every order row into a per-customer sort
+before deduplicating. The feature-window filter and the six aggregates
+are shared with ``operators/assembly.py``, which extends them with the
+90-day, weekend and channel features in the same aggregate.
 
 Star-schema mapping (FIXTURES.md §A): USR_NUM_ID→o_custkey,
 ORDER_DATE→o_orderdate, TRADE_AMOUNT→o_totalprice, TML_NUM_ID→o_orderkey.
@@ -20,7 +21,7 @@ ORDER_DATE→o_orderdate, TRADE_AMOUNT→o_totalprice, TML_NUM_ID→o_orderkey.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -38,7 +39,7 @@ _FINAL_COLS = [
 ]
 
 
-def _feature_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def feature_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders restricted to the feature window.
 
     The predicate compares the raw timestamp column against literals so
@@ -52,58 +53,30 @@ def _feature_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def rfm_aggs() -> list[Column]:
+    """The six per-customer RFM aggregates over feature-window orders,
+    in ``_FINAL_COLS`` order."""
+    asof = F.lit(ASOF).cast("date")
+    return [
+        F.datediff(asof, F.max(F.to_date("o_orderdate"))).alias("recency"),
+        F.datediff(asof, F.min(F.to_date("o_orderdate"))).alias("shop_duration"),
+        F.countDistinct("o_orderkey").alias("frequency"),
+        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
+        F.round(F.max("o_totalprice"), 2).alias("max_amount"),
+        F.count("o_orderkey").alias("items_count"),
+    ]
+
+
 def rfm_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM via a single hash aggregation (the scale form)."""
-    o = _feature_orders(spark, sf_dir)
     return (
-        o.groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.datediff(F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate"))).alias(
-                "recency"
-            ),
-            F.datediff(F.lit(ASOF).cast("date"), F.min(F.to_date("o_orderdate"))).alias(
-                "shop_duration"
-            ),
-            F.countDistinct("o_orderkey").alias("frequency"),
-            F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-            F.round(F.max("o_totalprice"), 2).alias("max_amount"),
-            F.count("o_orderkey").alias("items_count"),
-        )
+        feature_orders(spark, sf_dir)
+        .groupBy(F.col("o_custkey").alias("c_custkey"))
+        .agg(*rfm_aggs())
         .select(*_FINAL_COLS)
     )
 
 
-def rfm_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer RFM via window-over-unbounded-partition + distinct.
-
-    Reference-faithful form (RF/randomforest_churn.scala:61-72): append
-    per-customer analytics to every detail row, then ``distinct()``.
-    Kept as a verified-equal alternative; prefer ``rfm_groupby`` — this
-    form shuffles the full detail table and relies on distinct() to
-    collapse it back.
-    """
-    o = _feature_orders(spark, sf_dir)
-    w = Window.partitionBy("o_custkey")
-    return (
-        o.select(
-            F.col("o_custkey").alias("c_custkey"),
-            F.datediff(
-                F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate")).over(w)
-            ).alias("recency"),
-            F.datediff(
-                F.lit(ASOF).cast("date"), F.min(F.to_date("o_orderdate")).over(w)
-            ).alias("shop_duration"),
-            F.size(F.collect_set("o_orderkey").over(w)).cast("long").alias("frequency"),
-            F.round(F.sum("o_totalprice").over(w), 2).alias("monetary"),
-            F.round(F.max("o_totalprice").over(w), 2).alias("max_amount"),
-            F.count("o_orderkey").over(w).alias("items_count"),
-        )
-        .distinct()
-        .select(*_FINAL_COLS)
-    )
-
-
-# One oracle serves both forms (they are asserted equal in tests).
 RFM_ORACLE = f"""
 SELECT
   o_custkey                                             AS c_custkey,
@@ -123,10 +96,8 @@ GROUP BY o_custkey
 
 QUERIES = {
     "rfm_groupby": rfm_groupby,
-    "rfm_window": rfm_window,
 }
 
 ORACLES = {
     "rfm_groupby": RFM_ORACLE,
-    "rfm_window": RFM_ORACLE,
 }

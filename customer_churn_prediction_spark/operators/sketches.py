@@ -844,8 +844,7 @@ LEFT JOIN ret r USING (month_a)
 
 
 # heavy_hitters_cms graduated to the registry in r9 (the one free
-# slot under the 100-entry ceiling — registry sat at 99 since r8's
-# retirement of label_churned_anti): it completes the registered
+# slot under the 100-entry ceiling): it completes the registered
 # sketch story next to approx_distinct_users and percentile_quantity
 # with the frequency member of the mergeable-sketch matrix. The other
 # three stay staged permanently by design (the 50-row driver budget x

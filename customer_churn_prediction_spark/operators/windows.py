@@ -1,10 +1,10 @@
 """Window-function operators (SURVEY.md §2.5, W1-W5 + extensions).
 
-The reference only uses unbounded-partition windows (no ORDER BY) —
-covered by ``rfm.rfm_window``. Here we add the ranking/analytic
-extensions SURVEY flags as free in Spark: row_number dedup (the
-natural form of the reference's window+distinct idiom), lag-based
-purchase gaps, and an ordered running-total frame.
+The reference only uses unbounded-partition windows (no ORDER BY),
+which the engine computes as one groupBy (``rfm.rfm_groupby``). Here
+we add the ranking/analytic extensions SURVEY flags as free in Spark:
+row_number dedup (the natural form of the reference's window+distinct
+idiom), lag-based purchase gaps, and an ordered running-total frame.
 
 Ordering ties are always broken by a unique key so results are
 deterministic across engines.
@@ -15,20 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START
+from .rfm import feature_orders
 
 _WINDOW_PRED_SQL = (
     f"o_orderdate >= TIMESTAMP '{FEAT_START}' "
     f"AND o_orderdate < TIMESTAMP '{FEAT_END_EXCL}'"
 )
-
-
-def _feat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
 
 
 def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +31,7 @@ def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
     )
     return (
-        _feat_orders(spark, sf_dir)
+        feature_orders(spark, sf_dir)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
@@ -54,7 +47,7 @@ def purchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() analytics: per-customer average days between consecutive
     orders (avg of ints => IEEE-deterministic double)."""
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = _feat_orders(spark, sf_dir).withColumn(
+    gaps = feature_orders(spark, sf_dir).withColumn(
         "gap_days",
         F.datediff(
             F.to_date("o_orderdate"), F.to_date(F.lag("o_orderdate").over(w))
@@ -79,7 +72,7 @@ def running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _feat_orders(spark, sf_dir).select(
+    return feature_orders(spark, sf_dir).select(
         F.col("o_custkey").alias("c_custkey"),
         "o_orderkey",
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_spend"),

@@ -56,7 +56,7 @@ def count_shuffles_in_plan_string(plan: str) -> int:
     return n
 
 
-def _static_plan_string(df: DataFrame) -> str:
+def static_plan_string(df: DataFrame) -> str:
     """``df``'s physical plan as planned, before any AQE re-planning.
     Once an adaptive plan has executed, its string prints both the
     ``== Final Plan ==`` and the ``== Initial Plan ==`` trees, which
@@ -72,7 +72,7 @@ def _static_plan_string(df: DataFrame) -> str:
 def count_shuffle_exchanges(df: DataFrame) -> int:
     """Runtime shuffle count of ``df``'s statically planned shape —
     the comparable and deterministic form for regression testing."""
-    return count_shuffles_in_plan_string(_static_plan_string(df))
+    return count_shuffles_in_plan_string(static_plan_string(df))
 
 
 # A FileScan line carries everything scan hygiene needs on one line:
@@ -101,7 +101,7 @@ def scan_profiles(df: DataFrame, data_root: str) -> dict:
     their layouts are narrow by construction and their names embed
     fixture tags."""
     out: dict[str, dict] = {}
-    for line in _static_plan_string(df).splitlines():
+    for line in static_plan_string(df).splitlines():
         if "FileScan" not in line:
             continue
         path = _SCAN_PATH.search(line)

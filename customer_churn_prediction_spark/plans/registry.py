@@ -65,23 +65,15 @@ def _modules():
     return _MODULES
 
 
-# Retired registry entries (round 6). The driver's ~50-row/round budget
-# caps the registry at 100 provable-every-other-round entries; each
-# retirement below removes a VERIFIED-EQUAL twin whose component stays
-# covered by a registered sibling AND a permanent equality pytest, so
-# no SURVEY §2 capability loses driver evidence. The implementations
-# remain in their modules (tests and scale scripts still call them).
+# Retired registry entries. The driver's ~50-row/round budget caps the
+# registry at 100 provable-every-other-round entries; each retirement
+# below removes an entry whose work stays covered by a registered
+# sibling AND a permanent pytest, so no SURVEY §2 capability loses
+# driver evidence. The implementations remain in their modules
+# (registered siblings, tests and scale scripts still call them). A
+# second form of a registered step that nothing else executes is
+# deleted, not retired.
 RETIRED = {
-    # ≡ rfm_groupby (tests/test_rfm.py equality); windows stay covered
-    # by latest_order_per_customer / purchase_gaps / running_spend.
-    "rfm_window": "rfm_groupby",
-    # ≡ feature_assembly (tests/test_assembly.py equality); the
-    # bucketed zero-Exchange capability stays registry-covered by
-    # dedup_incremental_materialized + permanent plan tests.
-    "feature_assembly_bucketed": "feature_assembly",
-    # complement of label_churned_anti, twin of label_churn (J3
-    # three-form equivalence is equality-tested).
-    "label_retained_semi": "label_churn",
     # intermediate of dedup_simhash (the grouped form reads the same
     # banded self-join).
     "dedup_simhash_pairs": "dedup_simhash",
@@ -89,20 +81,9 @@ RETIRED = {
     # ann_bruteforce_topk and the scalable threshold-pair forms are
     # ann_lsh_bucketed / dedup_semantic.
     "embedding_neardup_pairs": "ann_lsh_bucketed",
-    # r7: ≡ feature_assembly (same ASSEMBLY_ORACLE; permanent equality
-    # pytest tests/test_assembly.py::test_join_chain_equals_onepass).
-    # The freed slot registers vocab_bpe_merges — the staged tier's
-    # headline (BPE training, 10.8x faster than its oracle at sf0.1).
-    # The onepass scale shape stays in the module, benched and
-    # scale-curved; the registered chain carries the driver row.
-    "feature_assembly_onepass": "feature_assembly",
-    # r8: ≡ label_churn filtered to label=1 (J3 three-form equivalence,
-    # permanent equality pytest tests/test_labeling.py). The freed slot
-    # registers text_tokenize_bpe, completing the BPE train+encode pair.
-    "label_churned_anti": "label_churn",
     # r10 (VERDICT r9 item 2): three redundant registered BASELINES
     # retire to open graduation slots for the staged tier. Unlike the
-    # equality-twin retirements above, these are deliberate non-scale
+    # twin retirements above, these are deliberate non-scale
     # baselines whose code STAYS DRIVER-EXERCISED: the newly registered
     # ann_recall_matrix runs all three as components in both engines
     # (Spark composes the module fns; the oracle nests their committed
@@ -183,57 +164,57 @@ RETIRED = {
 # scripts/gen_priority.py's derivation from the committed
 # CORRECTNESS history — the rotation is generated, not hand-kept.
 PRIORITY = [
-    # latest green row is r13 — re-prove before the evidence goes stale
-    "distinct_pairs",
-    "salted_join_revenue",
-    "groupby_sum",
-    "user_event_sequences",
-    "range_join_events",
-    "events_resample_ffill",
-    "heavy_hitters_cms",
-    "date_functions",
-    "round_bround",
-    "md5_salted_key",
-    "string_functions",
-    "json_extract_events",
-    "text_sentences",
-    "stream_tumbling_counts",
-    "stream_sliding_counts",
-    "stream_session_windows",
-    "stream_dedup_events",
-    "stream_user_totals",
-    "rollup_daily_from_hourly",
-    "text_stats",
-    "text_lang_id",
-    "text_token_counts",
-    "text_fingerprint",
-    "corpus_curation",
-    "corpus_mix",
-    "corpus_keep_decision",
-    "text_logprob_bigram",
-    "corpus_sample_weighted",
-    "dedup_exact",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh_pairs",
-    "dedup_lsh_groups",
-    "corpus_dedup_keep",
-    "contamination_check",
-    "vocab_bpe_merges",
-    "ann_lsh_bucketed",
-    "ann_ivf_kmeans",
-    "embedding_quantize",
-    "ann_bruteforce_int8_stored",
-    "ann_recall_eval",
-    "ml_rf_churn",
-    "ml_gbt_churn",
-    "ml_lr_churn",
-    "ml_fm_churn",
-    "ml_feature_vectors",
-    "drift_psi",
-    "score_band_lift",
-    "eval_ks",
-    "multimodal_features",
-    "multimodal_frames",
+    # latest green row is r14 — re-prove before the evidence goes stale
+    "rfm_groupby",
+    "feature_assembly",
+    "label_churn",
+    "label_class_balance",
+    "scan_filter_project",
+    "having_repurchase",
+    "isin_filter",
+    "na_fill_left_join",
+    "topk_orders",
+    "set_ops_buyers",
+    "sampled_orders",
+    "groupby_count",
+    "avg_by_segment",
+    "approx_distinct_users",
+    "grouping_sets_revenue",
+    "pivot_status_priority",
+    "percentile_quantity",
+    "eval_confusion",
+    "latest_order_per_customer",
+    "purchase_gaps",
+    "running_spend",
+    "asof_join_clicks",
+    "event_sessions",
+    "session_transitions",
+    "rec_eval_ndcg",
+    "text_tfidf_topk",
+    "corpus_sample_stratified",
+    "text_chunks",
+    "corpus_pack",
+    "text_redact",
+    "dedup_lsh_components",
+    "dedup_simhash",
+    "dedup_incremental",
+    "dedup_cross_modal",
+    "dedup_containment",
+    "dedup_recall_eval",
+    "corpus_select_dsir",
+    "text_dup_spans",
+    "corpus_clean_spans",
+    "corpus_split_leakproof",
+    "text_tokenize_bpe",
+    "vocab_eval_compression",
+    "ann_ivf_materialized",
+    "dedup_semantic",
+    "embedding_pq",
+    "ann_ivf_pq_stored",
+    "ann_recall_matrix",
+    "feature_bucketize",
+    "model_calibration",
+    "feature_iv",
 ]
 
 
@@ -251,7 +232,6 @@ _PLAN_MEMO_EXCLUDE = {
     "ann_bruteforce_int8_stored",
     "ann_ivf_pq_stored",
     "corpus_split_leakproof",
-    "dedup_incremental_materialized",
     # bench.py clears this fit memo per pass to time the fit; its plan
     # also carries the per-round checkpoint barriers
     "vocab_bpe_merges",

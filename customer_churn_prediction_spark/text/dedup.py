@@ -810,12 +810,11 @@ def corpus_bands_ingest(
     the scan's HashPartitioning unusable for a (band, band_sig) join).
 
     Maintained at ingest time in a real deployment; idempotent per
-    sf_dir here (same tag/rebuild discipline as
-    ``operators.assembly.bucketed_ingest``). At 100 TB the band table
-    is ~corpus-cardinality × N_BANDS short rows — far smaller than the
-    corpus text — and re-crawl dedup stops re-hashing the corpus: the
-    batch's bands equi-join straight into this table, with the corpus
-    side a scan-only branch (zero Exchange, asserted in
+    sf_dir here (``sources.writers.managed_ingest``). At 100 TB the
+    band table is ~corpus-cardinality × N_BANDS short rows — far
+    smaller than the corpus text — and re-crawl dedup stops re-hashing
+    the corpus: the batch's bands equi-join straight into this table,
+    with the corpus side a scan-only branch (zero Exchange, asserted in
     tests/test_dedup_materialized.py)."""
     from ..sources.writers import managed_ingest, sf_tag, write_bucketed
 

@@ -384,7 +384,7 @@ def dsir_report_exact(docs: DataFrame) -> DataFrame:
     """The r10 exact-rank form — every doc row through one global
     (logweight desc, doc_id) window. Kept as the verified-equal twin
     of the registered threshold plan (tests/test_selection.py pins
-    ``dsir_report ≡ dsir_report_exact``, the rfm_window precedent):
+    ``dsir_report ≡ dsir_report_exact``):
     this is the form whose single rank task dies at 100-TB doc
     counts, so it holds no registry slot."""
     scored = _dsir_scored(docs)

@@ -475,15 +475,12 @@ FROM agg
 
 VOCAB_EVAL_ORACLE = _vocab_eval_oracle()
 
-# vocab_bpe_merges graduated to the registry in r7 (a slot opened when
-# feature_assembly_onepass retired to its verified-equal chain twin) —
-# it is the tier's headline: distributed BPE training 10.8x faster
-# than the DuckDB oracle at sf0.1. text_tokenize_bpe graduated in r8
-# (label_churned_anti retired to its verified-equal outer-join twin),
-# completing the registered train+encode tokenizer pair — the
-# token-level analog of the reference's featindex encode chain
-# (LR/TFRecord_process.py:17-35). tests/test_vocab.py holds both to
-# driver rigor regardless.
+# vocab_bpe_merges graduated to the registry in r7 — it is the tier's
+# headline: distributed BPE training 10.8x faster than the DuckDB
+# oracle at sf0.1. text_tokenize_bpe graduated in r8, completing the
+# registered train+encode tokenizer pair — the token-level analog of
+# the reference's featindex encode chain (LR/TFRecord_process.py:17-35).
+# tests/test_vocab.py holds both to driver rigor regardless.
 QUERIES = {
     "vocab_bpe_merges": bpe_merges,
     "text_tokenize_bpe": tokenize_bpe,

@@ -40,6 +40,10 @@ GUARDED = [
     # scan profile went {} when the goldens were regenerated after the
     # r14 barriers, so the runtime guard is its only volume guard now
     "dedup_fragments_incremental",
+    # the flagship: its scan profile keeps only the widest scan of each
+    # table, so it cannot tell one scan from several; source records
+    # can (its budget is one scan per table)
+    "feature_assembly",
 ]
 
 

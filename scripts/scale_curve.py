@@ -148,8 +148,7 @@ EVENTS_ONLY_QUERIES = [
 ]
 
 CURVE_QUERIES = [
-    "feature_assembly_onepass",   # 2 hash aggs + broadcast dims (retired twin)
-    "feature_assembly",           # reference-faithful 12-join chain
+    "feature_assembly",           # 2 hash aggs + broadcast dims
     "rfm_groupby",                # single partial+final hash agg
     "dedup_lsh_groups",           # linear LSH dedup (window + agg)
     "dedup_minhash_lsh_pairs",    # bucket expansion, 1 shuffle
@@ -197,13 +196,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = dict(get_queries())
-    # Retired verified-equal twins stay scale-curved from their modules
-    # (registry.RETIRED drops them from the driver surface only).
-    from customer_churn_prediction_spark.operators import assembly
-
-    queries.setdefault(
-        "feature_assembly_onepass", assembly.feature_assembly_onepass
-    )
     # r10-retired ANN baselines (registry.RETIRED): the module fns
     # still ride the curve — their decade shape is the documentation
     # of WHY they were retired as non-scale forms.

@@ -21,6 +21,22 @@ def test_calibration_oracle_parity_sf001(spark, sf_dir):
     )
 
 
+def test_calibration_oracle_parity_on_half_boundary_band(spark, tmp_path):
+    """On this resampled snapshot one band's mean score sits exactly
+    on a 6-dp rounding half-boundary (true mean ...4565045): a float
+    sum of the scores, added in engine-dependent order, landed one ulp
+    either side of it and the two engines rounded it apart (0.456504
+    vs 0.456505). Exact per-band sums give both the same operands."""
+    from perfbench.inputs import make_snapshot
+
+    snap = make_snapshot(str(tmp_path / "snap"), [5, 928])
+    assert_matches_oracle(
+        calibration.model_calibration(spark, snap),
+        calibration.CALIBRATION_ORACLE,
+        snap,
+    )
+
+
 def test_feature_iv_oracle_parity_sf001(spark, sf_dir):
     assert_matches_oracle(
         calibration.feature_iv(spark, sf_dir),

@@ -14,12 +14,12 @@ import shutil
 from pyspark.sql import functions as F
 
 from customer_churn_prediction_spark.catalog import load_table
-from customer_churn_prediction_spark.operators.assembly import _sf_tag
+from customer_churn_prediction_spark.sources.writers import sf_tag
 from customer_churn_prediction_spark.text import dedup
 
 
 def _fresh_ingest(spark, sf_dir):
-    table = f"corpus_bands_{_sf_tag(sf_dir)}"
+    table = f"corpus_bands_{sf_tag(sf_dir)}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(

@@ -18,14 +18,14 @@ from .oracle_utils import assert_matches_oracle
 
 
 def _fresh_stores(spark, sf_dir):
-    from customer_churn_prediction_spark.operators.assembly import _sf_tag
+    from customer_churn_prediction_spark.sources.writers import sf_tag
 
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     )
     for table in (
-        f"corpus_grams_{_sf_tag(sf_dir)}",
-        f"corpus_gram_df_{_sf_tag(sf_dir)}",
+        f"corpus_grams_{sf_tag(sf_dir)}",
+        f"corpus_gram_df_{sf_tag(sf_dir)}",
     ):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(

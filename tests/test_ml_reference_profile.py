@@ -43,7 +43,7 @@ REFERENCE_OUTER_AUC = 0.833  # best published reference model (BASELINE.md)
 @pytest.mark.parametrize("model_key", ["rf", "gbt", "lr", "fm"])
 def test_reference_profile_auc_band_sf01(spark, model_key):
     row = jobs.train_and_evaluate(
-        spark, SF_BIG, model_key, profile="reference", share_cache=True
+        spark, SF_BIG, model_key, profile="reference"
     ).collect()[0]
     assert row.n_train > 8000, row  # sf0.1 ≈ 14.8k labeled customers
     assert AUC_LO <= row.auc <= AUC_HI, (

@@ -50,9 +50,7 @@ def test_full_pipeline_chain(spark, sf_dir):
     assert train_docs
 
     # 4. Churn model: features -> fit -> eval emits the metric row.
-    metrics = jobs.train_and_evaluate(
-        spark, sf_dir, "lr", share_cache=True
-    ).collect()[0]
+    metrics = jobs.train_and_evaluate(spark, sf_dir, "lr").collect()[0]
     assert metrics.n_train > 0 and metrics.n_test > 0
     assert 0.0 <= metrics.auc <= 1.0
 

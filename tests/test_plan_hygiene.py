@@ -3,11 +3,13 @@ a cartesian product or an unintended nested-loop join. The two exact
 all-pairs baselines do so BY DESIGN (their docstrings say the LSH tier
 replaces them at scale) and are whitelisted explicitly — anything else
 that starts nested-looping is a scale bug this test catches at plan
-time (no execution)."""
+time (no execution), on the statically planned shape
+(``audit.static_plan_string``) like the shuffle and scan guards."""
 
 import pytest
 
 from customer_churn_prediction_spark.plans import registry
+from customer_churn_prediction_spark.plans.audit import static_plan_string
 
 # Deliberate O(n²) baselines / tiny-side nested loops, documented in
 # their modules. Everything else must plan hash/sort-merge/broadcast
@@ -67,8 +69,8 @@ _PLANNABLE = [
 
 @pytest.mark.parametrize("name", _PLANNABLE)
 def test_no_accidental_cartesian_or_nested_loop(spark, sf_dir, name):
-    df = registry.QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the static plan: a memoized frame that already ran reads the same
+    plan = static_plan_string(registry.QUERIES[name](spark, sf_dir))
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
     if name not in ALLOWED_NESTED_LOOP:
         assert "BroadcastNestedLoopJoin" not in plan, (

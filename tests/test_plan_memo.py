@@ -30,6 +30,7 @@ from customer_churn_prediction_spark.plans.audit import (
     count_shuffle_exchanges,
     run_with_metrics,
     scan_profiles,
+    static_plan_string,
 )
 
 from .conftest import SF_SMOKE
@@ -69,12 +70,14 @@ def test_plan_guards_ignore_prior_execution(spark):
     final AND the initial plan; the guards must read the planned shape
     only, so a memo hit audits the same before and after a run."""
     df = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
+    plan = static_plan_string(df)
     shuffles = count_shuffle_exchanges(df)
     scans = scan_profiles(df, SF_SMOKE)
     assert shuffles > 0 and scans
     df.toPandas()
     again = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
     assert again is df, "second build must be a memo hit"
+    assert static_plan_string(again) == plan
     assert count_shuffle_exchanges(again) == shuffles
     assert scan_profiles(again, SF_SMOKE) == scans
 

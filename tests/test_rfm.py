@@ -1,16 +1,12 @@
 from customer_churn_prediction_spark.operators import rfm
 
-from .oracle_utils import assert_df_equal, assert_matches_oracle
+from .oracle_utils import assert_matches_oracle
 
 
 def test_rfm_groupby_matches_oracle(spark, sf_dir):
     assert_matches_oracle(
         rfm.rfm_groupby(spark, sf_dir), rfm.RFM_ORACLE, sf_dir
     )
-
-
-def test_rfm_window_equals_groupby(spark, sf_dir):
-    assert_df_equal(rfm.rfm_window(spark, sf_dir), rfm.rfm_groupby(spark, sf_dir))
 
 
 def test_rfm_nonempty_at_smoke_sf(spark, sf_smoke):

@@ -63,9 +63,9 @@ def test_ann_ivf_kmeans_returns_ranked_topk(spark, sf_dir):
 def _fresh_ivf_ingest(spark, sf_dir):
     import shutil
 
-    from customer_churn_prediction_spark.operators.assembly import _sf_tag
+    from customer_churn_prediction_spark.sources.writers import sf_tag
 
-    table = f"ivf_lists_{_sf_tag(sf_dir)}"
+    table = f"ivf_lists_{sf_tag(sf_dir)}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(

@@ -344,10 +344,10 @@ def test_dedup_ingest_stream_equals_batch_form(spark, sf_dir, tmp_path):
     from customer_churn_prediction_spark.catalog import load_table
     from customer_churn_prediction_spark.streaming import ingest
     from customer_churn_prediction_spark.text import dedup
-    from customer_churn_prediction_spark.operators.assembly import _sf_tag
+    from customer_churn_prediction_spark.sources.writers import sf_tag
 
     # Fresh bands table for this sf_dir.
-    table = f"corpus_bands_{_sf_tag(sf_dir)}"
+    table = f"corpus_bands_{sf_tag(sf_dir)}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(
@@ -400,9 +400,9 @@ def test_dedup_ingest_epoch_replay_is_idempotent(spark, sf_dir, tmp_path):
     from customer_churn_prediction_spark.catalog import load_table
     from customer_churn_prediction_spark.streaming import ingest
     from customer_churn_prediction_spark.text import dedup
-    from customer_churn_prediction_spark.operators.assembly import _sf_tag
+    from customer_churn_prediction_spark.sources.writers import sf_tag
 
-    table = f"corpus_bands_{_sf_tag(sf_dir)}"
+    table = f"corpus_bands_{sf_tag(sf_dir)}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(
