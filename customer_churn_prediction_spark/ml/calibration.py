@@ -36,12 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .monitoring import _SCORED_CTE, _scored_customers
+from .monitoring import _MICRO, _SCORED_CTE, _score_micro, _scored_customers
 
 # ------------------------------------------------------------ calibration
 
 _CAL_BANDS = 10
-_MICRO = 1_000_000  # scores are rounded to 6 dp upstream
 
 
 def calibration_frame(scored: DataFrame) -> DataFrame:
@@ -56,7 +55,7 @@ def calibration_frame(scored: DataFrame) -> DataFrame:
     band = F.least(
         F.floor(F.col("score") * _CAL_BANDS), F.lit(_CAL_BANDS - 1)
     ).cast("int")
-    score_micro = F.round(F.col("score") * _MICRO).cast("long")
+    score_micro = _score_micro()
     err_micro = (score_micro - F.col("label") * _MICRO).cast("decimal(20,0)")
     per_band = (
         scored.select(band.alias("band"), "label", "score")

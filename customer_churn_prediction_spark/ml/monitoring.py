@@ -186,12 +186,24 @@ def _scored_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MICRO = 1_000_000  # scores are rounded to 6 dp by _scored_customers
+
+
+def _score_micro():
+    """The 6-dp score as an exact BIGINT count of micro-units."""
+    return F.round(F.col("score") * _MICRO).cast("long")
+
+
 def score_band_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lift / cumulative-gains table over fixed score bands.
 
     Bands are ``floor(score*10)`` (map-side expression, no global
     sort); cumulative capture and lift run highest-band-first over the
-    10-row aggregate.
+    10-row aggregate. A band's scores are summed exactly in integer
+    micro-units: a float sum depends on the order the engine adds in,
+    and a band mean of 6-dp scores can sit exactly on a 6-dp rounding
+    half-boundary, where one ulp decides the digit. ``avg_score`` is
+    then one division of operands identical in both engines.
     """
     scored = _scored_customers(spark, sf_dir)
     band = F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("int")
@@ -201,7 +213,7 @@ def score_band_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
             F.sum("label").alias("n_churned"),
-            F.sum("score").alias("_sum_score"),
+            F.sum(_score_micro()).alias("_sum_score"),
         )
     )
     w_all = Window.partitionBy()
@@ -218,7 +230,11 @@ def score_band_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_customers",
             "n_churned",
             F.round(F.col("n_churned") / F.col("n_customers"), 6).alias("churn_rate"),
-            F.round(F.col("_sum_score") / F.col("n_customers"), 6).alias("avg_score"),
+            F.round(
+                F.col("_sum_score").cast("double")
+                / (F.col("n_customers").cast("double") * _MICRO),
+                6,
+            ).alias("avg_score"),
             cum_c.alias("cum_customers"),
             cum_ch.alias("cum_churned"),
             F.round(cum_ch / total_ch, 6).alias("capture_rate"),
@@ -337,13 +353,15 @@ per_band AS (
   SELECT least(CAST(floor(score * 10) AS INT), 9) AS band,
          count(*) AS n_customers,
          CAST(sum(label) AS BIGINT) AS n_churned,
-         sum(score) AS _sum_score
+         CAST(sum(CAST(round(score * {_MICRO}) AS BIGINT)) AS BIGINT)
+           AS _sum_score
   FROM s2 GROUP BY 1
 )
 SELECT
   band, n_customers, n_churned,
   round(CAST(n_churned AS DOUBLE) / n_customers, 6) AS churn_rate,
-  round(_sum_score / n_customers, 6) AS avg_score,
+  round(CAST(_sum_score AS DOUBLE)
+          / (CAST(n_customers AS DOUBLE) * {_MICRO}), 6) AS avg_score,
   CAST(sum(n_customers) OVER (ORDER BY band DESC
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_customers,
   CAST(sum(n_churned) OVER (ORDER BY band DESC

@@ -113,7 +113,7 @@ def fragment_ingest_stream(
         INCREMENTAL_MOD,
         INCREMENTAL_NEW_RESIDUE,
         _containment_best_match,
-        _containment_prefix,
+        _fragment_candidates,
         _gram_rows,
     )
 
@@ -133,20 +133,7 @@ def fragment_ingest_stream(
 
     def epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
-        prefix = _containment_prefix(_gram_rows(batch), frozen_df)
-        a, b = prefix.alias("a"), cor_sh.alias("b")
-        cands = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.n_sh") <= F.col("b.n_sh")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id"),
-                F.col("b.doc_id").alias("dup_of"),
-            )
-            .distinct()
-        )
+        cands = _fragment_candidates(_gram_rows(batch), frozen_df, cor_sh)
         docs = corpus_docs.unionByName(batch)
         out = _containment_best_match(docs, cands)
         # Exactly-once: a replayed epoch overwrites exactly its own

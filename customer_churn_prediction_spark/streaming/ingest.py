@@ -70,18 +70,7 @@ def dedup_ingest_stream(
 
     def epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
-        bands = dedup._bands_from(batch).select(
-            "doc_id", dedup._band_key().alias("band_key")
-        )
-        cands = (
-            bands.alias("n")
-            .join(corpus_bands.alias("c"), "band_key")
-            .select(
-                F.col("n.doc_id").alias("doc_id"),
-                F.col("c.doc_id").alias("dup_of"),
-            )
-            .distinct()
-        )
+        cands = dedup._band_key_candidates(batch, corpus_bands)
         docs = corpus_docs.unionByName(batch)
         out = dedup._verified_best_match(docs, cands)
         # Exactly-once: each epoch owns its partition directory, so a

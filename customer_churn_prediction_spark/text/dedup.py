@@ -38,6 +38,7 @@ BAND_ROWS = 2  # 3 bands x 2 rows
 N_BANDS = N_HASHES // BAND_ROWS
 SHINGLE = 5
 JACCARD_THRESHOLD = 0.4
+CONTAINMENT_THRESHOLD = 0.9
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,34 +449,25 @@ def _word_shingles_spark() -> str:
     )
 
 
-def ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
-    """Exact word-3-gram Jaccard for every pair sharing >=1 shingle,
-    kept when >= JACCARD_THRESHOLD — the exact O(pairs) baseline the
-    LSH tier replaces at scale.
+def _doc_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, grams): each doc's distinct word-3-gram hash array."""
+    return docs.select(
+        "doc_id", F.expr(_word_shingles_spark()).alias("grams")
+    )
 
-    BASELINE — deploy ``dedup_lsh_verified`` at scale: it computes the
-    same exact Jaccard but only for band-collision candidates.
 
-    Each doc's distinct-gram array is computed once per join side and
-    exploded CARRYING ITS OWN SIZE, so the intersection count and both
-    set sizes come out of the one co-occurrence aggregate — no separate
-    sizes branch, no joins back. That cuts the gram-hash pipeline from
-    four evaluations (sizes + both sides + verify) to the two join
-    sides, and the pair generation stays distributed across the shuffle
-    (a per-shingle collect_list + in-bucket expansion was tried and
-    concentrates a hot shingle's C(n,2) pairs into one array in one
-    task — 5x slower on the near-dup-heavy corpus)."""
-    d = load_table(spark, sf_dir, "documents", spread=True)
-    # The size ride-along lives INSIDE one expression (struct-carrying
-    # transform): a plain `select(size(grams), explode(grams))` lets
-    # the optimizer inline the gram-hash pipeline into BOTH uses plus
-    # the Generate (6 md5 passes across the join — measured 16.7 s);
-    # the single multi-reference expression keeps the grams projection
-    # materialized (2 passes, 1.8 s).
-    sh = (
-        d.select("doc_id", F.expr(_word_shingles_spark()).alias("grams"))
+def _gram_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle, n_sh) — each doc's distinct word-3-gram set
+    exploded with its size riding along.
+
+    The size lives INSIDE one expression (struct-carrying transform): a
+    plain ``select(size(grams), explode(grams))`` lets the optimizer
+    inline the gram-hash pipeline into BOTH uses plus the Generate (6
+    md5 passes across the ngram self-join — measured 16.7 s); the
+    single multi-reference expression keeps the grams projection
+    materialized (2 passes, 1.8 s)."""
+    return (
+        _doc_grams(docs)
         .select(
             "doc_id",
             F.explode(
@@ -487,20 +479,133 @@ def ngram_jaccard_pairs(
         )
         .select("doc_id", "g.shingle", "g.n_sh")
     )
-    if materialize:
-        # materialize ONCE per run (r14, guide §3.3): both join sides
-        # consume this frame, and the md5 gram pipeline otherwise runs
-        # twice (A/B: 2.88 → 2.47 s at sf0.1). The blocks are the
-        # exploded gram stream — O(tokens) — acceptable precisely
-        # because this is the sample-bounded exact grader leg, never
-        # the deployed path (see BASELINE note above).
-        # materialize=False (r15): the shingle self-join repartitions
-        # BOTH sides on the same key off an identical subtree, so
-        # exchange reuse computes the gram pipeline once anyway —
-        # callers that need a pure-lazy plan (dedup_recall_eval, so
-        # the session plan memo can amortize its per-pass build) skip
-        # the barrier at equal executed volumes.
-        sh = run_materialize(sh)
+
+
+def exploded_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) pairs of any (doc_id, text) frame — bound
+    here once so the batch ops and the maintained gram registry
+    (``streaming/novelty.py``) shingle exactly alike.
+
+    Struct-carried like ``_gram_rows``, never a bare
+    ``explode(grams)``: ``InferFiltersFromGenerate`` adds ``size(grams)
+    > 0 AND isnotnull(grams)`` for a plain explode, and those
+    predicates push BELOW the spread repartition, inlining the full md5
+    gram pipeline TWICE into the single-task scan stage (measured
+    13.7 s vs 0.6 s for ``contamination_check``'s corpus side at
+    sf0.1). The non-trivial generator blocks the inference and keeps
+    the hashing after the fan-out."""
+    return (
+        _doc_grams(docs)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr("transform(grams, x -> named_struct('shingle', x))")
+            ).alias("g"),
+        )
+        .select("doc_id", "g.shingle")
+    )
+
+
+def _member_ids(cands: DataFrame, a: str, b: str) -> DataFrame:
+    """(doc_id) — the distinct docs on either side of a candidate-pair
+    frame with id columns ``a`` and ``b``."""
+    return (
+        cands.select(F.col(a).alias("doc_id"))
+        .union(cands.select(F.col(b).alias("doc_id")))
+        .distinct()
+    )
+
+
+def _member_grams(docs: DataFrame, members: DataFrame) -> DataFrame:
+    """(doc_id, grams) for the docs in ``members`` only: the semi-join
+    prunes the documents frame BEFORE the md5 gram projection runs, so
+    verification hashes the candidate sliver, never the corpus."""
+    return _doc_grams(docs.join(members, "doc_id", "left_semi"))
+
+
+def _jaccard(ga, gb):
+    """|A ∩ B| / |A ∪ B| of two distinct-gram arrays."""
+    inter = F.size(F.array_intersect(ga, gb))
+    return F.try_divide(inter, F.size(ga) + F.size(gb) - inter)
+
+
+def _containment(ga, gb):
+    """C(A→B) = |A ∩ B| / |A| — asymmetric, A is the contained side."""
+    return F.try_divide(F.size(F.array_intersect(ga, gb)), F.size(ga))
+
+
+# (output column, score function over two gram arrays, keep threshold)
+_JACCARD = ("jaccard", _jaccard, JACCARD_THRESHOLD)
+_CONTAINMENT = ("containment", _containment, CONTAINMENT_THRESHOLD)
+
+
+def _verify(
+    cands: DataFrame, grams: DataFrame, a: str, b: str, measure
+) -> DataFrame:
+    """(a, b, score) — candidate pairs joined to both sides' gram
+    arrays, scored exactly by ``measure`` (``_JACCARD`` or
+    ``_CONTAINMENT``) and thresholded.
+
+    The score is a try_divide: a banded doc can have < 3 words (>= 5
+    chars, 1-2 tokens) and so an empty gram set, and the 0/0 that
+    makes would kill the job under ANSI mode; NULL drops the pair at
+    the threshold instead, as the oracles' degenerate guards do."""
+    name, score, threshold = measure
+    ga = grams.select(F.col("doc_id").alias(a), F.col("grams").alias("ga"))
+    gb = grams.select(F.col("doc_id").alias(b), F.col("grams").alias("gb"))
+    return (
+        cands.join(ga, a)
+        .join(gb, b)
+        .select(a, b, score(F.col("ga"), F.col("gb")).alias(name))
+        .where(F.col(name) >= threshold)
+    )
+
+
+def _best_match(verified: DataFrame, score: str) -> DataFrame:
+    """(doc_id, dup_of, score) — the best ``dup_of`` per ``doc_id``:
+    highest score, ties to the lowest ``dup_of`` id.
+
+    ONE map-side-combined hash aggregate (guide §2.3 "aggregate before
+    you shuffle"): min(struct(-score, dup_of)) is the argmax, and
+    partial aggregation shrinks the shuffle to one row per doc_id — a
+    row_number sort-window pays a full sort of the verified stream for
+    the same answer. Scores are ratios of BIGINT counts, so -x is
+    exact, with no sign-zero or NaN edge (NULL scores never pass the
+    verify threshold)."""
+    best = verified.groupBy("doc_id").agg(
+        F.min(
+            F.struct(
+                (-F.col(score)).alias("neg_score"),
+                F.col("dup_of").alias("dup_of"),
+            )
+        ).alias("b")
+    )
+    return best.select(
+        "doc_id",
+        F.col("b.dup_of").alias("dup_of"),
+        (-F.col("b.neg_score")).alias(score),
+    )
+
+
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact word-3-gram Jaccard for every pair sharing >=1 shingle,
+    kept when >= JACCARD_THRESHOLD — the exact O(pairs) baseline the
+    LSH tier replaces at scale.
+
+    BASELINE — deploy ``dedup_lsh_verified`` at scale: it computes the
+    same exact Jaccard but only for band-collision candidates.
+
+    Each doc's distinct-gram array is exploded CARRYING ITS OWN SIZE
+    (``_gram_rows``), so the intersection count and both set sizes
+    come out of the one co-occurrence aggregate — no separate sizes
+    branch, no joins back. The shingle self-join repartitions both
+    sides on one key off an identical subtree, so exchange reuse runs
+    the gram pipeline once, and the pair generation stays distributed
+    across the shuffle (a per-shingle collect_list + in-bucket
+    expansion was tried and concentrates a hot shingle's C(n,2) pairs
+    into one array in one task — 5x slower on the near-dup-heavy
+    corpus)."""
+    sh = _gram_rows(load_table(spark, sf_dir, "documents", spread=True))
     a, b = sh.alias("a"), sh.alias("b")
     pair_counts = (
         a.join(
@@ -525,9 +630,7 @@ def ngram_jaccard_pairs(
     ).where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
-def lsh_verified_pairs(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete scale-path dedup pipeline: MinHash → banded LSH
     candidates → exact word-3-gram Jaccard computed ONLY on candidate
     pairs → threshold. Unlike ``ngram_jaccard_pairs`` (which joins on
@@ -544,25 +647,9 @@ def lsh_verified_pairs(
     3-grams on BOTH join branches — the previous shape — is the
     difference between two corpus-wide hash passes and two passes over
     the near-dup sliver."""
-    # The bucket aggregate feeds BOTH the pair expansion and the
-    # member set — materialize it once per run by default (lazy
-    # localCheckpoint, the guide §3.3 plan-truncation remedy; the
-    # frame is multi-member buckets, far smaller than the corpus, and
-    # still computed from parquet inside every run).
-    # materialize=False (r15): both consumers aggregate over the SAME
-    # band exchange, so exchange reuse runs the signature pipeline
-    # once regardless (pinned at runtime by
-    # tests/test_plan_hygiene.py::test_lsh_verified_reuses_bucket_
-    # exchange_at_runtime) — callers that need a pure-lazy plan
-    # (dedup_cross_modal, dedup_recall_eval: the session plan memo
-    # amortizes their per-pass build) skip the barrier; A/B at sf0.1
-    # measured equal-or-better exec without it.
     buckets = _lsh_buckets(spark, sf_dir)
-    if materialize:
-        buckets = run_materialize(buckets)
-    cands = _pairs_from_buckets(buckets)
     return _verified_from_buckets(
-        spark, sf_dir, buckets, cands, materialize=materialize
+        spark, sf_dir, buckets, _pairs_from_buckets(buckets)
     )
 
 
@@ -571,47 +658,28 @@ def _verified_from_buckets(
     sf_dir: str,
     buckets: DataFrame,
     cands: DataFrame,
-    materialize: bool = True,
 ) -> DataFrame:
     """The exact-Jaccard verification tail of ``lsh_verified_pairs``
     over an already-built buckets frame and its candidate pairs —
     split out (r14) so ``dedup_recall_eval`` can grade the SAME
     executed pipeline without re-running the bucket aggregation for
     its candidate and verified legs separately."""
+    # Lazy by design, no barrier on the buckets or the member grams.
+    # Both bucket consumers aggregate over the SAME band exchange, so
+    # exchange reuse runs the signature pipeline once (pinned at
+    # runtime by tests/test_plan_hygiene.py::
+    # test_lsh_verified_reuses_bucket_exchange_at_runtime). The pair
+    # sides key on doc_a vs doc_b, so the gram projection can run once
+    # per side — but over the semi-join-pruned near-dup sliver. The
+    # r15 alternating A/B at sf0.1 against the checkpointed tail:
+    # dedup_cross_modal 4.36 → 3.93 s median, dedup_recall_eval
+    # equal-or-faster, identical rows; and a lazy build lets the
+    # session plan memo amortize its construction across passes.
     members = buckets.select(F.explode("ids").alias("doc_id")).distinct()
-    grams = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .join(members, "doc_id", "left_semi")
-        .select("doc_id", F.expr(_word_shingles_spark()).alias("grams"))
+    grams = _member_grams(
+        load_table(spark, sf_dir, "documents", spread=True), members
     )
-    if materialize:
-        # both pair sides consume the pruned gram table; the barrier
-        # computes it once per run. materialize=False: the sides key
-        # on doc_a vs doc_b, so exchange reuse does NOT collapse them
-        # — the gram projection can run once per side — but the input
-        # is the semi-join-pruned near-dup sliver (members ≪ corpus),
-        # and the r15 A/B at sf0.1 measured the barrier-free form
-        # equal-or-faster end to end in both consumers once the plan
-        # memo amortizes the build.
-        grams = run_materialize(grams)
-    ga = grams.select(
-        F.col("doc_id").alias("doc_a"), F.col("grams").alias("grams_a")
-    )
-    gb = grams.select(
-        F.col("doc_id").alias("doc_b"), F.col("grams").alias("grams_b")
-    )
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = F.size("grams_a") + F.size("grams_b") - inter
-    # try_divide: two banded docs can both have < 3 words (>= 5 chars,
-    # 1-2 tokens) → empty gram sets → 0/0, which under ANSI mode would
-    # kill the job; NULL drops the pair at the threshold instead, and
-    # the oracle's degenerate guard does the same.
-    return (
-        cands.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select("doc_a", "doc_b", F.try_divide(inter, union).alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _verify(cands, grams, "doc_a", "doc_b", _JACCARD)
 
 
 _SIGS_SQL = (
@@ -743,56 +811,11 @@ def _verified_best_match(d: DataFrame, cands: DataFrame) -> DataFrame:
     runtime exchange reuse only collapsed part of the duplication,
     measured r14)."""
     cands = run_materialize(cands)
-    member_ids = (
-        cands.select("doc_id")
-        .union(cands.select(F.col("dup_of").alias("doc_id")))
-        .distinct()
-    )
     grams = run_materialize(
-        d.join(member_ids, "doc_id", "left_semi")
-        .select("doc_id", F.expr(_word_shingles_spark()).alias("grams"))
+        _member_grams(d, _member_ids(cands, "doc_id", "dup_of"))
     )
-    gn = grams.select(
-        F.col("doc_id").alias("doc_id"), F.col("grams").alias("grams_n")
-    )
-    gc = grams.select(
-        F.col("doc_id").alias("dup_of"), F.col("grams").alias("grams_c")
-    )
-    inter = F.size(F.array_intersect("grams_n", "grams_c"))
-    union = F.size("grams_n") + F.size("grams_c") - inter
-    # try_divide: see lsh_verified_pairs — gram-less banded pairs are
-    # 0/0, an ANSI-mode crash as a plain division.
-    verified = (
-        cands.join(gn, "doc_id")
-        .join(gc, "dup_of")
-        .select(
-            "doc_id", "dup_of", F.try_divide(inter, union).alias("jaccard")
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-    # Best corpus match per new doc via ONE map-side-combined hash
-    # aggregate (r14, guide §2.3 "aggregate before you shuffle"):
-    # min(struct(-jaccard, dup_of)) picks highest jaccard with ties to
-    # the lowest corpus id — the row_number sort-window this replaces
-    # paid a full sort of the verified stream for the same argmax, and
-    # partial aggregation shrinks the shuffle to one row per doc_id.
-    # jaccard is a ratio of BIGINT counts: -x is exact, no sign-zero
-    # or NaN edge (NULL jaccard rows are already filtered above).
-    best = (
-        verified.groupBy("doc_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("jaccard")).alias("neg_j"),
-                    F.col("dup_of").alias("dup_of"),
-                )
-            ).alias("b")
-        )
-    )
-    return best.select(
-        "doc_id",
-        F.col("b.dup_of").alias("dup_of"),
-        (-F.col("b.neg_j")).alias("jaccard"),
+    return _best_match(
+        _verify(cands, grams, "doc_id", "dup_of", _JACCARD), "jaccard"
     )
 
 
@@ -839,6 +862,24 @@ def _band_key():
     return F.concat_ws(":", F.col("band").cast("string"), F.col("band_sig"))
 
 
+def _band_key_candidates(batch: DataFrame, corpus: DataFrame) -> DataFrame:
+    """(doc_id, dup_of) — every (batch doc, corpus doc) pair agreeing
+    on a whole band: the batch's (doc_id, text) rows are banded and
+    equi-joined on ``band_key`` into an at-rest corpus band table
+    (``corpus_bands_ingest``). One definition for the batch form and
+    the streaming ingest epoch (``streaming/ingest.py``)."""
+    bands = _bands_from(batch).select("doc_id", _band_key().alias("band_key"))
+    return (
+        bands.alias("n")
+        .join(corpus.alias("c"), "band_key")
+        .select(
+            F.col("n.doc_id").alias("doc_id"),
+            F.col("c.doc_id").alias("dup_of"),
+        )
+        .distinct()
+    )
+
+
 def dedup_incremental_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -853,19 +894,9 @@ def dedup_incremental_materialized(
     corpus = corpus_bands_ingest(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents", spread=True)
     is_new = (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW_RESIDUE
-    batch = _bands_from(d.where(is_new)).select(
-        "doc_id", _band_key().alias("band_key")
+    return _verified_best_match(
+        d, _band_key_candidates(d.where(is_new), corpus)
     )
-    cands = (
-        batch.alias("n")
-        .join(corpus.alias("c"), "band_key")
-        .select(
-            F.col("n.doc_id").alias("doc_id"),
-            F.col("c.doc_id").alias("dup_of"),
-        )
-        .distinct()
-    )
-    return _verified_best_match(d, cands)
 
 
 def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,11 +919,7 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join — no all-pairs anywhere."""
     from ..similarity import ann as _ann
 
-    # materialize=False (r15): keeps this build pure-lazy so the
-    # session plan memo amortizes its per-pass construction; the
-    # alternating A/B at sf0.1 measured the barrier-free form faster
-    # even per-execution (4.36 → 3.93 s median), identical rows.
-    text_pairs = lsh_verified_pairs(spark, sf_dir, materialize=False)
+    text_pairs = lsh_verified_pairs(spark, sf_dir)
     # null-vector guard: see ann_lsh_bucketed — _sig_col's coalesce
     # barrier (r14) makes the old drop-at-join of null sigs explicit.
     e = (
@@ -1022,44 +1049,20 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_shared / n_bench): the question is how much of the eval doc
     leaked, not how big the training doc is.
 
-    BOTH explodes go through the struct-carried transform (not a bare
-    ``explode(grams)``) — same reason as ``ngram_jaccard_pairs``, plus
-    one more: ``InferFiltersFromGenerate`` adds ``size(grams) > 0 AND
-    isnotnull(grams)`` for a plain explode, and those predicates push
-    BELOW the spread repartition, inlining the full md5 gram pipeline
-    TWICE into the single-task scan stage (measured 13.7 s vs 0.6 s
-    for the corpus side at sf0.1). The non-trivial generator blocks
-    the inference and keeps the hashing after the fan-out."""
+    BOTH explodes are the struct-carried ``_gram_rows`` /
+    ``exploded_shingles`` (the ``InferFiltersFromGenerate`` guard), so
+    the hashing runs after the spread fan-out, never in the scan
+    stage."""
     d = load_table(spark, sf_dir, "documents", spread=True)
-    grams = d.select(
-        "doc_id", F.expr(_word_shingles_spark()).alias("grams")
-    )
     is_bench = (
         F.col("doc_id") % CONTAM_BENCH_MOD == CONTAM_BENCH_RESIDUE
     )
-    bench = (
-        grams.where(is_bench)
-        .select(
-            F.col("doc_id").alias("bench_id"),
-            F.explode(
-                F.expr(
-                    "transform(grams, x -> "
-                    "named_struct('shingle', x, 'n_bench', size(grams)))"
-                )
-            ).alias("g"),
-        )
-        .select("bench_id", "g.shingle", "g.n_bench")
+    bench = _gram_rows(d.where(is_bench)).select(
+        F.col("doc_id").alias("bench_id"),
+        "shingle",
+        F.col("n_sh").alias("n_bench"),
     )
-    corpus = (
-        grams.where(~is_bench)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr("transform(grams, x -> named_struct('shingle', x))")
-            ).alias("g"),
-        )
-        .select("doc_id", "g.shingle")
-    )
+    corpus = exploded_shingles(d.where(~is_bench))
     return score_contamination_against(corpus, bench)
 
 
@@ -1373,18 +1376,16 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapsed by exchange reuse at runtime (the
     # test_lsh_verified_reuses_bucket_exchange pin). Alternating A/B
     # at sf0.1: 5.61 → 4.57 s median, identical rows.
-    truth = ngram_jaccard_pairs(spark, sf_dir, materialize=False).select(
-        "doc_a", "doc_b"
-    )
+    truth = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     buckets = _lsh_buckets(spark, sf_dir)
     # cands deliberately NOT checkpointed: its verify-join consumer
     # wants the planner's stats (a LogicalRDD barrier hides them and
     # degraded the join strategy — A/B'd r14: checkpointing cands
     # measured slower than recomputing the cheap expansion twice).
     cands = _pairs_from_buckets(buckets).select("doc_a", "doc_b")
-    found = _verified_from_buckets(
-        spark, sf_dir, buckets, cands, materialize=False
-    ).select("doc_a", "doc_b")
+    found = _verified_from_buckets(spark, sf_dir, buckets, cands).select(
+        "doc_a", "doc_b"
+    )
     tf = (
         truth.withColumn("t", F.lit(1))
         .join(
@@ -1409,30 +1410,6 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.try_divide(F.col("n_verified"), F.col("n_candidates")), 6
         ).alias("candidate_precision"),
-    )
-
-
-CONTAINMENT_THRESHOLD = 0.9
-
-
-def _gram_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle, n_sh) — each doc's distinct word-3-gram set
-    exploded with its size riding along (the struct-carried transform,
-    see ``ngram_jaccard_pairs`` for why a bare explode is slower)."""
-    return (
-        docs.select(
-            "doc_id", F.expr(_word_shingles_spark()).alias("grams")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(grams, x -> "
-                    "named_struct('shingle', x, 'n_sh', size(grams)))"
-                )
-            ).alias("g"),
-        )
-        .select("doc_id", "g.shingle", "g.n_sh")
     )
 
 
@@ -1462,6 +1439,30 @@ def _containment_prefix(sh: DataFrame, df_tab: DataFrame) -> DataFrame:
     )
 
 
+def _fragment_candidates(
+    new_sh: DataFrame, df_tab: DataFrame, cor_sh: DataFrame
+) -> DataFrame:
+    """(doc_id, dup_of) — each new doc's prefix grams (ranked by
+    ``df_tab``, see ``_containment_prefix``) equi-joined on the shingle
+    into the corpus gram rows, kept where the corpus doc's gram set is
+    at least as large. Both sides are ``_gram_rows``-shaped. One
+    definition for the batch fragment form, the streaming epoch
+    (``streaming/fragment_ingest.py``) and the stale-df test."""
+    a, b = _containment_prefix(new_sh, df_tab).alias("a"), cor_sh.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.n_sh") <= F.col("b.n_sh")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_id"),
+            F.col("b.doc_id").alias("dup_of"),
+        )
+        .distinct()
+    )
+
+
 def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment dedup: (contained, container) pairs
     where C(A→B) = |grams(A) ∩ grams(B)| / |grams(A)| ≥ threshold and
@@ -1485,8 +1486,8 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram-keyed df aggregate plus one doc-keyed row_number window —
     both O(tokens) shuffles, the same order as the LSH tier's gram
     passes. Verification computes exact containment over the
-    semi-join-pruned gram arrays of candidates only (the
-    ``_verified_best_match`` idiom) — never all pairs. Because the
+    semi-join-pruned gram arrays of candidates only
+    (``_member_grams`` + ``_verify``) — never all pairs. Because the
     filter is lossless, the operator's contract is the pure
     containment definition; the oracle encodes the same prefix
     candidates only to stay plan-faithful, not because the rule
@@ -1530,33 +1531,10 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    member_ids = (
-        cands.select(F.col("contained").alias("doc_id"))
-        .union(cands.select(F.col("container").alias("doc_id")))
-        .distinct()
-    )
     grams = run_materialize(
-        d.join(member_ids, "doc_id", "left_semi")
-        .select("doc_id", F.expr(_word_shingles_spark()).alias("grams"))
+        _member_grams(d, _member_ids(cands, "contained", "container"))
     )
-    ga = grams.select(
-        F.col("doc_id").alias("contained"), F.col("grams").alias("ga")
-    )
-    gb = grams.select(
-        F.col("doc_id").alias("container"), F.col("grams").alias("gb")
-    )
-    inter = F.size(F.array_intersect("ga", "gb"))
-    # try_divide: a gram-less contained side is 0/0 under ANSI.
-    return (
-        cands.join(ga, "contained")
-        .join(gb, "container")
-        .select(
-            "contained",
-            "container",
-            F.try_divide(inter, F.size("ga")).alias("containment"),
-        )
-        .where(F.col("containment") >= CONTAINMENT_THRESHOLD)
-    )
+    return _verify(cands, grams, "contained", "container", _CONTAINMENT)
 
 
 def _containment_best_match(d: DataFrame, cands: DataFrame) -> DataFrame:
@@ -1564,45 +1542,18 @@ def _containment_best_match(d: DataFrame, cands: DataFrame) -> DataFrame:
     containment over the semi-join-pruned gram arrays of
     ``(doc_id, dup_of)`` candidate pairs, thresholded, then the best
     container per contained doc (highest containment, ties to the
-    lowest container id). Shared by the batch fragment form and the
-    streaming ingest twin so the verify rule can never drift.
-    Multiply-consumed frames materialize once per run (r14, the
-    ``_verified_best_match`` pattern)."""
+    lowest container id — the one ``_best_match`` rule). Shared by the
+    batch fragment form and the streaming ingest twin so the verify
+    rule can never drift. ``cands`` and ``grams`` are each consumed
+    more than once and materialize once per run, as in
+    ``_verified_best_match``."""
     cands = run_materialize(cands)
-    member_ids = (
-        cands.select("doc_id")
-        .union(cands.select(F.col("dup_of").alias("doc_id")))
-        .distinct()
-    )
     grams = run_materialize(
-        d.join(member_ids, "doc_id", "left_semi")
-        .select("doc_id", F.expr(_word_shingles_spark()).alias("grams"))
+        _member_grams(d, _member_ids(cands, "doc_id", "dup_of"))
     )
-    ga = grams.select(
-        F.col("doc_id").alias("doc_id"), F.col("grams").alias("ga")
-    )
-    gb = grams.select(
-        F.col("doc_id").alias("dup_of"), F.col("grams").alias("gb")
-    )
-    inter = F.size(F.array_intersect("ga", "gb"))
-    verified = (
-        cands.join(ga, "doc_id")
-        .join(gb, "dup_of")
-        .select(
-            "doc_id", "dup_of",
-            F.try_divide(inter, F.size("ga")).alias("containment"),
-        )
-        .where(F.col("containment") >= CONTAINMENT_THRESHOLD)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("containment").desc(), F.col("dup_of")
-    )
-    return (
-        verified.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", "dup_of", "containment")
+    return _best_match(
+        _verify(cands, grams, "doc_id", "dup_of", _CONTAINMENT),
+        "containment",
     )
 
 
@@ -1637,21 +1588,9 @@ def fragment_pairs_incremental(
     frozen_df = cor_sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("df")
     )
-    prefix = _containment_prefix(new_sh, frozen_df)
-    a, b = prefix.alias("a"), cor_sh.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.n_sh") <= F.col("b.n_sh")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("dup_of"),
-        )
-        .distinct()
+    return _containment_best_match(
+        d, _fragment_candidates(new_sh, frozen_df, cor_sh)
     )
-    return _containment_best_match(d, cands)
 
 
 # Staged split (the vocab pattern): the module is REGISTERED, so the
@@ -1678,56 +1617,18 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the reference map-side, and aggregates per doc. No shuffle
     of the corpus on text. The struct-carried explode keeps the md5
     gram pipeline out of the scan stage (the
-    ``InferFiltersFromGenerate`` trap, see ``contamination_check``).
+    ``InferFiltersFromGenerate`` trap, see ``exploded_shingles``).
     Docs with < 3 tokens have no grams and emit nothing — same
     contract as the oracle's ``unnest`` of an empty list.
 
     Columns: doc_id, n_grams, n_novel, novelty."""
     d = load_table(spark, sf_dir, "documents", spread=True)
-    grams = d.select(
-        "doc_id", F.expr(_word_shingles_spark()).alias("grams")
-    )
     is_bench = (
         F.col("doc_id") % CONTAM_BENCH_MOD == CONTAM_BENCH_RESIDUE
     )
-    ref = (
-        grams.where(is_bench)
-        .select(
-            F.explode(
-                F.expr("transform(grams, x -> named_struct('shingle', x))")
-            ).alias("g")
-        )
-        .select("g.shingle")
-        .distinct()
-    )
-    corpus = (
-        grams.where(~is_bench)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr("transform(grams, x -> named_struct('shingle', x))")
-            ).alias("g"),
-        )
-        .select("doc_id", "g.shingle")
-    )
+    ref = exploded_shingles(d.where(is_bench)).select("shingle").distinct()
+    corpus = exploded_shingles(d.where(~is_bench))
     return score_novelty_against(corpus, ref)
-
-
-def exploded_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) pairs of any (doc_id, text) frame through
-    the SAME struct-carried explode the inline op uses (the
-    ``InferFiltersFromGenerate`` guard) — bound here once so the
-    maintained gram registry (``streaming/novelty.py``) shingles
-    exactly like the batch ops."""
-    grams = docs.select(
-        "doc_id", F.expr(_word_shingles_spark()).alias("grams")
-    )
-    return grams.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(grams, x -> named_struct('shingle', x))")
-        ).alias("g"),
-    ).select("doc_id", "g.shingle")
 
 
 def score_novelty_against(corpus: DataFrame, ref: DataFrame) -> DataFrame:

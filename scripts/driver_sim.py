@@ -1,10 +1,14 @@
-"""Simulate the driver's correctness pass: run every registry query at
-sf0.01 with its DuckDB oracle, timing each, in registry order.
+"""Correctness pass over the ``__spark_entry__`` contract.
+
+Imports ``__spark_entry__``, smoke-runs ``entry(spark)`` (sf0.001),
+then runs every registered query at sf0.01 and hash-compares it with
+its DuckDB oracle through ``tests/oracle_utils.py`` (row count,
+sorted-column schema, canonical value multiset). Prints one MATCH/MISMATCH line per query with its
+Spark and oracle seconds, a JSON total, and last ``RESULT: ALL MATCH``
+or ``RESULT: FAILS: [...]``; exits 1 on any failure.
 
 Usage: python scripts/driver_sim.py [--names q1,q2] [--sf-dir DIR]
-Prints per-query wall seconds (spark collect + oracle) and a total, so we
-can see whether the full 66-query registry fits a plausible driver time
-budget and which queries dominate.
+(~2-4 min for the full registry on local[8])
 """
 
 from __future__ import annotations
@@ -17,11 +21,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -29,60 +28,53 @@ def main() -> None:
     ap.add_argument("--names", default=None)
     args = ap.parse_args()
 
-    import duckdb
+    import __spark_entry__ as E
 
-    from customer_churn_prediction_spark.plans import get_oracles, get_queries
     from customer_churn_prediction_spark.session import get_spark
+    from tests.oracle_utils import mismatch, run_oracle
 
-    spark = get_spark()
-    queries = get_queries()
-    oracles = get_oracles()
+    spark = get_spark(
+        app_name="entry-sim", master="local[8]", shuffle_partitions=8
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    print("entry():", E.entry(spark).count(), "rows", flush=True)
 
+    queries, oracles = E.queries(), E.oracle_sql()
     names = args.names.split(",") if args.names else list(queries)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(args.sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-
-    timings: dict[str, dict] = {}
+    fails = []
     total0 = time.perf_counter()
     for name in names:
-        fn = queries[name]
         t0 = time.perf_counter()
-        err = None
-        n_rows = None
+        t_oracle = 0.0
         try:
-            rows = fn(spark, args.sf_dir).collect()
-            n_rows = len(rows)
-        except Exception as exc:  # noqa: BLE001
-            err = f"{type(exc).__name__}: {exc}"[:200]
-        t_spark = time.perf_counter() - t0
-        t1 = time.perf_counter()
-        o_rows = None
-        if name in oracles and err is None:
-            try:
-                o_rows = len(con.execute(oracles[name]).fetchall())
-            except Exception as exc:  # noqa: BLE001
-                err = f"oracle {type(exc).__name__}: {exc}"[:200]
-        t_oracle = time.perf_counter() - t1
-        timings[name] = {
-            "spark_s": round(t_spark, 2),
-            "oracle_s": round(t_oracle, 2),
-            "rows": n_rows,
-            "oracle_rows": o_rows,
-            "err": err,
-        }
+            sdf = queries[name](spark, args.sf_dir).toPandas()
+            t_spark = time.perf_counter() - t0
+            if name not in oracles:
+                print(f"  {name}: rows-only, {len(sdf)} rows "
+                      f"spark={t_spark:.2f}s", flush=True)
+                continue
+            t1 = time.perf_counter()
+            problem = mismatch(sdf, run_oracle(oracles[name], args.sf_dir))
+            t_oracle = time.perf_counter() - t1
+            n_rows = len(sdf)
+        except Exception as exc:  # record, don't abort the pass
+            t_spark = time.perf_counter() - t0
+            problem, n_rows = f"{type(exc).__name__}: {exc}"[:200], None
         print(
-            f"{name:32s} spark={t_spark:6.2f}s oracle={t_oracle:5.2f}s "
-            f"rows={n_rows} orows={o_rows} {err or ''}",
+            f"  {name}: {'MATCH' if problem is None else 'MISMATCH'} "
+            f"({n_rows} rows) spark={t_spark:.2f}s oracle={t_oracle:.2f}s"
+            + (f" {problem}" if problem else ""),
             flush=True,
         )
+        if problem is not None:
+            fails.append(name)
     total = time.perf_counter() - total0
     print(json.dumps({"total_s": round(total, 1), "n": len(names)}))
+    print("RESULT:", "ALL MATCH" if not fails else f"FAILS: {fails}")
+    spark.stop()
+    if fails:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -36,9 +36,9 @@ GUARDED = [
     "dedup_containment",
     "dedup_incremental",
     "dedup_cross_modal",
-    # r15: same barrier class (_containment_best_match ckpts) — its
-    # scan profile went {} when the goldens were regenerated after the
-    # r14 barriers, so the runtime guard is its only volume guard now
+    # same barrier class: _containment_best_match materializes its
+    # candidates and member grams (run_materialize), so its scan
+    # profile is {} and the runtime guard is its only volume guard
     "dedup_fragments_incremental",
     # the flagship: its scan profile keeps only the widest scan of each
     # table, so it cannot tell one scan from several; source records

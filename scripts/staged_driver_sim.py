@@ -6,8 +6,8 @@ PERMANENTLY (`plans/registry.staged_modules()`); their oracle parity
 lives inside pytest files, invisible to the CORRECTNESS_r{N}.json
 artifact chain. This script closes that gap: it runs every staged
 query against its DuckDB oracle at the driver's own scale factor
-(sf0.01) with the driver's own compare — row count, sorted-column
-schema, canonicalized value multiset — and writes
+(sf0.01) with the one oracle compare (``tests/oracle_utils.py``:
+row count, sorted-column schema, canonicalized value multiset) and writes
 ``STAGED_CORRECTNESS.json`` at the repo root with the driver's exact
 row schema, so the artifact can be cited next to CORRECTNESS_r{N}.
 
@@ -17,7 +17,6 @@ Usage: python scripts/staged_driver_sim.py   (~1-2 min on local[8])
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import traceback
@@ -29,33 +28,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_DIR", "/root/testdata/sf0.01")
 OUT = os.path.join(REPO, "STAGED_CORRECTNESS.json")
 
 
-def _canon(v):
-    """Driver-compare canonical form (order-insensitive, value-exact)."""
-    if v is None:
-        return "N"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    return str(v)
-
-
 def main() -> None:
-    import duckdb
-
-    from customer_churn_prediction_spark.catalog import TABLES
     from customer_churn_prediction_spark.plans import registry
     from customer_churn_prediction_spark.session import get_spark
+    from tests.oracle_utils import mismatch, run_oracle
 
     spark = get_spark(
         app_name="staged-driver-sim", master="local[8]",
         shuffle_partitions=8,
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
 
     oracles: dict[str, str] = {}
     for mod in registry.staged_modules():
@@ -72,21 +54,11 @@ def main() -> None:
         try:
             sdf = fn(spark, SF_DIR).toPandas()
             row["spark_rows"] = len(sdf)
-            odf = con.execute(oracles[name]).df()
+            odf = run_oracle(oracles[name], SF_DIR)
             row["oracle_rows"] = len(odf)
-            sc, oc = sorted(sdf.columns), sorted(odf.columns)
             row["rows_match"] = len(sdf) == len(odf)
-            row["schema_match"] = sc == oc
-            if row["rows_match"] and row["schema_match"]:
-                s = sorted(
-                    tuple(_canon(v) for v in r)
-                    for r in sdf[sc].itertuples(index=False, name=None)
-                )
-                o = sorted(
-                    tuple(_canon(v) for v in r)
-                    for r in odf[oc].itertuples(index=False, name=None)
-                )
-                row["hash_match"] = s == o
+            row["schema_match"] = sorted(sdf.columns) == sorted(odf.columns)
+            row["hash_match"] = mismatch(sdf, odf) is None
         except Exception as exc:  # record, don't abort the artifact
             row["err"] = f"{type(exc).__name__}: {exc}"
             traceback.print_exc()

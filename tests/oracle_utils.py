@@ -1,13 +1,16 @@
-"""Local re-implementation of the driver's oracle comparison.
+"""The one oracle comparison: a Spark result against its DuckDB oracle.
 
 Runs a Spark query and its DuckDB oracle SQL on the same parquet
 tables, then compares row count, column names, and order-insensitive
-values — the same gate CORRECTNESS_r{N}.json records.
+values — the same gate CORRECTNESS_r{N}.json records. pytest,
+``scripts/driver_sim.py``, ``scripts/staged_driver_sim.py`` and the
+benchmark's output checks all compare through this module.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 
@@ -15,12 +18,16 @@ from customer_churn_prediction_spark.catalog import TABLES
 
 
 def run_oracle(sql: str, sf_dir: str):
+    """The oracle's result as a pandas frame, over one view per catalog
+    table that exists under ``sf_dir`` (a crafted fixture may hold only
+    ``documents``)."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(
+                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{path}'"
+            )
     return con.execute(sql).df()
 
 
@@ -46,20 +53,24 @@ def canonical_rows(df) -> list[tuple]:
     return out
 
 
-def assert_matches_oracle(spark_df, oracle_sql: str, sf_dir: str):
-    sdf = spark_df.toPandas()
-    odf = run_oracle(oracle_sql, sf_dir)
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"column mismatch: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-    )
-    assert len(sdf) == len(odf), f"row count: spark={len(sdf)} oracle={len(odf)}"
-    srows = canonical_rows(sdf)
-    orows = canonical_rows(odf)
+def mismatch(sdf, odf) -> str | None:
+    """Why two pandas frames differ under the oracle compare, or None
+    when they match."""
+    sc, oc = sorted(sdf.columns), sorted(odf.columns)
+    if sc != oc:
+        return f"column mismatch: spark={sc} oracle={oc}"
+    if len(sdf) != len(odf):
+        return f"row count: spark={len(sdf)} oracle={len(odf)}"
+    srows, orows = canonical_rows(sdf), canonical_rows(odf)
     if srows != orows:
-        diffs = [
-            (a, b) for a, b in zip(srows, orows) if a != b
-        ][:5]
-        raise AssertionError(f"value mismatch; first diffs: {diffs}")
+        diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:5]
+        return f"value mismatch; first diffs: {diffs}"
+    return None
+
+
+def assert_matches_oracle(spark_df, oracle_sql: str, sf_dir: str):
+    problem = mismatch(spark_df.toPandas(), run_oracle(oracle_sql, sf_dir))
+    assert problem is None, problem
 
 
 def assert_df_equal(df_a, df_b):

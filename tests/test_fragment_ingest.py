@@ -156,20 +156,7 @@ def test_prefix_losslessness_under_stale_df(spark, sf_dir):
     stale_df = new_sh.select("shingle").distinct().withColumn(
         "df", F.lit(1)
     )
-    prefix = dedup._containment_prefix(new_sh, stale_df)
-    a, b = prefix.alias("a"), cor_sh.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.n_sh") <= F.col("b.n_sh")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("dup_of"),
-        )
-        .distinct()
-    )
+    cands = dedup._fragment_candidates(new_sh, stale_df, cor_sh)
     got = _rows(dedup._containment_best_match(d, cands))
     want = _rows(dedup.fragment_pairs_incremental(spark, sf_dir))
     assert got == want and len(got) > 0

@@ -21,6 +21,8 @@ from customer_churn_prediction_spark.constants import (
 )
 from customer_churn_prediction_spark.ml import monitoring
 
+from .oracle_utils import assert_matches_oracle
+
 
 def test_psi_terms_nonnegative_and_total_consistent(spark, sf_dir):
     rows = monitoring.drift_psi(spark, sf_dir).collect()
@@ -67,6 +69,25 @@ def test_lift_table_internally_consistent(spark, sf_dir):
     # avg_score decreases with band (bands ARE score ranges)
     scores = [r.avg_score for r in rows]
     assert scores == sorted(scores, reverse=True)
+
+
+@pytest.mark.parametrize("seed", [[5, 928], [9]], ids=["5-928", "9"])
+def test_lift_oracle_parity_on_half_boundary_bands(spark, tmp_path, seed):
+    """On these resampled snapshots a band's mean score sits exactly on
+    a 6-dp rounding half-boundary (seed [5, 928], band 4: 5478054/12
+    micro = 0.4565045; seed 9, bands 2 and 9: 3177630/12 and
+    13414989/14 micro). Summed as floats in engine-dependent order,
+    the mean landed one ulp either side of it and the two engines
+    rounded ``avg_score`` apart. Exact per-band sums give both engines
+    the same operands."""
+    from perfbench.inputs import make_snapshot
+
+    snap = make_snapshot(str(tmp_path / "snap"), seed)
+    assert_matches_oracle(
+        monitoring.score_band_lift(spark, snap),
+        monitoring.ORACLES["score_band_lift"],
+        snap,
+    )
 
 
 def test_lift_totals_match_label_class_balance(spark, sf_dir):
