@@ -64,9 +64,15 @@ def put(kind: str, key: Hashable, version: Hashable, value: Any) -> Any:
 def cached(
     kind: str, key: Hashable, version: Hashable, build: Callable[[], Any]
 ) -> Any:
-    """``get``, or ``put`` of ``build()`` on a miss."""
+    """``get``, or ``put`` of ``build()`` on a miss. A stale entry is
+    released before ``build`` runs: Spark's cache matches frames by
+    plan, so an old version's cached frame over the same path would
+    otherwise answer the new build's reads."""
     hit = get(kind, key, version)
-    return hit if hit is not None else put(kind, key, version, build())
+    if hit is not None:
+        return hit
+    _evict((kind, key))
+    return put(kind, key, version, build())
 
 
 def entries(kind: str) -> dict[Hashable, tuple[Hashable, Any]]:

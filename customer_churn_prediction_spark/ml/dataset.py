@@ -10,7 +10,6 @@ always seed (SURVEY §4: never reproduce the seedless splits).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.assembly import feature_assembly
 from ..operators.labeling import label_churn
@@ -47,7 +46,6 @@ FLAGS = [
     "large_group",
     "standard_group",
 ]
-LABEL = "label"
 
 
 def churn_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,13 +53,6 @@ def churn_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = feature_assembly(spark, sf_dir)
     labels = label_churn(spark, sf_dir)
     return feats.join(labels, "c_custkey")
-
-
-def shuffled(df: DataFrame, seed: int = SEED) -> DataFrame:
-    """O1 (RF/randomforest_churn.scala:21): global random re-order —
-    a range-partition shuffle on the random key. Always seeded here
-    (the reference's is seedless and nondeterministic)."""
-    return df.orderBy(F.rand(seed))
 
 
 def train_test_split(

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL
 from .calibration import _FREQ_CAP, _MON_CAP, _MON_WIDTH, _REC_CAP, _REC_WIDTH
-from .monitoring import _PSI_EPS, _PSI_NBINS, psi_from_counts
+from .monitoring import _PSI_EPS, _PSI_NBINS, psi_from_counts, window_rfm
 
 # the scoring snapshot: six months after the training as-of
 ASOF_CURR = "1998-06-30"
@@ -51,19 +51,7 @@ def drift_psi_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_base = F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp")
 
     def feats(cond, asof, tag):
-        return [
-            F.datediff(
-                F.lit(asof).cast("date"),
-                F.max(F.when(cond, F.to_date("o_orderdate"))),
-            ).alias(f"{tag}_rec"),
-            F.count(F.when(cond, F.lit(1))).alias(f"{tag}_freq"),
-            F.round(
-                F.coalesce(
-                    F.sum(F.when(cond, F.col("o_totalprice"))), F.lit(0.0)
-                ),
-                2,
-            ).alias(f"{tag}_mon"),
-        ]
+        return window_rfm(cond, asof, f"{tag}_rec", f"{tag}_freq", f"{tag}_mon")
 
     per_cust = o.groupBy("o_custkey").agg(
         *feats(in_base, ASOF, "b"),

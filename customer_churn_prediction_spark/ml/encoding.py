@@ -50,8 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .. import constants as C
-from ..operators.labeling import label_churn
+from ..operators.labeling import LABEL_ORACLE, label_churn
 
 N_FOLDS = 5
 SMOOTH_M = 20.0
@@ -134,26 +133,8 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ACTIVE_SQL = f"""
-  SELECT DISTINCT o_custkey AS c_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '{C.FEAT_START}'
-    AND o_orderdate <  TIMESTAMP '{C.FEAT_END_EXCL}'
-"""
-_BUYERS_SQL = f"""
-  SELECT DISTINCT o_custkey AS c_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '{C.LABEL_START}'
-    AND o_orderdate <  TIMESTAMP '{C.LABEL_END_EXCL}'
-"""
-
 TARGET_ENCODING_ORACLE = f"""
-WITH active AS ({_ACTIVE_SQL}),
-buyers AS ({_BUYERS_SQL}),
-labeled AS (
-  SELECT a.c_custkey,
-         CAST(CASE WHEN b.c_custkey IS NULL THEN 1 ELSE 0 END AS INTEGER)
-           AS label
-  FROM active a LEFT JOIN buyers b USING (c_custkey)
-),
+WITH labeled AS ({LABEL_ORACLE}),
 detail AS (
   SELECT l.c_custkey, l.label,
          CAST(l.c_custkey % {N_FOLDS} AS INTEGER) AS fold,

@@ -47,39 +47,66 @@ def _sized(data: DataFrame, n_rows: int) -> DataFrame:
     return data.coalesce(parts)
 
 
-def _shared_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sized training frame, cached once and shared by every model
-    job and the feature-vector query, so features ⋈ label is computed
-    once per dataset."""
+def _shared_training_set(spark: SparkSession, sf_dir: str) -> tuple:
+    """(sized training frame, cached frame, row count), cached once and
+    shared by every model job and the feature-vector query, so
+    features ⋈ label is computed and counted once per dataset."""
 
     def fit() -> tuple:
         data = dataset.churn_training_set(spark, sf_dir).cache()
-        return _sized(data, data.count()), data
+        n_rows = data.count()
+        return _sized(data, n_rows), data, n_rows
 
     return memo.cached(
         "ml.training", _cache_key(spark, sf_dir),
         memo.table_version(sf_dir, *_TRAINING_TABLES), fit,
-    )[0]
+    )
 
 
 def _shared_vectorized_split(spark: SparkSession, sf_dir: str) -> tuple:
-    """(fitted-feature train, test, n_train, n_test): every model job
-    shares one feature-pipeline fit and one pair of cached vectorized
-    splits — fit features once, sweep estimators. The feature stages
-    fit on the train split alone, exactly as they would as the leading
-    stages of one composed ``Pipeline`` per model."""
+    """(fitted-feature train, test, training-set row count): every
+    model job shares one feature-pipeline fit and one pair of cached
+    vectorized splits — fit features once, sweep estimators. The
+    feature stages fit on the train split alone, exactly as they would
+    as the leading stages of one composed ``Pipeline`` per model."""
 
     def fit() -> tuple:
-        sized = _shared_training_set(spark, sf_dir)
+        sized, _, n_rows = _shared_training_set(spark, sf_dir)
         train, test = dataset.train_test_split(sized)
         feat = build_feature_pipeline().fit(train)
         train_t = feat.transform(train).select("features", "label").cache()
         test_t = feat.transform(test).select("features", "label").cache()
-        return train_t, test_t, train_t.count(), test_t.count()
+        return train_t, test_t, n_rows
 
     return memo.cached(
         "ml.vectorized", _cache_key(spark, sf_dir),
         memo.table_version(sf_dir, *_TRAINING_TABLES), fit,
+    )
+
+
+def _evaluated_fit(
+    spark: SparkSession, sf_dir: str, model_key: str, profile: str
+) -> dict:
+    """``evaluation.evaluate`` of one fit on the held-out split, plus
+    ``n_train``: the split is exact, so the training side is the
+    training set minus the ``n`` rows scored."""
+    train, test, n_rows = _shared_vectorized_split(spark, sf_dir)
+    model = models.make_estimator(model_key, profile).fit(train)
+    scored = model.transform(test).cache()
+    try:
+        m = evaluation.evaluate(scored)
+    finally:
+        scored.unpersist()
+    return {**m, "n_train": n_rows - m["n"]}
+
+
+def _literal_row(spark: SparkSession, schema: str, *values) -> DataFrame:
+    """One row of ``values`` typed by the DDL ``schema``, projected in
+    the JVM over a one-partition range: ``createDataFrame`` of a Python
+    list would scan a PythonRDD and fork Python workers for it."""
+    fields = [f.split() for f in schema.split(",")]
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(v).cast(t).alias(name) for (name, t), v in zip(fields, values)]
     )
 
 
@@ -89,24 +116,13 @@ def train_and_evaluate(
     model_key: str,
     profile: str = "reference",
 ) -> DataFrame:
-    train, test, n_train, n_test = _shared_vectorized_split(spark, sf_dir)
-    model = models.make_estimator(model_key, profile).fit(train)
-    scored = model.transform(test).cache()
-    try:
-        m = evaluation.confusion_metrics(scored)
-        roc = evaluation.auc(scored)
-    finally:
-        scored.unpersist()
-    return spark.createDataFrame(
-        [
-            (
-                model_key, n_train, n_test, float(roc),
-                float(m["accuracy"]), float(m["precision"]),
-                float(m["recall"]), float(m["f1"]),
-            )
-        ],
+    m = _evaluated_fit(spark, sf_dir, model_key, profile)
+    return _literal_row(
+        spark,
         "model string, n_train long, n_test long, auc double, accuracy double,"
         " precision double, recall double, f1 double",
+        model_key, m["n_train"], m["n"], float(m["auc"]), float(m["accuracy"]),
+        float(m["precision"]), float(m["recall"]), float(m["f1"]),
     )
 
 
@@ -124,7 +140,7 @@ def features_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks labels by frequency desc, ties alphabetically — reproduced
     in SQL with row_number()), so every vector slot is a plain SQL
     expression over the training table."""
-    data = _shared_training_set(spark, sf_dir)
+    data = _shared_training_set(spark, sf_dir)[0]
     fitted = build_feature_pipeline().fit(data)
     out = fitted.transform(data)
     return out.select(
@@ -153,15 +169,10 @@ def banded_fit(spark: SparkSession, sf_dir: str, model_key: str) -> DataFrame:
     reference-profile suite (tests/test_ml_reference_profile.py)."""
     import math
 
-    full = train_and_evaluate(spark, sf_dir, model_key, "small").collect()[0]
-    _, test, _, _ = _shared_vectorized_split(spark, sf_dir)
-    counts = test.agg(
-        F.sum(F.col("label").cast("long")).alias("pos"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    n_pos = int(counts.pos)
-    n_neg = int(counts.n) - n_pos
-    n = n_pos + n_neg
+    m = _evaluated_fit(spark, sf_dir, model_key, "small")
+    n_pos = m["tp"] + m["fn"]
+    n_neg = m["tn"] + m["fp"]
+    n = m["n"]
     sigma_auc = math.sqrt((n + 1) / (12.0 * n_pos * n_neg))
     auc_lo = 0.5 - 5 * sigma_auc
     auc_hi = min(0.5 + 5 * sigma_auc, 0.84)
@@ -170,15 +181,11 @@ def banded_fit(spark: SparkSession, sf_dir: str, model_key: str) -> DataFrame:
     sigma_acc = math.sqrt(0.25 / n)
     acc_lo = share_lo - 5 * sigma_acc
     acc_hi = share_hi + 5 * sigma_acc
-    return spark.createDataFrame(
-        [
-            (
-                model_key,
-                bool(auc_lo <= full.auc <= auc_hi),
-                bool(acc_lo <= full.accuracy <= acc_hi),
-            )
-        ],
-        "model string, auc_in_band boolean, acc_in_band boolean",
+    return _literal_row(
+        spark, "model string, auc_in_band boolean, acc_in_band boolean",
+        model_key,
+        auc_lo <= m["auc"] <= auc_hi,
+        acc_lo <= m["accuracy"] <= acc_hi,
     )
 
 

@@ -39,11 +39,11 @@ covered by the metric-band contracts in ``ml/jobs.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL, LABEL_START
+from ..operators import labeling
 
 # ---------------------------------------------------------------- drift_psi
 
@@ -123,12 +123,9 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline (feature window) vs current (label window), read in one
     pushed-down scan over both adjacent windows.
     """
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(LABEL_END_EXCL).cast("timestamp"))
+    return psi_frame(
+        labeling.window_orders(spark, sf_dir), labeling.in_feature_window()
     )
-    in_base = F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp")
-    return psi_frame(o, in_base)
 
 
 # ------------------------------------------------- score_band_lift / eval_ks
@@ -142,34 +139,39 @@ _W_LOG_MONETARY = -0.18
 _BIAS = 2.2
 
 
+def window_rfm(
+    cond: Column,
+    asof: str,
+    recency: str = "recency",
+    frequency: str = "frequency",
+    monetary: str = "monetary",
+) -> list[Column]:
+    """Per-customer aggregates over the ``labeling.window_orders`` rows
+    where ``cond`` holds: days from the last one to ``asof``, their
+    count, and their 2-dp total price."""
+    return [
+        F.datediff(
+            F.lit(asof).cast("date"),
+            F.max(F.when(cond, F.to_date("o_orderdate"))),
+        ).alias(recency),
+        F.count(F.when(cond, F.lit(1))).alias(frequency),
+        F.round(
+            F.coalesce(F.sum(F.when(cond, F.col("o_totalprice"))), F.lit(0.0)),
+            2,
+        ).alias(monetary),
+    ]
+
+
 def _scored_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer (score, label) in ONE scan + ONE hash aggregate.
 
     Features come from the feature window, the churn label from the
     adjacent label window, both read in a single pushed-down range
-    with CASE-split aggregates (J4 rewrite — no label-side join).
+    with CASE-split aggregates (J4 rewrite — no label-side join):
+    ``labeling.labelled_customers``, the aggregate ``label_churn`` is.
     """
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(LABEL_END_EXCL).cast("timestamp"))
-    )
-    in_feat = F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp")
-    feats = (
-        o.groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.datediff(
-                F.lit(ASOF).cast("date"),
-                F.max(F.when(in_feat, F.to_date("o_orderdate"))),
-            ).alias("recency"),
-            F.count(F.when(in_feat, F.lit(1))).alias("frequency"),
-            F.round(
-                F.coalesce(F.sum(F.when(in_feat, F.col("o_totalprice"))), F.lit(0.0)),
-                2,
-            ).alias("monetary"),
-            (1 - F.max((~in_feat).cast("int"))).alias("label"),
-        )
-        # customers active only in the label window have no features
-        .where(F.col("frequency") > 0)
+    feats = labeling.labelled_customers(
+        spark, sf_dir, *window_rfm(labeling.in_feature_window(), ASOF)
     )
     z = (
         F.lit(_W_RECENCY) * F.col("recency")

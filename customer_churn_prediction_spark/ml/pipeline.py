@@ -1,14 +1,15 @@
 """Feature-engineering pipeline (M1-M6).
 
 Mirrors the reference's 19-stage pipeline
-(``RF/randomforest_churn.scala:243-257``): StringIndexer per
-categorical column → OneHotEncoder(dropLast=False) (the Spark 3+
-rename of 2.4's OneHotEncoderEstimator) → VectorAssembler over
+(``RF/randomforest_churn.scala:243-257``) in three stages: one
+multi-column StringIndexer over the categorical columns (one fit pass
+instead of one per column) → OneHotEncoder(dropLast=False) (the Spark
+3+ rename of 2.4's OneHotEncoderEstimator) → VectorAssembler over
 continuous + one-hot blocks. The explicit bucketize step (whose output
 contract in the reference is ``churn_featindex.txt``,
 ``FM/fm_libsvm/libsvm_transform.py:1-8``) is a pure ``when`` chain,
 and ``export_featindex`` reproduces the featindex file from the fitted
-StringIndexerModels.
+StringIndexerModel.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import dataset
 
 # Recency buckets play the reference's pre-bucketized feature strings
@@ -39,12 +39,10 @@ def bucketize_recency(col) -> F.Column:
 
 def feature_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked bucketize: recency/acctbal CASE buckets + counts."""
-    from ..constants import ASOF, FEAT_END_EXCL, FEAT_START
+    from ..constants import ASOF
+    from ..operators.rfm import feature_orders
 
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
+    orders = feature_orders(spark, sf_dir)
     rec = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
         F.datediff(F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate"))).alias(
             "recency"
@@ -65,12 +63,11 @@ def build_feature_pipeline(
     categorical = dataset.CATEGORICAL if categorical is None else categorical
     continuous = dataset.CONTINUOUS if continuous is None else continuous
     flags = dataset.FLAGS if flags is None else flags
-    indexers = [
-        StringIndexer(
-            inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep"
-        )
-        for c in categorical
-    ]
+    indexer = StringIndexer(
+        inputCols=categorical,
+        outputCols=[f"{c}_idx" for c in categorical],
+        handleInvalid="keep",
+    )
     encoder = OneHotEncoder(
         inputCols=[f"{c}_idx" for c in categorical],
         outputCols=[f"{c}_vec" for c in categorical],
@@ -81,29 +78,22 @@ def build_feature_pipeline(
         outputCol="features",
         handleInvalid="keep",
     )
-    return Pipeline(stages=[*indexers, encoder, assembler])
+    return Pipeline(stages=[indexer, encoder, assembler])
 
 
 def export_featindex(model: PipelineModel) -> list[tuple[str, str, int]]:
     """(column, categoryLabel, globalSlot) rows — the engine's
     equivalent of churn_featindex.txt (FM/fm_libsvm/churn_featindex.txt),
-    recovered from the fitted StringIndexerModels."""
+    recovered from the fitted StringIndexerModel."""
     from pyspark.ml.feature import StringIndexerModel
 
-    out: list[tuple[str, str, int]] = []
-    slot = 0
-    for stage in model.stages:
-        if isinstance(stage, StringIndexerModel):
-            col = stage.getInputCol()
-            for label in stage.labelsArray[0]:
-                out.append((col, label, slot))
-                slot += 1
-            out.append((col, "__other__", slot))  # handleInvalid='keep'
-            slot += 1
-    return out
-
-
-FEATURE_BUCKETIZE_ORACLE = None  # assigned below (needs constants)
+    (indexer,) = [s for s in model.stages if isinstance(s, StringIndexerModel)]
+    rows = [
+        (col, label)
+        for col, labels in zip(indexer.getInputCols(), indexer.labelsArray)
+        for label in [*labels, "__other__"]  # handleInvalid='keep'
+    ]
+    return [(col, label, slot) for slot, (col, label) in enumerate(rows)]
 
 
 def _bucketize_oracle() -> str:

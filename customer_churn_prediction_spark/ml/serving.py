@@ -71,7 +71,7 @@ def _manifest_from_model(fitted: PipelineModel) -> dict:
     assembler_inputs: list[str] = []
     for stage in fitted.stages:
         if isinstance(stage, StringIndexerModel):
-            categorical.append(stage.getInputCol())
+            categorical.extend(stage.getInputCols())
         elif hasattr(stage, "getOutputCols") and not isinstance(
             stage, VectorAssembler
         ):

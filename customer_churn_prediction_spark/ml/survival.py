@@ -37,30 +37,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL, LABEL_START
+from ..operators import labeling
 
 
 def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(c_custkey, duration_days, event) in one scan + one aggregate."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(LABEL_END_EXCL).cast("timestamp"))
-    )
-    in_feat = F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp")
-    return (
-        o.groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.datediff(
-                F.max(F.when(in_feat, F.to_date("o_orderdate"))),
-                F.min(F.when(in_feat, F.to_date("o_orderdate"))),
-            ).alias("duration_days"),
-            (1 - F.max((~in_feat).cast("int"))).alias("event"),
-            F.count(F.when(in_feat, F.lit(1))).alias("_n_feat"),
-        )
-        .where(F.col("_n_feat") > 0)
-        .drop("_n_feat")
-    )
+    """(c_custkey, duration_days, event) in one scan + one aggregate:
+    the event is the churn label (``labeling.labelled_customers``)."""
+    feat_day = F.when(labeling.in_feature_window(), F.to_date("o_orderdate"))
+    return labeling.labelled_customers(
+        spark, sf_dir,
+        F.datediff(F.max(feat_day), F.min(feat_day)).alias("duration_days"),
+    ).withColumnRenamed("label", "event")
 
 
 def survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START
-from .labeling import LABEL_ORACLE, label_churn
+from .labeling import LABEL_ORACLE, in_feature_window, labelled_customers
 
 _WINDOW_PRED_SQL = (
     f"o_orderdate >= TIMESTAMP '{FEAT_START}' "
@@ -144,19 +144,14 @@ def percentile_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/M10 as pure SQL: confusion counts + accuracy/precision/recall/F1
     for the rule model ``pred = 1 if recency > 90`` against the churn
-    label. Ratios of bigint counts are emitted unrounded (IEEE-exact)."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
+    label. Ratios of bigint counts are emitted unrounded (IEEE-exact).
+    The rule's feature-window recency and the label come from one
+    aggregate over both windows (``labeling.labelled_customers``)."""
+    last_feat_order = F.max(F.when(in_feature_window(), F.to_date("o_orderdate")))
+    recency = F.datediff(F.lit(ASOF).cast("date"), last_feat_order)
+    scored = labelled_customers(
+        spark, sf_dir, (recency > 90).cast("int").alias("pred")
     )
-    recency = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        F.datediff(F.lit(ASOF).cast("date"), F.max(F.to_date("o_orderdate"))).alias(
-            "recency"
-        )
-    )
-    scored = recency.withColumn(
-        "pred", (F.col("recency") > 90).cast("int")
-    ).join(label_churn(spark, sf_dir), "c_custkey")
     cm = scored.agg(
         F.sum(((F.col("pred") == 1) & (F.col("label") == 1)).cast("long")).alias("tp"),
         F.sum(((F.col("pred") == 1) & (F.col("label") == 0)).cast("long")).alias("fp"),

@@ -61,12 +61,50 @@ def static_plan_string(df: DataFrame) -> str:
     Once an adaptive plan has executed, its string prints both the
     ``== Final Plan ==`` and the ``== Initial Plan ==`` trees, which
     would double every count on a second look at the same frame; the
-    initial plan is the same text whether or not ``df`` ran."""
+    initial plan is the same text whether or not ``df`` ran. A
+    subquery's adaptive plan prints inside the root's initial plan in
+    the same way, so it is put back in its unexecuted form too."""
     plan = df._jdf.queryExecution().executedPlan()
     text = plan.toString()
     if text.startswith("AdaptiveSparkPlan"):
         text = plan.initialPlan().toString()
+    if "+- == Initial Plan ==" in text:
+        text = _unexecuted_subqueries(text)
     return text
+
+
+_ADAPTIVE = re.compile(r"^([\s:+|-]*)AdaptiveSparkPlan isFinalPlan=")
+
+
+def _unexecuted_subqueries(text: str) -> str:
+    """Redraw each nested adaptive plan that ran — its final plan and
+    then, under ``== Initial Plan ==``, its initial tree drawn from
+    depth 0 — as before it ran: ``isFinalPlan=false`` over the initial
+    tree drawn as its child. Plans nested one level deeper still are
+    left as printed."""
+    lines = text.split("\n")
+    out: list[str] = []
+    i = 0
+    while i < len(lines):
+        m = _ADAPTIVE.match(lines[i])
+        if not m or i + 1 >= len(lines) or "+- == " not in lines[i + 1]:
+            out.append(lines[i])
+            i += 1
+            continue
+        art = m.group(1)
+        out.append(f"{art}AdaptiveSparkPlan isFinalPlan=false")
+        i += 1
+        while "+- == Initial Plan ==" not in lines[i]:
+            i += 1
+        indent = " " * (lines[i].index("+-") + 3)
+        i += 1
+        above = art[:-3] + ("   " if art.endswith("+- ") else ":  ")
+        edge = "+- "
+        while i < len(lines) and lines[i].startswith(indent):
+            out.append(above + edge + lines[i][len(indent):])
+            edge = "   "
+            i += 1
+    return "\n".join(out)
 
 
 def count_shuffle_exchanges(df: DataFrame) -> int:

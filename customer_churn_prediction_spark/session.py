@@ -120,6 +120,15 @@ def get_spark(
         # Headless batch/bench context: the UI server only adds startup
         # latency and per-task listener overhead here.
         "spark.ui.enabled": "false",
+        # PySpark 4.1 wraps every F.* and Column call to record its
+        # Python call site (``_with_origin``, pyspark/errors/utils.py):
+        # about five extra py4j round trips and a stack walk per call,
+        # most of the py4j traffic of plan construction. The cost of
+        # turning it off: an AnalysisException message loses the Python
+        # call-site fragment (file and line of the failing call).
+        # PySpark reads this once per process, at the first wrapped
+        # call made with an active session.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

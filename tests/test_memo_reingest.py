@@ -53,13 +53,12 @@ def _lut_with_fixed_codebook(spark, sf_dir):
 
 
 def _vectorized(spark, sf_dir):
-    train_t, test_t, n_train, n_test = jobs._shared_vectorized_split(
-        spark, sf_dir
-    )
+    train_t, test_t, n_rows = jobs._shared_vectorized_split(spark, sf_dir)
     rows = sorted(
         (r.features.toArray().tolist(), r.label) for r in train_t.collect()
     )
-    return n_train, n_test, rows
+    n_test = test_t.count()
+    return n_rows - n_test, n_test, rows
 
 
 CASES = {

@@ -65,3 +65,42 @@ def test_vector_width_matches_featindex(spark, sf_dir):
     )
     expected = len(dataset.CONTINUOUS) + len(dataset.FLAGS) + n_onehot
     assert width == expected
+
+
+def test_one_indexer_stage_matches_per_column_indexers(spark, sf_dir):
+    """The one multi-column StringIndexer stage assembles the same
+    vectors as one single-column indexer stage per categorical."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import StringIndexer
+
+    data = dataset.churn_training_set(spark, sf_dir)
+    one = pipeline.build_feature_pipeline()
+    _, encoder, assembler = one.getStages()
+    per_column = Pipeline(stages=[
+        *(
+            StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
+            for c in dataset.CATEGORICAL
+        ),
+        encoder,
+        assembler,
+    ])
+
+    def vectors(p):
+        out = p.fit(data).transform(data).select("c_custkey", "features")
+        return {r.c_custkey: r.features.toArray().tolist() for r in out.collect()}
+
+    expected = vectors(per_column)
+    assert expected and vectors(one) == expected
+
+
+def test_metrics_row_is_jvm_side_and_counts_the_split(spark, sf_dir):
+    """The metrics row is a literal projection, not a PythonRDD scan,
+    and its two counts split the training set exactly."""
+    df = jobs.train_and_evaluate(spark, sf_dir, "lr", "small")
+    assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
+    row = df.collect()[0]
+    train, test, _ = jobs._shared_vectorized_split(spark, sf_dir)
+    assert (row.n_train, row.n_test) == (train.count(), test.count())
+    assert row.n_train + row.n_test == (
+        dataset.churn_training_set(spark, sf_dir).count()
+    )

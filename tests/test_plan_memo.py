@@ -25,6 +25,8 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark.sql import functions as F
+
 from customer_churn_prediction_spark.plans import registry
 from customer_churn_prediction_spark.plans.audit import (
     count_shuffle_exchanges,
@@ -68,18 +70,31 @@ def test_memo_misses_on_reingest(spark, tmp_path):
 def test_plan_guards_ignore_prior_execution(spark):
     """Executing a memoized adaptive plan makes its string print the
     final AND the initial plan; the guards must read the planned shape
-    only, so a memo hit audits the same before and after a run."""
+    only, so a memo hit audits the same before and after a run. A
+    scalar subquery's own adaptive plan prints the same way inside the
+    root's plan once it has run, and must audit the same too."""
     df = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
-    plan = static_plan_string(df)
-    shuffles = count_shuffle_exchanges(df)
-    scans = scan_profiles(df, SF_SMOKE)
-    assert shuffles > 0 and scans
+    # No registered query plans a ScalarSubquery, so the subquery case
+    # is one over the registered frame.
+    above_mean = df.where(
+        F.col("frequency") > df.agg(F.avg("frequency")).scalar()
+    )
+
+    def audit(frame):
+        return (
+            static_plan_string(frame),
+            count_shuffle_exchanges(frame),
+            scan_profiles(frame, SF_SMOKE),
+        )
+
+    before = [audit(df), audit(above_mean)]
+    assert all(shuffles > 0 and scans for _, shuffles, scans in before)
+    assert "Subquery" in before[1][0]
     df.toPandas()
+    above_mean.toPandas()
     again = registry.get_queries()["rfm_groupby"](spark, SF_SMOKE)
     assert again is df, "second build must be a memo hit"
-    assert static_plan_string(again) == plan
-    assert count_shuffle_exchanges(again) == shuffles
-    assert scan_profiles(again, SF_SMOKE) == scans
+    assert [audit(again), audit(above_mean)] == before
 
 
 def test_checkpoint_barrier_queries_are_not_memoized(spark):

@@ -165,9 +165,10 @@ def test_manifest_derives_from_fitted_stages(bundle):
     from pyspark.ml.feature import StringIndexerModel
 
     idx_inputs = [
-        s.getInputCol()
+        c
         for s in fitted.stages
         if isinstance(s, StringIndexerModel)
+        for c in s.getInputCols()
     ]
     assert manifest["categorical"] == idx_inputs
     assert set(manifest["continuous"]) == set(dataset.CONTINUOUS)
