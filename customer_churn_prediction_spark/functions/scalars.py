@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START
+from ..operators.rfm import feature_orders
 
 _WINDOW_PRED_SQL = (
     f"o_orderdate >= TIMESTAMP '{FEAT_START}' "
@@ -27,10 +28,7 @@ _WINDOW_PRED_SQL = (
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F4, F7 (RF/randomforest_churn.scala:44-66,104-113,125-127):
     to_date / datediff / date math / dayofweek / weekend flag."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
+    o = feature_orders(spark, sf_dir)
     d = F.to_date("o_orderdate")
     # Temporal outputs are ISO strings: unambiguous across Spark/DuckDB
     # result transports (a DATE arrives as datetime.date from Spark but

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START
 from .labeling import LABEL_ORACLE, in_feature_window, labelled_customers
+from .rfm import feature_orders
 
 _WINDOW_PRED_SQL = (
     f"o_orderdate >= TIMESTAMP '{FEAT_START}' "
@@ -96,12 +97,9 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup (free Spark extension; absent in the reference §2.4 note):
     order counts + revenue by (status, priority) with subtotals."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
     return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
+        feature_orders(spark, sf_dir)
+        .rollup("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),

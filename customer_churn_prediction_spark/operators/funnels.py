@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import EVENTS_START, FEAT_END_EXCL, FEAT_START
+from .rfm import feature_orders
 
 FUNNEL_STEPS = ["view", "click", "purchase"]
 # A short window keeps the funnel selective (the full 30-day window
@@ -115,11 +116,7 @@ def funnel_frame(e: DataFrame) -> DataFrame:
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cohort_month, months_since, n_active, cohort_size, retention)
     rows over the feature window."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp"))
-    )
-    monthly = o.select(
+    monthly = feature_orders(spark, sf_dir).select(
         F.col("o_custkey").alias("c_custkey"),
         F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
     ).distinct()

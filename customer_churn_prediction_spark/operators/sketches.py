@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START
+from .rfm import feature_orders
 
 ACCURACY = 1000
 _EPS = 1.0 / ACCURACY
@@ -407,7 +408,6 @@ def bloom_buyer_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL filter and the whole report — counts, realized FPR, both
     guarantee booleans — is hash-compared exactly, a stronger contract
     than the exact+verdict pattern the engine-specific sketches use."""
-    orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     # feature-window buyers, NOT all-time buyers: every customer has
     # ordered at some point in the fixtures, and a probe set with no
@@ -420,11 +420,7 @@ def bloom_buyer_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # membership filter exists to avoid (review r8). Filter-sized
     # (the set you would persist/broadcast in production anyway).
     members = (
-        orders.where(
-            (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-            & (F.col("o_orderdate")
-               < F.lit(FEAT_END_EXCL).cast("timestamp"))
-        )
+        feature_orders(spark, sf_dir)
         .select(F.col("o_custkey").cast("string").alias("key"))
         .distinct()
         .cache()

@@ -106,15 +106,10 @@ def get_spark(
         # reused free, SHJ forces the sort back in. SHJ still wins on
         # hash-agg-tailed pipelines (ann_ivf_kmeans −0.4,
         # multimodal_features −0.4, corpus_keep_decision −0.3); a
-        # deployment dominated by that tier can flip
-        # SPARK_GRAFT_PREFER_SMJ=false /
-        # SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD=64m without touching code.
-        "spark.sql.join.preferSortMergeJoin": os.environ.get(
-            "SPARK_GRAFT_PREFER_SMJ", "true"
-        ),
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": (
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "0")
-        ),
+        # deployment dominated by that tier can pass both keys through
+        # ``get_spark(extra_conf=...)``.
+        "spark.sql.join.preferSortMergeJoin": "true",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0",
         # Keep parquet scans fat enough to amortize task overhead.
         "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
         # Headless batch/bench context: the UI server only adds startup

@@ -30,8 +30,9 @@ compaction on top).
 Store growth: one row per ingested vector (the index IS the data),
 plus one directory level per epoch. ``compact`` folds committed
 epochs into the single base partition offline — same staged-swap
-crash discipline as ``streaming/sketch.py::compact``, so a crashed
-compaction self-heals on the next run and a re-run is a no-op.
+crash discipline as every maintained store
+(``streaming/maintenance.py``), so a crashed compaction self-heals on
+the next run and a re-run is a no-op.
 
 At 1000-executor scale each epoch's assignment is a pure map over
 the arriving files; the only shuffle is the partitioned write's
@@ -42,8 +43,6 @@ maintained table is the ANN index itself.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,10 +56,15 @@ from ..similarity.ann import (
     _vec,
     _with_norm,
 )
+from .maintenance import (
+    append_ledger,
+    compact_epochs,
+    erase_keys,
+    read_epochs,
+    read_ledger,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
-
-# Base partition for compacted history — never a live epoch id.
-_BASE_EPOCH = -1
 
 
 def _assign(batch_df: DataFrame, cent_rows) -> DataFrame:
@@ -95,13 +99,7 @@ def maintain_ivf_lists(
         assigned = _assign(batch_df, cent_rows)
         if assigned.isEmpty():
             return  # nothing to index; skip the epoch
-        (
-            assigned.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "centroid_id")
-            .parquet(store_dir)
-        )
+        write_epoch(assigned, store_dir, epoch_id, "centroid_id")
         if fault is not None:
             fault(epoch_id)
 
@@ -114,6 +112,17 @@ def maintain_ivf_lists(
     )
 
 
+_LISTS_SCHEMA = (
+    "vec_id bigint, v array<double>, nrm double, centroid_id int"
+)
+
+
+def _lists(rows: DataFrame) -> DataFrame:
+    """The stored inverted lists: the rows themselves (the index IS
+    the data), so the fold is the identity merge."""
+    return rows.select("vec_id", "v", "nrm", "centroid_id")
+
+
 def ivf_topk_from_store(
     spark: SparkSession, sf_dir: str, store_dir: str
 ) -> DataFrame:
@@ -121,9 +130,9 @@ def ivf_topk_from_store(
     store: probes are computed over the tiny query rows only, and the
     corpus branch is a scan of the probed cell partitions. Once the
     stream has drained the corpus, this equals the batch ``ann_ivf``
-    output row for row (same frozen centroids, same rank tail)."""
-    lists = spark.read.parquet(store_dir).select("vec_id", "v", "nrm",
-                                                 "centroid_id")
+    output row for row (same frozen centroids, same rank tail). A
+    store with no vectors answers zero rows."""
+    lists = read_epochs(spark, store_dir, _lists, _LISTS_SCHEMA)
     probes = _ivf_probes(
         _embeddings(spark, sf_dir), _centroids(spark, sf_dir)
     )
@@ -138,12 +147,8 @@ def _ledger_path(store_dir: str) -> str:
 
 
 def read_erased_ids(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Distinct vec_ids ever erased from this store (empty when none).
-    A SET at read time — duplicates from replayed scrubs are free."""
-    path = _ledger_path(store_dir)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "vec_id long")
-    return spark.read.parquet(path).distinct()
+    """Distinct vec_ids ever erased from this store (empty when none)."""
+    return read_ledger(spark, _ledger_path(store_dir), "vec_id")
 
 
 def forget_from_store(
@@ -153,18 +158,11 @@ def forget_from_store(
     """Erase ``vec_ids`` from the MAINTAINED store — the governance
     path for the streaming index (``sources/forget.forget_vectors``
     covers the batch-materialized stores; this store is the ingested
-    data itself, so erasure must hit it directly).
-
-    Partition-scoped, like the managed-store path: only the
-    (epoch, cell) partitions that actually CONTAIN one of the ids are
-    rewritten (found with one pushdown-filtered scan); every other
-    partition's files are left byte-untouched — at production k and
-    epoch counts an erasure batch rewrites thousandths of the index.
-    Survivors stage to a sibling dir first (a path write cannot read
-    from itself; the stage also makes a crash re-runnable), then
-    dynamic partition overwrite replaces exactly the touched
-    partitions; partitions left EMPTY are deleted directly (dynamic
-    mode never touches a partition absent from the frame).
+    data itself, so erasure must hit it directly). Partition-scoped
+    through the shared ``maintenance.erase_keys``: only the
+    (epoch, cell) partitions that contain one of the ids are
+    rewritten — at production k and epoch counts an erasure batch
+    rewrites thousandths of the index.
 
     The batch is ledgered write-ahead (``record=True``) because a
     crash-REPLAYED epoch re-delivers its vectors: after any replay
@@ -172,83 +170,15 @@ def forget_from_store(
     discipline as ``sources/forget``. Run with the maintenance query
     stopped, or on committed epochs only (the compact invariant).
 
-    Returns (partitions_touched, rows_before, rows_after) — the row
-    counts are of the TOUCHED PARTITIONS only (their difference is the
-    rows erased); counting the whole store would cost two full index
-    scans of pure bookkeeping on an op whose contract is touching
-    thousandths of it (review r8)."""
-    import shutil
-
+    Returns (partitions_touched, rows_before, rows_after), the row
+    counts of the TOUCHED PARTITIONS only (their difference is the
+    rows erased)."""
     ids = [int(i) for i in vec_ids]
-    if record and ids:
-        spark.createDataFrame(
-            [(i,) for i in ids], "vec_id long"
-        ).repartition(1).write.mode("append").parquet(
-            _ledger_path(store_dir)
-        )
-    store = spark.read.parquet(store_dir)
-    hit = (
-        store.where(F.col("vec_id").isin(ids))
-        .select("epoch_id", "centroid_id")
-        .distinct()
-        .collect()
+    if record:
+        append_ledger(spark, _ledger_path(store_dir), "vec_id", ids)
+    return erase_keys(
+        spark, store_dir, "vec_id", ids, ("epoch_id", "centroid_id")
     )
-    if not hit:
-        return 0, 0, 0
-    pairs = {(int(r.epoch_id), int(r.centroid_id)) for r in hit}
-    # Two-stage touched-partition filter (ADVICE r8): a per-pair
-    # OR-chain is a Catalyst expression tree LINEAR in the number of
-    # touched partitions (slow analysis / codegen limits at production
-    # epoch x cell counts). Instead: (1) a coarse isin on each
-    # partition column — a SMALL tree, O(distinct epochs + cells),
-    # that still statically prunes the scan to a superset of the
-    # touched directories; (2) exact pair membership via a broadcast
-    # semi-join against the tiny pairs frame.
-    dtypes = dict(store.dtypes)
-    pairs_df = spark.createDataFrame(
-        sorted(pairs), "epoch_id long, centroid_id long"
-    ).select(
-        F.col("epoch_id").cast(dtypes["epoch_id"]),
-        F.col("centroid_id").cast(dtypes["centroid_id"]),
-    )
-    touched = store.where(
-        F.col("epoch_id").isin([e for e, _ in pairs])
-        & F.col("centroid_id").isin([c for _, c in pairs])
-    ).join(F.broadcast(pairs_df), ["epoch_id", "centroid_id"], "left_semi")
-    n_before = touched.count()  # partition-pruned, touched cells only
-    survivors = touched.where(~F.col("vec_id").isin(ids))
-    stage = store_dir.rstrip("/") + "__forget_stage"
-    shutil.rmtree(stage, ignore_errors=True)
-    (
-        survivors.write.mode("overwrite")
-        .partitionBy("epoch_id", "centroid_id")
-        .parquet(stage)
-    )
-    # explicit schema: a partition whose every row was erased stages
-    # ZERO files, and a schema-less parquet read of that cannot infer
-    staged = spark.read.schema(store.schema).parquet(stage)
-    n_after = staged.count()
-    live = {
-        (int(r.epoch_id), int(r.centroid_id))
-        for r in staged.select("epoch_id", "centroid_id")
-        .distinct().collect()
-    }
-    if live:
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "centroid_id")
-            .parquet(store_dir)
-        )
-    for e, c in pairs - live:  # fully-erased partitions: drop the dir
-        shutil.rmtree(
-            os.path.join(
-                store_dir, f"epoch_id={e}", f"centroid_id={c}"
-            ),
-            ignore_errors=True,
-        )
-    shutil.rmtree(stage, ignore_errors=True)
-    return len(pairs), n_before, n_after
 
 
 def scrub_store(spark: SparkSession, store_dir: str) -> int:
@@ -269,32 +199,6 @@ def scrub_store(spark: SparkSession, store_dir: str) -> int:
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every epoch partition with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition,
-    keeping the ``centroid_id`` sub-partitioning.
-
-    OFFLINE maintenance: run with the maintenance query STOPPED and a
-    frontier at or below the last committed epoch (a folded epoch that
-    later replays would duplicate its vectors — caller-owned, same as
-    the CMS store). Crash safety is the shared whole-store staged
-    swap (``streaming/maintenance.staged_swap``)."""
-    from .maintenance import compact_swap
-
-    def _write(stage: str) -> None:
-        rows = spark.read.parquet(store_dir)
-        folded = rows.withColumn(
-            "epoch_id",
-            F.when(
-                F.col("epoch_id") <= F.lit(upto_epoch),
-                F.lit(_BASE_EPOCH),
-            ).otherwise(F.col("epoch_id")),
-        )
-        (
-            folded.select(
-                "vec_id", "v", "nrm", "epoch_id", "centroid_id"
-            )
-            .repartition("epoch_id", "centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id", "centroid_id")
-            .parquet(stage)
-        )
-
-    compact_swap(store_dir, _write)
+    keeping the ``centroid_id`` sub-partitioning — the shared
+    ``maintenance.compact_epochs`` with the identity merge."""
+    compact_epochs(spark, store_dir, upto_epoch, _lists, ("centroid_id",))

@@ -48,11 +48,16 @@ from ..text.analysis import (
     _score_pairs_against_lm,
     _tokens,
 )
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 UNI_SUBDIR = "unigram_epochs"
 BI_SUBDIR = "bigram_epochs"
-_BASE_EPOCH = -1
 _UNI_SCHEMA = "tok string, tf bigint"
 _BI_SCHEMA = "v string, w string, n_vw bigint"
 
@@ -65,33 +70,27 @@ def _batch_counts(docs: DataFrame):
     return vocab, bigrams
 
 
-def _read_or_empty(
-    spark: SparkSession, store_dir: str, subdir: str, schema: str,
-    cols: list[str],
-) -> DataFrame:
-    path = os.path.join(store_dir, subdir)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(path).select(*cols)
+def _sum_vocab(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("tok").agg(F.sum("tf").cast("long").alias("tf"))
+
+
+def _sum_bigrams(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("v", "w").agg(
+        F.sum("n_vw").cast("long").alias("n_vw")
+    )
 
 
 def current_vocab(spark: SparkSession, store_dir: str) -> DataFrame:
     """Merged unigram counts (tok, tf) — per-key sum of partials."""
-    rows = _read_or_empty(
-        spark, store_dir, UNI_SUBDIR, _UNI_SCHEMA, ["tok", "tf"]
-    )
-    return rows.groupBy("tok").agg(
-        F.sum("tf").cast("long").alias("tf")
+    return read_epochs(
+        spark, os.path.join(store_dir, UNI_SUBDIR), _sum_vocab, _UNI_SCHEMA
     )
 
 
 def current_bigrams(spark: SparkSession, store_dir: str) -> DataFrame:
     """Merged bigram counts (v, w, n_vw) — per-key sum of partials."""
-    rows = _read_or_empty(
-        spark, store_dir, BI_SUBDIR, _BI_SCHEMA, ["v", "w", "n_vw"]
-    )
-    return rows.groupBy("v", "w").agg(
-        F.sum("n_vw").cast("long").alias("n_vw")
+    return read_epochs(
+        spark, os.path.join(store_dir, BI_SUBDIR), _sum_bigrams, _BI_SCHEMA
     )
 
 
@@ -139,14 +138,8 @@ def maintain_bigram_lm(
         if batch.isEmpty():
             return
         vocab, bigrams = _batch_counts(batch)
-        for df, path in ((vocab, uni_path), (bigrams, bi_path)):
-            (
-                df.withColumn("epoch_id", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
+        write_epoch(vocab, uni_path, epoch_id)
+        write_epoch(bigrams, bi_path, epoch_id)
         if fault is not None:
             fault(epoch_id)
 
@@ -163,38 +156,17 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
     the same per-key sum the read path applies, so folding cannot
-    change the served model. OFFLINE with the shared staged-swap
-    crash discipline, one sub-store at a time (a crash between the
-    two swaps leaves one folded and one not — both still answer the
-    identical merged state, because the fold is read-equivalent)."""
-    from .maintenance import compact_swap
-
-    for subdir, keys, cnt in (
-        (UNI_SUBDIR, ["tok"], "tf"),
-        (BI_SUBDIR, ["v", "w"], "n_vw"),
+    change the served model. One sub-store at a time (a crash between
+    the two swaps leaves one folded and one not — both still answer
+    the identical merged state, because the fold is
+    read-equivalent)."""
+    for subdir, merge in (
+        (UNI_SUBDIR, _sum_vocab),
+        (BI_SUBDIR, _sum_bigrams),
     ):
-        path = os.path.join(store_dir, subdir)
-
-        def _write(stage: str, path=path, keys=keys, cnt=cnt) -> None:
-            rows = spark.read.parquet(path)
-            folded = (
-                rows.where(F.col("epoch_id") <= F.lit(upto_epoch))
-                .groupBy(*keys)
-                .agg(F.sum(cnt).cast("long").alias(cnt))
-                .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-            )
-            keep = rows.where(
-                F.col("epoch_id") > F.lit(upto_epoch)
-            ).select(*keys, cnt, "epoch_id")
-            (
-                folded.unionByName(keep)
-                .repartition("epoch_id")
-                .write.mode("overwrite")
-                .partitionBy("epoch_id")
-                .parquet(stage)
-            )
-
-        compact_swap(path, _write)
+        compact_epochs(
+            spark, os.path.join(store_dir, subdir), upto_epoch, merge
+        )
 
 
 def rebuild(
@@ -206,8 +178,6 @@ def rebuild(
     both count stores from the scrubbed source and staged-swap them
     in as the base epoch; an EMPTY clean source resets the store to
     never-ingested (the ``rebuild_base`` contract)."""
-    from .maintenance import rebuild_base
-
     vocab, bigrams = _batch_counts(clean_docs)
     rebuild_base(os.path.join(store_dir, UNI_SUBDIR), vocab)
     rebuild_base(os.path.join(store_dir, BI_SUBDIR), bigrams)

@@ -45,25 +45,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import bloom_bits, bloom_probe
-from .maintenance import compact_swap
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 BITS_SUBDIR = "bloom_epochs"
 
-_BASE_EPOCH = -1
+
+def _union_bits(rows: DataFrame) -> DataFrame:
+    return rows.select("bit").distinct()
 
 
 def merged_bits(spark: SparkSession, store_dir: str) -> DataFrame:
     """The current filter: distinct union of every stored partial.
 
-    A store with no epochs yet (missing parquet path) is an EMPTY
-    filter — no bit set — so a pre-first-epoch probe answers "not
-    flagged" instead of raising (ADVICE r8; same guard as
-    ``ann_ingest.read_erased_ids``)."""
-    path = os.path.join(store_dir, BITS_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "bit bigint")
-    return spark.read.parquet(path).select("bit").distinct()
+    A store with no epochs yet is an EMPTY filter — no bit set — so a
+    pre-first-epoch probe answers "not flagged" instead of raising."""
+    return read_epochs(
+        spark, os.path.join(store_dir, BITS_SUBDIR), _union_bits,
+        "bit bigint",
+    )
 
 
 def probe_keys(
@@ -93,15 +98,7 @@ def maintain_membership(
         batch_keys = batch_df.where(F.col("key").isNotNull())
         if batch_keys.isEmpty():
             return
-        (
-            bloom_bits(batch_keys)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(bits_path)
-        )
+        write_epoch(bloom_bits(batch_keys).repartition(1), bits_path, epoch_id)
         if fault is not None:
             fault(epoch_id)
 
@@ -117,30 +114,10 @@ def maintain_membership(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    distinct union, the same merge the read path does. OFFLINE, with
-    the shared staged-swap crash discipline."""
-    bits_path = os.path.join(store_dir, BITS_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(bits_path)
-        folded = (
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-            .select("bit")
-            .distinct()
-            .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        )
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select("bit", "epoch_id")
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(bits_path, _write)
+    distinct union, the same merge the read path does."""
+    compact_epochs(
+        spark, os.path.join(store_dir, BITS_SUBDIR), upto_epoch, _union_bits
+    )
 
 
 def rebuild(
@@ -151,8 +128,6 @@ def rebuild(
     ``clean_keys(key)`` source and staged-swap it in as the base
     epoch. After the rebuild an erased key flags only at the FPR and
     every remaining key keeps the no-false-negative guarantee."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, BITS_SUBDIR), bloom_bits(clean_keys)
     )

@@ -50,6 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.decay import HALF_LIFE_DAYS, _US_PER_DAY
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 STATE_SUBDIR = "decay_snapshots"
@@ -135,10 +141,12 @@ def latest_state(spark: SparkSession, store_dir: str) -> DataFrame:
     row per user, anchors heterogeneous. Use ``state_at_anchor`` for
     the store-wide-anchor view the batch op compares against. A store
     with no epochs yet answers the typed empty frame."""
-    path = os.path.join(store_dir, STATE_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return _per_user_latest(spark.read.parquet(path))
+    return read_epochs(
+        spark,
+        os.path.join(store_dir, STATE_SUBDIR),
+        _per_user_latest,
+        _STATE_SCHEMA,
+    )
 
 
 def _state_before(
@@ -154,15 +162,16 @@ def _state_before(
     epoch's touched users, not the whole population (at 100 TB the
     store would additionally be bucketed by user_id so the scan
     itself prunes)."""
-    path = os.path.join(store_dir, STATE_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    snaps = spark.read.parquet(path).where(
-        F.col("epoch_id") < F.lit(epoch_id)
+
+    def before(rows: DataFrame) -> DataFrame:
+        snaps = rows.where(F.col("epoch_id") < F.lit(epoch_id))
+        if users is not None:
+            snaps = snaps.join(users.select("user_id"), "user_id")
+        return _per_user_latest(snaps)
+
+    return read_epochs(
+        spark, os.path.join(store_dir, STATE_SUBDIR), before, _STATE_SCHEMA
     )
-    if users is not None:
-        snaps = snaps.join(users.select("user_id"), "user_id")
-    return _per_user_latest(snaps)
 
 
 def _stored_max_anchor(
@@ -172,12 +181,13 @@ def _stored_max_anchor(
     on an empty/absent store) — the previous global anchor. A plain
     column-max over the scan: parquet footer statistics answer it
     without touching row data."""
-    path = os.path.join(store_dir, STATE_SUBDIR)
-    if not os.path.isdir(path):
-        return None
     return (
-        spark.read.parquet(path)
-        .where(F.col("epoch_id") < F.lit(epoch_id))
+        read_epochs(
+            spark,
+            os.path.join(store_dir, STATE_SUBDIR),
+            lambda rows: rows.where(F.col("epoch_id") < F.lit(epoch_id)),
+            _STATE_SCHEMA,
+        )
         .agg(F.max("anchor"))
         .collect()[0][0]
     )
@@ -293,13 +303,7 @@ def maintain_decay(
             )
             .withColumn("anchor", F.lit(anchor))
         )
-        (
-            merged.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(state_path)
-        )
+        write_epoch(merged, state_path, epoch_id)
         if fault is not None:
             fault(epoch_id)
 
@@ -315,75 +319,36 @@ def maintain_decay(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every delta row with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    one per-user latest row, anchors preserved as stored (the lazy
-    rescale stays at read) — plus any newer epochs untouched. Shared
-    staged-swap crash discipline.
+    the reader's one per-user latest row, anchors preserved as stored
+    (the lazy rescale stays at read) — plus any newer epochs
+    untouched.
 
-    OFFLINE only (the ``streaming/resample.py::compact`` rule, made
-    explicit here per ADVICE r10): run with the maintenance query
-    stopped and the stream's committed frontier AT OR ABOVE
-    ``upto_epoch``. A later replay of an epoch <= upto_epoch would
-    rebuild from the folded base — which already contains that
-    epoch's events — and double-count them."""
-    from .maintenance import compact_swap
-
-    state_path = os.path.join(store_dir, STATE_SUBDIR)
-
-    def _write(stage: str) -> None:
-        snaps = spark.read.parquet(state_path)
-        base = _per_user_latest(
-            snaps.where(F.col("epoch_id") <= F.lit(upto_epoch))
-        ).withColumn("epoch_id", F.lit(-1))
-        keep = snaps.where(F.col("epoch_id") > F.lit(upto_epoch))
-        (
-            base.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(state_path, _write)
+    OFFLINE only: run with the maintenance query stopped and the
+    stream's committed frontier AT OR ABOVE ``upto_epoch``. A later
+    replay of an epoch <= upto_epoch would rebuild from the folded
+    base — which already contains that epoch's events — and
+    double-count them."""
+    compact_epochs(
+        spark,
+        os.path.join(store_dir, STATE_SUBDIR),
+        upto_epoch,
+        _per_user_latest,
+    )
 
 
 def rebuild(
     spark: SparkSession, store_dir: str, clean_events: DataFrame
 ) -> None:
     """Erasure (a decayed sum cannot subtract one user's events in
-    place): recompute the snapshot from the scrubbed events source at
-    ITS anchor and staged-swap it in as the base epoch."""
-    import shutil
-
-    from .maintenance import staged_swap
-
-    state_path = os.path.join(store_dir, STATE_SUBDIR)
-    if not os.path.isdir(state_path):
-        raise FileNotFoundError(
-            f"rebuild: no store at {state_path} — nothing to rebuild"
-        )
-    anchor = clean_events.agg(F.max("ts")).collect()[0][0]
-    if anchor is None:
-        # scrub removed every event: the truthful state is "never
-        # ingested" (the rebuild_base empty-store rule)
-        shutil.rmtree(state_path)
-        return
+    place): recompute the state from the scrubbed events source at
+    ITS anchor (max ts) and swap it in as the base epoch through
+    ``maintenance.rebuild_base`` — an empty source resets the store to
+    never-ingested."""
+    anchor = F.lit(clean_events.agg(F.max("ts")).collect()[0][0])
     state = _epoch_contribution(
         clean_events.where(
             F.col("user_id").isNotNull() & F.col("ts").isNotNull()
         ),
-        F.lit(anchor),
-    ).withColumn("anchor", F.lit(anchor))
-
-    def _write(stage: str) -> None:
-        (
-            state.select(
-                "user_id", "n_events", "last_ts", "dc", "dv", "anchor"
-            )
-            .withColumn("epoch_id", F.lit(-1))
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    staged_swap(state_path, _write)
+        anchor,
+    ).withColumn("anchor", anchor)
+    rebuild_base(os.path.join(store_dir, STATE_SUBDIR), state)

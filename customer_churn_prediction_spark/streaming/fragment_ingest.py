@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .maintenance import write_epoch
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -139,13 +140,7 @@ def fragment_ingest_stream(
         # Exactly-once: a replayed epoch overwrites exactly its own
         # partition (dynamic mode), same contract as the rollup and
         # dedup-ingest sinks.
-        (
-            out.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
+        write_epoch(out, out_dir, epoch_id)
         if fault is not None:
             fault(epoch_id)
 

@@ -35,29 +35,31 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import hll_estimate_expr, hll_registers
 from .drift import publish_epoch_report
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 REGS_SUBDIR = "hll_epochs"
 REPORT_SUBDIR = "estimates"
 
-_BASE_EPOCH = -1
+
+def _max_registers(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
 
 
 def merged_registers(spark: SparkSession, store_dir: str) -> DataFrame:
     """The current registers: bucket-wise max over stored partials.
 
-    A store with no epochs yet (missing parquet path) is the EMPTY
-    register set, which ``hll_estimate_expr`` routes through linear
-    counting to est 0 — so a pre-first-epoch estimate answers 0
-    instead of raising (ADVICE r8; same guard as
-    ``ann_ingest.read_erased_ids``)."""
-    path = os.path.join(store_dir, REGS_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "bucket int, max_rho int")
-    return (
-        spark.read.parquet(path)
-        .groupBy("bucket")
-        .agg(F.max("max_rho").alias("max_rho"))
+    A store with no epochs yet is the EMPTY register set, which
+    ``hll_estimate_expr`` routes through linear counting to est 0 — so
+    a pre-first-epoch estimate answers 0 instead of raising."""
+    return read_epochs(
+        spark, os.path.join(store_dir, REGS_SUBDIR), _max_registers,
+        "bucket int, max_rho int",
     )
 
 
@@ -87,14 +89,8 @@ def maintain_distinct_count(
         ).select(F.col("user_id").alias("key"))
         if batch_keys.isEmpty():
             return
-        (
-            hll_registers(batch_keys)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(regs_path)
+        write_epoch(
+            hll_registers(batch_keys).repartition(1), regs_path, epoch_id
         )
         publish_epoch_report(
             estimate(spark, store_dir), report_path, epoch_id
@@ -114,34 +110,11 @@ def maintain_distinct_count(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    register-wise max, the same merge the read path does. OFFLINE
-    (query stopped, frontier at or below the committed epoch) with the
-    shared staged-swap crash discipline
-    (``streaming/maintenance.staged_swap``)."""
-    from .maintenance import compact_swap
-
-    regs_path = os.path.join(store_dir, REGS_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(regs_path)
-        folded = (
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-            .groupBy("bucket")
-            .agg(F.max("max_rho").alias("max_rho"))
-            .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        )
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select("bucket", "max_rho", "epoch_id")
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(regs_path, _write)
+    register-wise max, the same merge the read path does."""
+    compact_epochs(
+        spark, os.path.join(store_dir, REGS_SUBDIR), upto_epoch,
+        _max_registers,
+    )
 
 
 def rebuild(
@@ -151,8 +124,6 @@ def rebuild(
     unlearn — a register's max-rho may belong to many keys):
     recompute the registers from the scrubbed ``clean_keys(key)``
     source and staged-swap them in as the base epoch."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, REGS_SUBDIR), hll_registers(clean_keys)
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .maintenance import write_epoch
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -79,13 +80,7 @@ def dedup_ingest_stream(
         # idempotence contract the rollup maintenance sink uses
         # (dynamic mode touches only the partitions present in this
         # epoch's frame).
-        (
-            out.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
+        write_epoch(out, out_dir, epoch_id)
         if fault is not None:
             fault(epoch_id)
 

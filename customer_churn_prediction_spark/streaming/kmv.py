@@ -40,33 +40,40 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import KMV_K, _KMV_NUM, kmv_sketch
 from .drift import publish_epoch_report
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 SKETCH_SUBDIR = "kmv_epochs"
 REPORT_SUBDIR = "estimates"
 
-_BASE_EPOCH = -1
+
+def _kmin_union(rows: DataFrame) -> DataFrame:
+    """Per-group K smallest distinct hashes of any partial set."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("grp").orderBy("h")
+    return (
+        rows.select("grp", "h")
+        .distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= KMV_K)
+        .drop("rn")
+    )
 
 
 def merged_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The current per-group sketches: K smallest distinct hashes
     across stored partials — the same merge a 1000-executor cluster
-    does map-side. A store with no epochs yet (missing parquet path)
-    is the empty sketch set, so a pre-first-epoch read answers empty
-    instead of raising (the ``read_erased_ids`` guard)."""
-    from pyspark.sql import Window
-
-    path = os.path.join(store_dir, SKETCH_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "grp string, h bigint")
-    w = Window.partitionBy("grp").orderBy("h")
-    return (
-        spark.read.parquet(path)
-        .select("grp", "h")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
-        .drop("rn")
+    does map-side. A store with no epochs yet is the empty sketch set,
+    so a pre-first-epoch read answers empty instead of raising."""
+    return read_epochs(
+        spark, os.path.join(store_dir, SKETCH_SUBDIR), _kmin_union,
+        "grp string, h bigint",
     )
 
 
@@ -130,15 +137,7 @@ def maintain_group_sketches(
         )
         if batch.isEmpty():
             return
-        (
-            kmv_sketch(batch)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sketch_path)
-        )
+        write_epoch(kmv_sketch(batch).repartition(1), sketch_path, epoch_id)
         publish_epoch_report(
             estimate_groups(spark, store_dir), report_path, epoch_id
         )
@@ -157,39 +156,11 @@ def maintain_group_sketches(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    per-group distinct top-K, the same merge the read path does.
-    OFFLINE (query stopped, frontier at or below the committed epoch)
-    with the shared staged-swap crash discipline."""
-    from pyspark.sql import Window
-
-    from .maintenance import compact_swap
-
-    sketch_path = os.path.join(store_dir, SKETCH_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(sketch_path)
-        w = Window.partitionBy("grp").orderBy("h")
-        folded = (
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-            .select("grp", "h")
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= KMV_K)
-            .drop("rn")
-            .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        )
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select("grp", "h", "epoch_id")
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(sketch_path, _write)
+    per-group distinct top-K, the same merge the read path does."""
+    compact_epochs(
+        spark, os.path.join(store_dir, SKETCH_SUBDIR), upto_epoch,
+        _kmin_union,
+    )
 
 
 def rebuild(
@@ -200,8 +171,6 @@ def rebuild(
     depend on, and removing one key's hash shifts every U_K):
     recompute the sketches from the scrubbed ``clean_keys(grp, key)``
     source and staged-swap them in as the base epoch."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, SKETCH_SUBDIR), kmv_sketch(clean_keys)
     )

@@ -32,7 +32,7 @@ union, so no recompute-on-touch is ever needed):
   * ``compact`` folds committed epochs into the base partition
     (distinct pairs, staged swap, self-healing);
   * ``forget_docs`` erases IN PLACE through the shared
-    partition-scoped rewrite (``transitions._erase_from`` with
+    partition-scoped rewrite (``maintenance.erase_keys`` with
     key_col=doc_id), WAL-ledgered so a post-replay ``scrub_store``
     re-applies it.
 
@@ -50,10 +50,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..text.dedup import exploded_shingles, score_novelty_against
+from .maintenance import (
+    _BASE_EPOCH,
+    append_ledger,
+    compact_epochs,
+    erase_keys,
+    read_epochs,
+    read_ledger,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 GRAMS_SUBDIR = "ref_grams"
-_BASE_EPOCH = -1
 _SCHEMA = "shingle bigint, doc_id bigint"
 
 
@@ -70,24 +79,26 @@ def _doc_grams(docs: DataFrame) -> DataFrame:
     )
 
 
-def _pairs(spark: SparkSession, store_dir: str) -> DataFrame:
-    path = os.path.join(store_dir, GRAMS_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _SCHEMA)
-    return spark.read.parquet(path).select("shingle", "doc_id")
+def _distinct_pairs(rows: DataFrame) -> DataFrame:
+    return rows.select("shingle", "doc_id").distinct()
 
 
 def current_pairs(spark: SparkSession, store_dir: str) -> DataFrame:
     """The registry's canonical state: distinct (shingle, doc_id)
-    provenance pairs across all stored epochs."""
-    return _pairs(spark, store_dir).distinct()
+    provenance pairs across all stored epochs. A store with no epochs
+    yet answers the typed empty frame."""
+    return read_epochs(
+        spark,
+        os.path.join(store_dir, GRAMS_SUBDIR),
+        _distinct_pairs,
+        _SCHEMA,
+    )
 
 
 def current_ref_grams(spark: SparkSession, store_dir: str) -> DataFrame:
     """The maintained reference gram set (distinct shingle) — the
-    broadcast side every novelty/contamination serve joins. A store
-    with no epochs yet answers the typed empty frame."""
-    return _pairs(spark, store_dir).select("shingle").distinct()
+    broadcast side every novelty/contamination serve joins."""
+    return current_pairs(spark, store_dir).select("shingle").distinct()
 
 
 def novelty_report(
@@ -161,14 +172,7 @@ def maintain_ref_grams(
         )
         if batch.isEmpty():
             return
-        (
-            _doc_grams(batch)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(path)
-        )
+        write_epoch(_doc_grams(batch), path, epoch_id)
         if fault is not None:
             fault(epoch_id)
 
@@ -185,32 +189,13 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored pair with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
     the same distinct the read path applies, so folding cannot
-    change the served set. OFFLINE with the shared staged-swap crash
-    discipline."""
-    from .maintenance import compact_swap
-
-    path = os.path.join(store_dir, GRAMS_SUBDIR)
-
-    def _write(stage: str) -> None:
-        rows = spark.read.parquet(path)
-        folded = (
-            rows.where(F.col("epoch_id") <= F.lit(upto_epoch))
-            .select("shingle", "doc_id")
-            .distinct()
-            .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        )
-        keep = rows.where(F.col("epoch_id") > F.lit(upto_epoch)).select(
-            "shingle", "doc_id", "epoch_id"
-        )
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(path, _write)
+    change the served set (``maintenance.compact_epochs``)."""
+    compact_epochs(
+        spark,
+        os.path.join(store_dir, GRAMS_SUBDIR),
+        upto_epoch,
+        _distinct_pairs,
+    )
 
 
 # ------------------------------------------------------- governance
@@ -220,10 +205,7 @@ def _ledger_path(store_dir: str) -> str:
 
 
 def read_erased_docs(spark: SparkSession, store_dir: str) -> DataFrame:
-    path = _ledger_path(store_dir)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "doc_id long")
-    return spark.read.parquet(path)
+    return read_ledger(spark, _ledger_path(store_dir), "doc_id")
 
 
 def forget_docs(
@@ -241,21 +223,15 @@ def forget_docs(
     docs' pairs, so after any replay window :func:`scrub_store`
     re-applies the ledger. Run OFFLINE or on committed epochs only
     (the compact invariant)."""
-    from .transitions import _erase_from
-
     ids = [int(i) for i in doc_ids]
-    if record and ids:
-        spark.createDataFrame(
-            [(i,) for i in ids], "doc_id long"
-        ).repartition(1).write.mode("append").parquet(
-            _ledger_path(store_dir)
-        )
-    _erase_from(
+    if record:
+        append_ledger(spark, _ledger_path(store_dir), "doc_id", ids)
+    erase_keys(
         spark,
         os.path.join(store_dir, GRAMS_SUBDIR),
+        "doc_id",
         ids,
         ("epoch_id",),
-        key_col="doc_id",
     )
 
 
@@ -315,8 +291,6 @@ def rebuild(
     recompute the pair set and staged-swap it in as the base epoch;
     an EMPTY clean source resets the store to never-ingested (the
     ``rebuild_base`` contract handles both)."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, GRAMS_SUBDIR), _doc_grams(clean_docs)
     )

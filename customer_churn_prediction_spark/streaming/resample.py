@@ -45,12 +45,16 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import resample_from_hourly
 from .drift import publish_epoch_report
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 STATE_SUBDIR = "hourly_epochs"
 REPORT_SUBDIR = "snapshot"
-
-_BASE_EPOCH = -1
 
 _STATE_SCHEMA = (
     "user_id bigint, h timestamp, n_events bigint, "
@@ -107,15 +111,10 @@ def _merge(partials: DataFrame) -> DataFrame:
 
 def merged_hourly(spark: SparkSession, store_dir: str) -> DataFrame:
     """The current (user, hour) rollup across stored partials. A store
-    with no epochs yet (missing parquet path) is the empty rollup, so
-    a pre-first-epoch read answers empty instead of raising."""
-    path = os.path.join(store_dir, STATE_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return _merge(
-        spark.read.parquet(path).select(
-            "user_id", "h", "n_events", "ts", "event_id", "value"
-        )
+    with no epochs yet is the empty rollup, so a pre-first-epoch read
+    answers empty instead of raising."""
+    return read_epochs(
+        spark, os.path.join(store_dir, STATE_SUBDIR), _merge, _STATE_SCHEMA
     )
 
 
@@ -197,14 +196,7 @@ def maintain_resample(
         # a single-task write that grows with the epoch regardless of
         # parallelism. Normal write tasks; file count tracks the
         # epoch's own partition spread.
-        (
-            hourly_state(batch)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(state_path)
-        )
+        write_epoch(hourly_state(batch), state_path, epoch_id)
         if snapshot_every is not None and epoch_id % snapshot_every == 0:
             publish_snapshot(spark, store_dir, epoch_id)
         if fault is not None:
@@ -237,33 +229,10 @@ def publish_snapshot(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    the same sum/argmax merge the read path does. OFFLINE (query
-    stopped, frontier at or below the committed epoch) with the
-    shared staged-swap crash discipline."""
-    from .maintenance import compact_swap
-
-    state_path = os.path.join(store_dir, STATE_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(state_path)
-        folded = _merge(
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-        ).withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select(
-            "user_id", "h", "n_events", "ts", "event_id", "value",
-            "epoch_id",
-        )
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(state_path, _write)
+    the same sum/argmax merge the read path does."""
+    compact_epochs(
+        spark, os.path.join(store_dir, STATE_SUBDIR), upto_epoch, _merge
+    )
 
 
 def rebuild(
@@ -273,8 +242,6 @@ def rebuild(
     (user, hour) partial cannot subtract one erased event in place):
     recompute the state from the scrubbed events source and
     staged-swap it in as the base epoch."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, STATE_SUBDIR), hourly_state(clean_events)
     )

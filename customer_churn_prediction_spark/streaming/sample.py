@@ -41,12 +41,16 @@ from pyspark.sql import functions as F
 
 from ..text.analysis import SAMPLE_W_K, aes_logkey
 from .drift import publish_epoch_report
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 SAMPLE_SUBDIR = "reservoir_epochs"
 REPORT_SUBDIR = "sample"
-
-_BASE_EPOCH = -1
 _SCHEMA = "doc_id bigint, lang string, n_chars bigint, logkey double"
 
 
@@ -130,11 +134,10 @@ def current_sample(spark: SparkSession, store_dir: str) -> DataFrame:
     """The maintained sample: distinct top-K across stored partials
     (<= K·epochs rows in, K out — the rank window runs over a
     sketch-sized frame, never the corpus). A store with no epochs yet
-    answers the typed empty frame (the ``read_erased_ids`` guard)."""
-    path = os.path.join(store_dir, SAMPLE_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _SCHEMA)
-    return _topk(spark.read.parquet(path))
+    answers the typed empty frame."""
+    return read_epochs(
+        spark, os.path.join(store_dir, SAMPLE_SUBDIR), _topk, _SCHEMA
+    )
 
 
 def sample_report(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -168,15 +171,8 @@ def maintain_sample(
         batch = batch_df.where(F.col("doc_id").isNotNull())
         if batch.isEmpty():
             return
-        (
-            _epoch_topk(batch)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)  # K rows — sketch-sized, one file is right
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sample_path)
-        )
+        # K rows — sketch-sized, one file is right
+        write_epoch(_epoch_topk(batch).repartition(1), sample_path, epoch_id)
         publish_epoch_report(
             sample_report(spark, store_dir), report_path, epoch_id
         )
@@ -195,30 +191,10 @@ def maintain_sample(
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
-    the same distinct top-K merge the read path does. OFFLINE (query
-    stopped, frontier at or below the committed epoch) with the
-    shared staged-swap crash discipline."""
-    from .maintenance import compact_swap
-
-    sample_path = os.path.join(store_dir, SAMPLE_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(sample_path)
-        folded = _topk(
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-        ).withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select("doc_id", "lang", "n_chars", "logkey", "epoch_id")
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(sample_path, _write)
+    the same distinct top-K merge the read path does."""
+    compact_epochs(
+        spark, os.path.join(store_dir, SAMPLE_SUBDIR), upto_epoch, _topk
+    )
 
 
 def rebuild(
@@ -229,8 +205,6 @@ def rebuild(
     (K+1)-th key the store no longer holds): recompute the top-K from
     the scrubbed ``clean_docs`` source and staged-swap it in as the
     base epoch."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, SAMPLE_SUBDIR), _epoch_topk(clean_docs)
     )

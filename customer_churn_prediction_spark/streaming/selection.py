@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..text.selection import _grams, dsir_report
+from .maintenance import read_epochs, write_epoch
 
 SCORED_SUBDIR = "dsir_epochs"
 
@@ -142,14 +143,10 @@ def select_ingest_stream(
     def epoch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        (
-            score_docs(spark, batch_df, model)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(scored_path)
+        write_epoch(
+            score_docs(spark, batch_df, model).repartition(1),
+            scored_path,
+            epoch_id,
         )
         if fault is not None:
             fault(epoch_id)
@@ -164,13 +161,11 @@ def select_ingest_stream(
 
 
 def read_scored(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Everything scored so far; empty frame before the first epoch
-    (the ``read_erased_ids`` guard)."""
-    path = os.path.join(store_dir, SCORED_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_grams long, logweight double,"
-            " selected boolean, epoch_id long",
-        )
-    return spark.read.parquet(path)
+    """Everything scored so far; empty frame before the first epoch."""
+    return read_epochs(
+        spark,
+        os.path.join(store_dir, SCORED_SUBDIR),
+        lambda rows: rows,
+        "doc_id long, n_grams long, logweight double,"
+        " selected boolean, epoch_id int",
+    )

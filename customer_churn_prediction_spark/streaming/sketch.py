@@ -46,14 +46,16 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import CMS_TOPK, _cms_cells
 from .drift import publish_epoch_report
+from .maintenance import (
+    compact_epochs,
+    read_epochs,
+    rebuild_base,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 SKETCH_SUBDIR = "cms_epochs"
 REPORT_SUBDIR = "candidates"
-
-# Base partition for compacted history: never a live epoch id, so a
-# replay of any real epoch can't collide with it.
-_BASE_EPOCH = -1
 
 
 def _partial_sketch(batch_keys: DataFrame) -> DataFrame:
@@ -66,21 +68,19 @@ def _partial_sketch(batch_keys: DataFrame) -> DataFrame:
     )
 
 
+def _sum_cells(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("h", "b").agg(F.sum("cell_cnt").alias("cell_cnt"))
+
+
 def merged_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The current corpus sketch: cell-wise sum of every stored
     partial (bounded: d*w rows per epoch partition).
 
-    A store with no epochs yet (missing parquet path) is the EMPTY
-    sketch — every cell 0 — so a pre-first-epoch point query answers
-    est 0 instead of raising (ADVICE r8 raised this for the Bloom/HLL
-    siblings; same guard as ``ann_ingest.read_erased_ids``)."""
-    path = os.path.join(store_dir, SKETCH_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "h int, b bigint, cell_cnt long")
-    return (
-        spark.read.parquet(path)
-        .groupBy("h", "b")
-        .agg(F.sum("cell_cnt").alias("cell_cnt"))
+    A store with no epochs yet is the EMPTY sketch — every cell 0 — so
+    a pre-first-epoch point query answers est 0 instead of raising."""
+    return read_epochs(
+        spark, os.path.join(store_dir, SKETCH_SUBDIR), _sum_cells,
+        "h int, b bigint, cell_cnt long",
     )
 
 
@@ -155,14 +155,8 @@ def maintain_heavy_hitters(
         ).select(F.col("user_id").alias("key"))
         if batch_keys.isEmpty():
             return  # nothing to merge or report; skip the epoch
-        (
-            _partial_sketch(batch_keys)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sketch_path)
+        write_epoch(
+            _partial_sketch(batch_keys).repartition(1), sketch_path, epoch_id
         )
         cand_keys = batch_keys.distinct()
         prev = _prev_candidates(spark, report_path, epoch_id)
@@ -190,43 +184,18 @@ def maintain_heavy_hitters(
 
 def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored partial with ``epoch_id <= upto_epoch``
-    (including any previous base) into the single base partition.
+    (including any previous base) into the single base partition —
+    the cell-wise sum the read path applies
+    (``maintenance.compact_epochs``).
 
     An OFFLINE maintenance op: run it with the maintenance query
     STOPPED, and pass a frontier at or below the last epoch the engine
     committed — a folded partial whose epoch later replays would be
-    counted twice (the same caller-owned invariant as
-    ``sources/layout.vacuum_epochs``).
-
-    Crash safety comes from the shared whole-store staged swap
-    (``streaming/maintenance.staged_swap`` — fold-and-delete become
-    ONE visibility event, a re-run is idempotent because an
-    already-folded store has no partials ≤ the frontier left to
-    re-add, and the entry-time heal recovers every crash window)."""
-    from .maintenance import compact_swap
-
-    sketch_path = os.path.join(store_dir, SKETCH_SUBDIR)
-
-    def _write(stage: str) -> None:
-        all_parts = spark.read.parquet(sketch_path)
-        folded = (
-            all_parts.where(F.col("epoch_id") <= F.lit(upto_epoch))
-            .groupBy("h", "b")
-            .agg(F.sum("cell_cnt").alias("cell_cnt"))
-            .withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        )
-        keep = all_parts.where(
-            F.col("epoch_id") > F.lit(upto_epoch)
-        ).select("h", "b", "cell_cnt", "epoch_id")
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(sketch_path, _write)
+    counted twice."""
+    compact_epochs(
+        spark, os.path.join(store_dir, SKETCH_SUBDIR), upto_epoch,
+        _sum_cells,
+    )
 
 
 def rebuild(
@@ -236,8 +205,6 @@ def rebuild(
     — decrementing a cell would corrupt every other key hashing into
     it): recompute the sketch from the scrubbed ``clean_keys(key)``
     source and staged-swap it in as the base epoch."""
-    from .maintenance import rebuild_base
-
     rebuild_base(
         os.path.join(store_dir, SKETCH_SUBDIR),
         _partial_sketch(clean_keys),

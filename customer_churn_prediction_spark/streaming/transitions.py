@@ -62,12 +62,19 @@ epoch that re-delivers the user's events is re-scrubbed
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.sessions import _session_numbered
+from .maintenance import (
+    append_ledger,
+    compact_epochs,
+    erase_keys,
+    read_epochs,
+    read_ledger,
+    write_epoch,
+)
 from .windows import stream_to_batch_sink
 
 LOG_SUBDIR = "transition_log"
@@ -78,10 +85,9 @@ COUNTS_SUBDIR = "transition_counts"
 # production deployment sizes it so one bucket slice ≈ one task.
 N_USER_BUCKETS = 64
 
-_BASE_EPOCH = -1
-_MODEL_SCHEMA = (
-    "from_type string, to_type string, n bigint, n_from bigint,"
-    " p double"
+_COUNTS_SCHEMA = (
+    "user_id bigint, from_type string, to_type string, n bigint,"
+    " epoch_id int"
 )
 
 
@@ -124,10 +130,12 @@ def current_transitions(
     columns (from_type, to_type, n, n_from, p), BIT-equal to the
     batch model over the ingested union. A store with no epochs yet
     answers the typed empty frame."""
-    path = os.path.join(store_dir, COUNTS_SUBDIR)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], _MODEL_SCHEMA)
-    latest = _latest_per_user(spark.read.parquet(path))
+    latest = read_epochs(
+        spark,
+        os.path.join(store_dir, COUNTS_SUBDIR),
+        _latest_per_user,
+        _COUNTS_SCHEMA,
+    )
     counts = (
         latest.groupBy("from_type", "to_type")
         .agg(F.sum("n").cast("long").alias("n"))
@@ -197,13 +205,7 @@ def maintain_transitions(
         bucketed = batch.withColumn(
             "u_bucket", F.pmod(F.col("user_id"), F.lit(N_USER_BUCKETS))
         )
-        (
-            bucketed.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "u_bucket")
-            .parquet(log_path)
-        )
+        write_epoch(bucketed, log_path, epoch_id, "u_bucket")
         # 2. recompute ONLY the touched users from the accumulated
         #    log: static bucket pruning (one bounded <= N_USER_BUCKETS
         #    collect) cuts the scan to the touched directories, the
@@ -219,14 +221,7 @@ def maintain_transitions(
             .where(F.col("u_bucket").isin(buckets))
             .join(touched, "user_id", "left_semi")
         )
-        (
-            _user_bigrams(hist)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(counts_path)
-        )
+        write_epoch(_user_bigrams(hist), counts_path, epoch_id)
         if fault is not None:
             fault(epoch_id)
 
@@ -243,46 +238,24 @@ def compact(
     spark: SparkSession, store_dir: str, upto_epoch: int
 ) -> None:
     """Fold committed epochs ``<= upto_epoch`` into the base
-    partition of both sub-stores: the log folds by plain union (the
-    deltas are the data), the counts fold keeps each user's LATEST
+    partition of both sub-stores (``maintenance.compact_epochs``): the
+    log folds with the identity merge (the deltas are the data), the
+    counts with the reader's ``_latest_per_user`` — each user's LATEST
     partial at or below the frontier (folding every epoch would
-    resurrect superseded rows). OFFLINE, with the shared staged-swap
-    crash discipline."""
-    from .maintenance import compact_swap
-
-    log_path = os.path.join(store_dir, LOG_SUBDIR)
-    counts_path = os.path.join(store_dir, COUNTS_SUBDIR)
-
-    def _write_log(stage: str) -> None:
-        rows = spark.read.parquet(log_path)
-        folded = rows.where(
-            F.col("epoch_id") <= F.lit(upto_epoch)
-        ).withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        keep = rows.where(F.col("epoch_id") > F.lit(upto_epoch))
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id", "u_bucket")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id", "u_bucket")
-            .parquet(stage)
-        )
-
-    def _write_counts(stage: str) -> None:
-        rows = spark.read.parquet(counts_path)
-        folded = _latest_per_user(
-            rows.where(F.col("epoch_id") <= F.lit(upto_epoch))
-        ).withColumn("epoch_id", F.lit(_BASE_EPOCH))
-        keep = rows.where(F.col("epoch_id") > F.lit(upto_epoch))
-        (
-            folded.unionByName(keep)
-            .repartition("epoch_id")
-            .write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .parquet(stage)
-        )
-
-    compact_swap(log_path, _write_log)
-    compact_swap(counts_path, _write_counts)
+    resurrect superseded rows)."""
+    compact_epochs(
+        spark,
+        os.path.join(store_dir, LOG_SUBDIR),
+        upto_epoch,
+        lambda rows: rows,
+        ("u_bucket",),
+    )
+    compact_epochs(
+        spark,
+        os.path.join(store_dir, COUNTS_SUBDIR),
+        upto_epoch,
+        _latest_per_user,
+    )
 
 
 # ------------------------------------------------------- governance
@@ -292,95 +265,7 @@ def _ledger_path(store_dir: str) -> str:
 
 
 def read_erased_users(spark: SparkSession, store_dir: str) -> DataFrame:
-    path = _ledger_path(store_dir)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], "user_id long")
-    return spark.read.parquet(path)
-
-
-def _erase_from(
-    spark: SparkSession,
-    path: str,
-    user_ids: list[int],
-    part_cols: tuple[str, ...],
-    key_col: str = "user_id",
-) -> None:
-    """Partition-scoped erase of a key's rows from one partitioned
-    sub-store (the ``ann_ingest.forget_from_store`` mechanics): only
-    the partitions that CONTAIN one of the ids are rewritten — found
-    with one pushdown-filtered scan, pruned coarsely by per-column
-    ``isin`` plus an exact broadcast semi-join on the partition tuple
-    — survivors stage to a sibling dir (a path write cannot read from
-    itself), dynamic overwrite replaces exactly the touched
-    partitions, fully-emptied partitions are deleted directly.
-
-    ``key_col`` generalizes the mechanism beyond this family's
-    user_id rows — the benchmark-gram registry
-    (``streaming/novelty.py``) erases by doc_id through the same
-    code path, so a fix to the staging/overwrite discipline lands in
-    both stores at once."""
-    if not os.path.isdir(path):
-        return
-    store = spark.read.parquet(path)
-    hit = (
-        store.where(F.col(key_col).isin(user_ids))
-        .select(*part_cols)
-        .distinct()
-        .collect()
-    )
-    if not hit:
-        return
-    pairs = sorted(tuple(int(r[c]) for c in part_cols) for r in hit)
-    dtypes = dict(store.dtypes)
-    pairs_df = spark.createDataFrame(
-        pairs, ", ".join(f"{c} long" for c in part_cols)
-    ).select(*[F.col(c).cast(dtypes[c]) for c in part_cols])
-    coarse = store
-    for i, c in enumerate(part_cols):
-        coarse = coarse.where(
-            F.col(c).isin(sorted({p[i] for p in pairs}))
-        )
-    touched = coarse.join(
-        F.broadcast(pairs_df), list(part_cols), "left_semi"
-    )
-    survivors = touched.where(~F.col(key_col).isin(user_ids))
-    stage = path.rstrip("/") + "__forget_stage"
-    shutil.rmtree(stage, ignore_errors=True)
-    (
-        survivors.write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(stage)
-    )
-    staged = spark.read.schema(store.schema).parquet(stage)
-    live = {
-        tuple(int(r[c]) for c in part_cols)
-        for r in staged.select(*part_cols).distinct().collect()
-    }
-    if live:
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-    for p in set(pairs) - live:
-        shutil.rmtree(
-            os.path.join(
-                path, *[f"{c}={v}" for c, v in zip(part_cols, p)]
-            ),
-            ignore_errors=True,
-        )
-    shutil.rmtree(stage, ignore_errors=True)
-    # r13 (ADVICE r12): if erasure emptied EVERY partition, drop the
-    # sub-store root too — a partitionless root passes readers'
-    # os.path.isdir guard but fails parquet schema inference (the
-    # same trap maintenance.rebuild_base documents); removing it
-    # routes readers to the typed-empty-frame answer.
-    if not any(
-        "=" in name and os.path.isdir(os.path.join(path, name))
-        for name in os.listdir(path)
-    ):
-        shutil.rmtree(path, ignore_errors=True)
+    return read_ledger(spark, _ledger_path(store_dir), "user_id")
 
 
 def forget_users(
@@ -392,26 +277,25 @@ def forget_users(
     """Erase users IN PLACE from both sub-stores — a user's log rows
     and count partials are self-contained (sessions never cross
     users), so dropping their rows leaves every other user's model
-    exact; no rebuild needed. Write-ahead ledgered: a crash-replayed
+    exact; no rebuild needed. Partition-scoped through the shared
+    ``maintenance.erase_keys``. Write-ahead ledgered: a crash-replayed
     epoch re-delivers the users' events, so after any replay window
     :func:`scrub_store` re-applies the ledger. Run OFFLINE or on
     committed epochs only (the compact invariant)."""
     ids = [int(i) for i in user_ids]
-    if record and ids:
-        spark.createDataFrame(
-            [(i,) for i in ids], "user_id long"
-        ).repartition(1).write.mode("append").parquet(
-            _ledger_path(store_dir)
-        )
-    _erase_from(
+    if record:
+        append_ledger(spark, _ledger_path(store_dir), "user_id", ids)
+    erase_keys(
         spark,
         os.path.join(store_dir, LOG_SUBDIR),
+        "user_id",
         ids,
         ("epoch_id", "u_bucket"),
     )
-    _erase_from(
+    erase_keys(
         spark,
         os.path.join(store_dir, COUNTS_SUBDIR),
+        "user_id",
         ids,
         ("epoch_id",),
     )

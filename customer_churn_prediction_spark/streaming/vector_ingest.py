@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .maintenance import write_epoch
+
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
@@ -71,13 +73,7 @@ def vector_ingest_stream(
 
     def epoch(batch_df: DataFrame, epoch_id: int) -> None:
         coded = encode_batch(spark, sf_dir, batch_df)
-        (
-            coded.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "centroid_id")
-            .parquet(out_dir)
-        )
+        write_epoch(coded, out_dir, epoch_id, "centroid_id")
         if fault is not None:
             fault(epoch_id)
 

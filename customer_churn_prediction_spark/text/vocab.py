@@ -119,11 +119,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str,
     # core of the corpus-scan parallelism: at 32 shuffle partitions
     # each of the N_MERGES rounds paid ~64 near-empty tasks of pure
     # scheduling overhead (r14 measurement). coalesce (narrow, no
-    # shuffle) right after the one corpus-sized aggregate; override
-    # via SPARK_GRAFT_BPE_FIT_PARTITIONS for a genuinely huge vocab.
-    import os as _os
-
-    fit_parts = int(_os.environ.get("SPARK_GRAFT_BPE_FIT_PARTITIONS", "4"))
+    # shuffle) right after the one corpus-sized aggregate.
     # Per-round materialization is a lazy localCheckpoint (r14, the
     # dedup_lsh_components precedent, guide §3.3/§5): a cached round
     # frame still carries the full select-chain lineage, so round N
@@ -138,7 +134,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str,
     from ..checkpointing import loop_checkpoint
 
     words = loop_checkpoint(
-        word_freq_table(spark, sf_dir).coalesce(fit_parts)
+        word_freq_table(spark, sf_dir).coalesce(4)
     )
     out = []
     for rnd in range(1, n_merges + 1):
