@@ -11,6 +11,15 @@ O(corpus) labels frame per round. ``SPARK_GRAFT_RELIABLE_CHECKPOINT``
 (a writable directory, e.g. an HDFS/S3 path) routes exactly those
 loop checkpoints to Spark's reliable checkpointing instead; local
 default unchanged. SCALE.md §r15 documents the deployment rule.
+
+The churn model fits use the same checkpoint for their inputs
+(``ml/jobs.py``): the memoized training frame and the two vectorized
+splits. A fit runs dozens of jobs over them, and a checkpoint leaves
+each job a scan of stored blocks instead of the whole feature ⋈ label
+plan a cached frame keeps. Those blocks live inside the fit memo for
+as long as the dataset is unchanged, longer than any loop round, so
+the reliable route matters more for them: an executor lost between
+two fits would otherwise fail the next one.
 """
 
 from __future__ import annotations
@@ -27,10 +36,12 @@ _DIR_SET_FOR: tuple[str, str] | None = None
 
 
 def loop_checkpoint(df: DataFrame) -> DataFrame:
-    """Lazy per-round materialization for iterative loops: lazy
-    ``localCheckpoint`` by default, lazy RELIABLE ``checkpoint`` into
-    $SPARK_GRAFT_RELIABLE_CHECKPOINT when set (read per call, so a
-    test/deployment can flip it without rebuilding the session)."""
+    """Lazy materialization for iterative loops and the memo-held fit
+    inputs (``ml/jobs.py``): lazy ``localCheckpoint`` by default, lazy
+    RELIABLE ``checkpoint`` into $SPARK_GRAFT_RELIABLE_CHECKPOINT when
+    set (read per call, so a test/deployment can flip it without
+    rebuilding the session). The first job over the returned frame
+    fills it; its plan is then a ``LogicalRDD`` with no lineage."""
     global _DIR_SET_FOR, _MATERIALIZE_COUNT
     _MATERIALIZE_COUNT += 1
     reliable_dir = os.environ.get(_ENV)

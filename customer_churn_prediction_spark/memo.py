@@ -17,9 +17,14 @@ The version rule: an entry is keyed by ``(kind, key)`` and carries a
 where the caller computes one. A lookup hits only when the stored
 version equals the caller's. An insert replaces the entry with the
 same ``(kind, key)``, so a re-ingested table at the same path misses
-and its stale entry is dropped, never accumulated. A kind registered
-with ``on_release`` (cached Spark frames: ``unpersist``) has that
-function run on every value replaced or cleared.
+and its stale entry is dropped, never accumulated.
+
+Dropping an entry frees nothing explicitly; no kind registers a
+release hook. The fit inputs in ``ml.training`` and ``ml.vectorized``
+are checkpointed blocks, which Spark's ContextCleaner frees once no
+frame references them. A plan-memoized query built on those blocks
+(``ml_feature_vectors``) may outlive the fit entry, so freeing them on
+eviction would break it.
 
 Kinds in use: ``relation`` (catalog), ``plan`` (plans.registry),
 ``ann.centroids`` and ``ann.semantic_centroids`` (similarity.ann),
@@ -36,13 +41,6 @@ import os
 from typing import Any, Callable, Hashable
 
 _entries: dict[tuple[str, Hashable], tuple[Hashable, Any]] = {}
-_releases: dict[str, Callable[[Any], None]] = {}
-
-
-def on_release(kind: str, release: Callable[[Any], None]) -> None:
-    """Run ``release(value)`` on every ``kind`` value that is replaced
-    or cleared."""
-    _releases[kind] = release
 
 
 def get(kind: str, key: Hashable, version: Hashable) -> Any:
@@ -56,7 +54,6 @@ def get(kind: str, key: Hashable, version: Hashable) -> Any:
 def put(kind: str, key: Hashable, version: Hashable, value: Any) -> Any:
     """Store ``value`` (never None), replacing any entry at
     ``(kind, key)``; returns ``value``."""
-    _evict((kind, key))
     _entries[(kind, key)] = (version, value)
     return value
 
@@ -65,13 +62,12 @@ def cached(
     kind: str, key: Hashable, version: Hashable, build: Callable[[], Any]
 ) -> Any:
     """``get``, or ``put`` of ``build()`` on a miss. A stale entry is
-    released before ``build`` runs: Spark's cache matches frames by
-    plan, so an old version's cached frame over the same path would
-    otherwise answer the new build's reads."""
+    dropped before ``build`` runs, so the two versions' values are
+    never held at once."""
     hit = get(kind, key, version)
     if hit is not None:
         return hit
-    _evict((kind, key))
+    _entries.pop((kind, key), None)
     return put(kind, key, version, build())
 
 
@@ -83,14 +79,7 @@ def entries(kind: str) -> dict[Hashable, tuple[Hashable, Any]]:
 def clear(kind: str) -> None:
     """Drop every ``kind`` entry."""
     for slot in [s for s in _entries if s[0] == kind]:
-        _evict(slot)
-
-
-def _evict(slot: tuple[str, Hashable]) -> None:
-    entry = _entries.pop(slot, None)
-    release = _releases.get(slot[0])
-    if entry is not None and release is not None:
-        release(entry[1])
+        del _entries[slot]
 
 
 def table_version(sf_dir: str, *tables: str) -> tuple[int, ...]:

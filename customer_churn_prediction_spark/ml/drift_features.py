@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..constants import ASOF, FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL
+from ..operators import labeling
 from .calibration import _FREQ_CAP, _MON_CAP, _MON_WIDTH, _REC_CAP, _REC_WIDTH
 from .monitoring import _PSI_EPS, _PSI_NBINS, psi_from_counts, window_rfm
 
@@ -44,11 +45,9 @@ ASOF_CURR = "1998-06-30"
 def drift_psi_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-feature PSI between the training and scoring snapshots —
     one row per monitored feature with its stability verdict."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(LABEL_END_EXCL).cast("timestamp"))
-    )
-    in_base = F.col("o_orderdate") < F.lit(FEAT_END_EXCL).cast("timestamp")
+    # the module's LABEL_END_EXCL, read per call, ends the scoring side
+    o = labeling.window_orders(spark, sf_dir, LABEL_END_EXCL)
+    in_base = labeling.in_feature_window()
 
     def feats(cond, asof, tag):
         return window_rfm(cond, asof, f"{tag}_rec", f"{tag}_freq", f"{tag}_mon")

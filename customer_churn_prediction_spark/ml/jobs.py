@@ -9,6 +9,16 @@ vectorized train split → score test → one metrics row (model, n_train,
 n_test, auc, accuracy, precision, recall, f1). Everything before the
 estimator is memoized per dataset, so every model family fits on the
 same vectorized split and features ⋈ label is built once.
+
+The reference writes its modeling table to storage and fits on the
+re-read table (``RF/randomforest_churn.scala:212-227``). Here the
+memoized training frame and both vectorized splits are checkpointed
+(``checkpointing.loop_checkpoint``): each is a scan of its stored
+blocks with no lineage above it. A cached frame would keep the whole
+``feature_assembly ⋈ label_churn`` plan, and every MLlib round (each
+LR ``treeAggregate``, each RF level, each evaluator job) would plan and
+ship it again. At this scale a fit's cost is its rounds, so what each
+round carries sets it.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..checkpointing import loop_checkpoint
 from . import dataset, evaluation, models
 from .pipeline import build_feature_pipeline
 
@@ -27,10 +38,6 @@ ROWS_PER_FIT_PARTITION = 20_000
 # The tables ``dataset.churn_training_set`` reads: the version of the
 # two shared memos below, so a re-ingest of any of them refits.
 _TRAINING_TABLES = ("customer", "nation", "orders", "lineitem", "part")
-memo.on_release("ml.training", lambda v: v[1].unpersist())
-memo.on_release(
-    "ml.vectorized", lambda v: (v[0].unpersist(), v[1].unpersist())
-)
 
 
 def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -48,14 +55,20 @@ def _sized(data: DataFrame, n_rows: int) -> DataFrame:
 
 
 def _shared_training_set(spark: SparkSession, sf_dir: str) -> tuple:
-    """(sized training frame, cached frame, row count), cached once and
-    shared by every model job and the feature-vector query, so
-    features ⋈ label is computed and counted once per dataset."""
+    """(sized training frame, row count), checkpointed once and shared
+    by every model job and the feature-vector query, so features ⋈
+    label is computed and counted once per dataset. The count is the
+    job that fills the checkpoint.
+
+    Nothing frees the blocks explicitly: a plan-memoized frame built
+    on them (``ml_feature_vectors``) may still read them after this
+    entry is replaced or cleared, and Spark's ContextCleaner drops
+    them once no frame references them."""
 
     def fit() -> tuple:
-        data = dataset.churn_training_set(spark, sf_dir).cache()
+        data = loop_checkpoint(dataset.churn_training_set(spark, sf_dir))
         n_rows = data.count()
-        return _sized(data, n_rows), data, n_rows
+        return _sized(data, n_rows), n_rows
 
     return memo.cached(
         "ml.training", _cache_key(spark, sf_dir),
@@ -65,17 +78,21 @@ def _shared_training_set(spark: SparkSession, sf_dir: str) -> tuple:
 
 def _shared_vectorized_split(spark: SparkSession, sf_dir: str) -> tuple:
     """(fitted-feature train, test, training-set row count): every
-    model job shares one feature-pipeline fit and one pair of cached
-    vectorized splits — fit features once, sweep estimators. The
-    feature stages fit on the train split alone, exactly as they would
-    as the leading stages of one composed ``Pipeline`` per model."""
+    model job shares one feature-pipeline fit and one pair of
+    checkpointed vectorized splits — fit features once, sweep
+    estimators. The feature stages fit on the train split alone,
+    exactly as they would as the leading stages of one composed
+    ``Pipeline`` per model. The checkpoints are lazy: the first
+    estimator fit fills them."""
 
     def fit() -> tuple:
-        sized, _, n_rows = _shared_training_set(spark, sf_dir)
+        sized, n_rows = _shared_training_set(spark, sf_dir)
         train, test = dataset.train_test_split(sized)
         feat = build_feature_pipeline().fit(train)
-        train_t = feat.transform(train).select("features", "label").cache()
-        test_t = feat.transform(test).select("features", "label").cache()
+        train_t, test_t = (
+            loop_checkpoint(feat.transform(side).select("features", "label"))
+            for side in (train, test)
+        )
         return train_t, test_t, n_rows
 
     return memo.cached(
@@ -129,8 +146,8 @@ def train_and_evaluate(
 def features_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fitted feature pipeline's output surface as nonzero
     (c_custkey, slot, value) coordinates — the sparse-COO projection of
-    the assembled vector. Shares the registry's cached training frame
-    with the model jobs.
+    the assembled vector. Shares the registry's checkpointed training
+    frame with the model jobs.
 
     Coordinates instead of one array<double> column for two reasons:
     the driver's canonicalizer cannot sort array cells (pandas

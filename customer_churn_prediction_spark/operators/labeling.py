@@ -24,12 +24,15 @@ from ..catalog import load_table
 from ..constants import FEAT_END_EXCL, FEAT_START, LABEL_END_EXCL, LABEL_START
 
 
-def window_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders of the feature window and the adjacent label window, in
-    one range the scan can push down."""
+def window_orders(
+    spark: SparkSession, sf_dir: str, end_excl: str = LABEL_END_EXCL
+) -> DataFrame:
+    """Orders from the start of the feature window up to ``end_excl``
+    (by default the end of the adjacent label window), in one range
+    the scan can push down."""
     return load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit(FEAT_START).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(LABEL_END_EXCL).cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit(end_excl).cast("timestamp"))
     )
 
 

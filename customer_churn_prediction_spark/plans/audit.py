@@ -163,8 +163,12 @@ def scan_profiles(df: DataFrame, data_root: str) -> dict:
 
 def run_with_metrics(spark, build_fn, group: str) -> dict:
     """Execute a query under a job group and return its RUNTIME totals
-    from the app status store: jobs, stages, tasks, records read from
-    sources, and shuffle bytes written (r15, VERDICT r14 item 2).
+    from the app status store: jobs, stages run, stages skipped, tasks,
+    records read from sources, and shuffle bytes written (r15, VERDICT
+    r14 item 2). A stage is skipped when its shuffle output already
+    exists; the store keeps a SKIPPED attempt for it, which counts in
+    ``skipped_stages`` only. Every stage listed by a job's plan counts
+    once, so ``skipped_stages`` measures the lineage the jobs carry.
 
     The r14 localCheckpoint barriers erased parts of the final plan
     from .explain() text, so plan-text guards (shuffle budgets, scan
@@ -188,6 +192,7 @@ def run_with_metrics(spark, build_fn, group: str) -> dict:
     totals = {
         "jobs": 0,
         "stages": 0,
+        "skipped_stages": 0,
         "tasks": 0,
         "input_records": 0,
         "input_bytes": 0,
@@ -206,7 +211,10 @@ def run_with_metrics(spark, build_fn, group: str) -> dict:
             try:
                 sd = store.lastStageAttempt(sid)
             except Exception:
-                continue  # skipped stage (reused exchange): no attempt
+                continue  # no attempt recorded
+            if sd.status().toString() == "SKIPPED":
+                totals["skipped_stages"] += 1
+                continue
             totals["stages"] += 1
             totals["tasks"] += sd.numCompleteTasks()
             totals["input_records"] += sd.inputRecords()

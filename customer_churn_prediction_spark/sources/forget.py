@@ -121,25 +121,28 @@ def read_erasure_ledger(spark: SparkSession, tag: str) -> DataFrame:
     return spark.read.parquet(path).distinct()
 
 
-def compact_erasure_ledger(spark: SparkSession, tag: str) -> tuple[int, int]:
-    """Rewrite the per-tag ledger as one file of distinct rows.
+def compact_ledger(
+    spark: SparkSession, path: str, schema: str
+) -> tuple[int, int]:
+    """Rewrite the append-only parquet ledger at ``path`` (rows typed
+    by the DDL ``schema``) as one file of distinct rows.
 
     Every erasure batch appends one small file, so a long-running
-    deployment accumulates thousands and each rebuild scrub pays a
+    deployment accumulates thousands and each scrub pays a
     listing-bound read. Compaction is safe because every consumer
-    reads the ledger as a distinct SET (:func:`read_erasure_ledger`)
-    — order and duplicates carry no meaning — which also gives the
-    crash discipline for free: the compacted file is APPENDED first
-    and the superseded files deleted after, so a crash anywhere leaves
-    duplicate rows (deduped at read), never missing ones. There is no
-    moment where the ledger is absent — the staged-swap window the
-    directory-rename approach would open. The distinct set is
-    collected driver-side (erasure requests are human-scale by the
-    module contract, like the scrub's own collect).
+    reads a ledger as a distinct SET — order and duplicates carry no
+    meaning — which also gives the crash discipline for free: the
+    compacted file is APPENDED first and the superseded files deleted
+    after, so a crash anywhere leaves duplicate rows (deduped at
+    read), never missing ones. There is no moment where the ledger is
+    absent — the staged-swap window the directory-rename approach
+    would open. The distinct set is collected driver-side (erasure
+    requests are human-scale by the module contract, like the scrub's
+    own collect). Shared by the batch ledger below and the streaming
+    stores' ledgers (``streaming/maintenance.compact_ledger``).
 
     Returns ``(files_before, files_after)``; no-op at <= 1 data file.
     """
-    path = _ledger_path(tag)
 
     def _data_files() -> list[str]:
         return [
@@ -152,13 +155,18 @@ def compact_erasure_ledger(spark: SparkSession, tag: str) -> tuple[int, int]:
     before = _data_files()
     if len(before) <= 1:
         return (len(before), len(before))
-    rows = read_erasure_ledger(spark, tag).collect()
-    spark.createDataFrame(
-        [(r.kind, int(r.id)) for r in rows], _LEDGER_SCHEMA
-    ).repartition(1).write.mode("append").parquet(path)
+    rows = spark.read.parquet(path).distinct().collect()
+    spark.createDataFrame(rows, schema).repartition(1).write.mode(
+        "append"
+    ).parquet(path)
     for f in before:
         os.remove(os.path.join(path, f))
     return (len(before), len(_data_files()))
+
+
+def compact_erasure_ledger(spark: SparkSession, tag: str) -> tuple[int, int]:
+    """:func:`compact_ledger` of the per-tag batch ledger."""
+    return compact_ledger(spark, _ledger_path(tag), _LEDGER_SCHEMA)
 
 
 def scrub_rebuilt_store(spark: SparkSession, table: str) -> None:

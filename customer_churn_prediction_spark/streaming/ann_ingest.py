@@ -59,6 +59,7 @@ from ..similarity.ann import (
 from .maintenance import (
     append_ledger,
     compact_epochs,
+    compact_ledger,
     erase_keys,
     read_epochs,
     read_ledger,
@@ -200,5 +201,7 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every epoch partition with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition,
     keeping the ``centroid_id`` sub-partitioning — the shared
-    ``maintenance.compact_epochs`` with the identity merge."""
+    ``maintenance.compact_epochs`` with the identity merge — and fold
+    the erasure ledger to one file."""
     compact_epochs(spark, store_dir, upto_epoch, _lists, ("centroid_id",))
+    compact_ledger(spark, _ledger_path(store_dir), "vec_id")

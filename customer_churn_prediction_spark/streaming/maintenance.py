@@ -18,9 +18,11 @@ state — and composes the pieces below:
 - ``rebuild_base`` — the erasure path for lossy states: the store's
   whole history is replaced by a state recomputed from the scrubbed
   source;
-- ``erase_keys`` with ``append_ledger`` / ``read_ledger`` — the
-  partition-scoped in-place erase and its write-ahead ledger, for the
-  stores whose rows are self-contained.
+- ``erase_keys`` with ``append_ledger`` / ``read_ledger`` /
+  ``compact_ledger`` — the partition-scoped in-place erase and its
+  write-ahead ledger, for the stores whose rows are self-contained;
+  each of those families' ``compact`` also folds its ledger to one
+  file.
 
 Twelve families use them (tests/test_maintained_stores.py runs the
 shared contract over each):
@@ -49,6 +51,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources import forget
 
 # Partition that holds folded or rebuilt history: never a live epoch
 # id, so a replay of a real epoch cannot collide with it.
@@ -228,6 +232,15 @@ def read_ledger(spark: SparkSession, path: str, key_col: str) -> DataFrame:
     return read_epochs(
         spark, path, lambda rows: rows.distinct(), f"{key_col} long"
     )
+
+
+def compact_ledger(spark: SparkSession, path: str, key_col: str) -> None:
+    """Fold the one-file-per-forget ledger at ``path`` into one file
+    of distinct ids: the batch ledger's append-then-delete compaction
+    (``sources/forget.compact_ledger``), so a crash leaves duplicate
+    ids, never missing ones. Each in-place family's ``compact`` runs
+    it; a no-op when the ledger is absent or already one file."""
+    forget.compact_ledger(spark, path, f"{key_col} long")
 
 
 def erase_keys(

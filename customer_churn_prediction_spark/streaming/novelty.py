@@ -54,6 +54,7 @@ from .maintenance import (
     _BASE_EPOCH,
     append_ledger,
     compact_epochs,
+    compact_ledger,
     erase_keys,
     read_epochs,
     read_ledger,
@@ -189,13 +190,15 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     """Fold every stored pair with ``epoch_id <= upto_epoch``
     (including any previous base) into the single base partition —
     the same distinct the read path applies, so folding cannot
-    change the served set (``maintenance.compact_epochs``)."""
+    change the served set (``maintenance.compact_epochs``) — and fold
+    the erasure ledger to one file."""
     compact_epochs(
         spark,
         os.path.join(store_dir, GRAMS_SUBDIR),
         upto_epoch,
         _distinct_pairs,
     )
+    compact_ledger(spark, _ledger_path(store_dir), "doc_id")
 
 
 # ------------------------------------------------------- governance

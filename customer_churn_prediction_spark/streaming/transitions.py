@@ -70,6 +70,7 @@ from ..operators.sessions import _session_numbered
 from .maintenance import (
     append_ledger,
     compact_epochs,
+    compact_ledger,
     erase_keys,
     read_epochs,
     read_ledger,
@@ -242,7 +243,8 @@ def compact(
     log folds with the identity merge (the deltas are the data), the
     counts with the reader's ``_latest_per_user`` — each user's LATEST
     partial at or below the frontier (folding every epoch would
-    resurrect superseded rows)."""
+    resurrect superseded rows). The erasure ledger folds to one
+    file."""
     compact_epochs(
         spark,
         os.path.join(store_dir, LOG_SUBDIR),
@@ -256,6 +258,7 @@ def compact(
         upto_epoch,
         _latest_per_user,
     )
+    compact_ledger(spark, _ledger_path(store_dir), "user_id")
 
 
 # ------------------------------------------------------- governance

@@ -40,7 +40,10 @@ a new family from skipping it:
   empty/0/"not flagged" instead of raising (ADVICE r8);
 - **reset to empty** — a rebuild from an empty source, or an in-place
   erase of every key, leaves a never-ingested store that compacts as
-  a no-op and answers empty.
+  a no-op and answers empty;
+- **ledger compaction** — an in-place family's ``compact`` folds its
+  one-file-per-forget erasure ledger to one file with the same id
+  set, and a crash inside the fold leaves only duplicates.
 
 Family-specific correctness (batch equality of the maintained answer,
 FPR/band numerics, partition-scoped erasure byte-layout, WAL scrub
@@ -134,6 +137,14 @@ class Family:
 
     def erase_every_key(self, spark, sf_smoke, store):
         """In-place families: erase every stored key, unledgered."""
+        raise NotImplementedError
+
+    def forget(self, spark, store, ids):
+        """In-place families: the ledgered public forget API."""
+        raise NotImplementedError
+
+    def erased(self, spark, store):
+        """In-place families: the ledger's id set."""
         raise NotImplementedError
 
 
@@ -397,6 +408,12 @@ class IVFFamily(Family):
             for r in spark.read.parquet(store).select("vec_id").collect()
         ]
         sai.forget_from_store(spark, store, ids, record=False)
+
+    def forget(self, spark, store, ids):
+        sai.forget_from_store(spark, store, ids)
+
+    def erased(self, spark, store):
+        return {r.vec_id for r in sai.read_erased_ids(spark, store).collect()}
 
     def empty_read(self, spark, sf_smoke, store):
         assert sai.read_erased_ids(spark, store).count() == 0
@@ -703,6 +720,14 @@ class TransitionsFamily(Family):
         ]
         stt.forget_users(spark, store, ids, record=False)
 
+    def forget(self, spark, store, ids):
+        stt.forget_users(spark, store, ids)
+
+    def erased(self, spark, store):
+        return {
+            r.user_id for r in stt.read_erased_users(spark, store).collect()
+        }
+
     def empty_read(self, spark, sf_smoke, store):
         assert stt.current_transitions(spark, store).collect() == []
         assert stt.read_erased_users(spark, store).collect() == []
@@ -775,6 +800,12 @@ class NoveltyFamily(Family):
             .select("doc_id").distinct().collect()
         ]
         snov.forget_docs(spark, store, ids, record=False)
+
+    def forget(self, spark, store, ids):
+        snov.forget_docs(spark, store, ids)
+
+    def erased(self, spark, store):
+        return {r.doc_id for r in snov.read_erased_docs(spark, store).collect()}
 
     def empty_read(self, spark, sf_smoke, store):
         assert snov.current_ref_grams(spark, store).collect() == []
@@ -1090,6 +1121,58 @@ def test_erase_every_key_resets_store(fam, spark, sf_smoke, tmp_path):
     fam.compact(spark, store)  # must not raise
     assert not os.path.isdir(live)  # and must not conjure a store
     fam.empty_read(spark, sf_smoke, store)
+
+
+def _ledger_files(path):
+    return [
+        f for f in os.listdir(path)
+        if not f.startswith(("_", ".")) and not f.endswith(".crc")
+    ]
+
+
+@pytest.mark.parametrize("fam", _IN_PLACE, ids=[f.name for f in _IN_PLACE])
+def test_compact_folds_the_erasure_ledger(
+    fam, spark, sf_smoke, tmp_path, monkeypatch
+):
+    """Each ledgered forget appends one ledger file; ``compact`` folds
+    them into one file holding the same id set, through the batch
+    ledger's append-then-delete compaction. A crash after the append
+    and before the deletes leaves only duplicate ids, and the next
+    ``compact`` converges. The ledger is independent of the store's
+    rows, so the forgets run against a never-ingested store."""
+    store = str(tmp_path / "store")
+    ledger = fam.module._ledger_path(store)
+    for ids in ([3, 5], [5, 8], [13]):
+        fam.forget(spark, store, ids)
+    want = {3, 5, 8, 13}
+    assert len(_ledger_files(ledger)) == 3
+    assert fam.erased(spark, store) == want
+
+    fam.compact(spark, store)
+    assert len(_ledger_files(ledger)) == 1
+    assert fam.erased(spark, store) == want
+    fam.compact(spark, store)  # one file: a no-op
+    assert len(_ledger_files(ledger)) == 1
+
+    fam.forget(spark, store, [21])
+    want.add(21)
+    real_remove = os.remove
+
+    def crash(path, *a, **kw):
+        if path.startswith(ledger):
+            raise OSError("crash between append and delete")
+        return real_remove(path, *a, **kw)
+
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(OSError, match="crash between"):
+        fam.compact(spark, store)
+    monkeypatch.setattr(os, "remove", real_remove)
+    # the compacted file landed next to the two it supersedes
+    assert len(_ledger_files(ledger)) == 3
+    assert fam.erased(spark, store) == want
+    fam.compact(spark, store)
+    assert len(_ledger_files(ledger)) == 1
+    assert fam.erased(spark, store) == want
 
 
 def test_every_compacting_module_is_in_the_matrix():
