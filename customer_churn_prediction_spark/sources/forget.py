@@ -36,13 +36,21 @@ cache of the source lake, and a rebuild (fresh session catalog,
 post-crash recovery) re-materializes from a source that may still hold
 the rows — which would silently UNDO an attested erasure. So every
 erasure batch is first recorded in a persisted per-tag ledger
-(``erasure_ledger_{tag}`` parquet under the warehouse root), and
+(``erasure_ledger_{tag}`` parquet under the warehouse root, written,
+read and compacted by the rewrite layer's one ledger —
+``layout.append_ledger`` / ``read_ledger`` / ``compact_ledger``, the
+same set behind the streaming stores' ledgers), and
 ``writers.managed_ingest`` calls :func:`scrub_rebuilt_store` after any
 rebuild to re-apply the ledgered ids to the freshly built store. The
 ledger is written BEFORE the store deletes (write-ahead): a crash
 mid-erasure leaves the ids recorded, and the replayed batch (or the
 next rebuild's scrub) converges the stores. :func:`reapply_erasure_ledger`
 is the manual recovery form covering all stores at once.
+
+Every existence check and delete goes through the rewrite layer's
+filesystem API (``sources/layout``), so the erasure paths are
+object-store/HDFS-correct and a delete that fails aborts loudly
+instead of reporting rows forgotten that survived.
 
 Every function returns the audit report frame a compliance workflow
 records: (store, layout, partitions_touched, rows_before, rows_after).
@@ -57,20 +65,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .layout import _fs_for, _must
+from .layout import append_ledger, compact_ledger, delete, read_ledger
 from .writers import sf_tag, warehouse_store, write_bucketed
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — the
-    erasure paths must be object-store/HDFS-correct like the sibling
-    compaction (`layout.py`), and a false return from delete means the
-    forgotten rows SURVIVED, which must abort loudly, never pass."""
-    fs, jvm = _fs_for(spark, path)
-    target = jvm.org.apache.hadoop.fs.Path(path)
-    if fs.exists(target):
-        _must(fs.delete(target, True), "delete", target)
-
 
 _REPORT_SCHEMA = (
     "store string, layout string, partitions_touched int, "
@@ -90,82 +86,26 @@ _DERIVED_STORES = (
 
 
 def _ledger_path(tag: str) -> str:
-    from .writers import warehouse_store
-
     return os.path.join(warehouse_store(), f"erasure_ledger_{tag}")
 
 
 def _record_erasure(spark: SparkSession, tag: str, kind: str,
                     ids: list[int]) -> None:
-    """Write-ahead ledger append — erasure requests are human-scale
-    (thousands), so a single appended file per batch is the right
-    grain. Duplicate rows from replays are deduped at read time.
-
-    ``repartition(1)``, not ``coalesce(1)``: a local-list DataFrame
-    parallelizes into defaultParallelism Python partitions, and a
-    coalesced single task evaluates them SERIALLY (one Python worker
-    spin-up each — measured ~4.5 s at local[32] for a 16-row batch vs
-    ~0.4 s with the shuffle, which evaluates upstream in parallel)."""
-    spark.createDataFrame(
-        [(kind, int(i)) for i in ids], _LEDGER_SCHEMA
-    ).repartition(1).write.mode("append").parquet(_ledger_path(tag))
+    """Write-ahead ``layout.append_ledger`` of one erasure batch."""
+    append_ledger(
+        spark, _ledger_path(tag), _LEDGER_SCHEMA,
+        [(kind, int(i)) for i in ids],
+    )
 
 
 def read_erasure_ledger(spark: SparkSession, tag: str) -> DataFrame:
     """Distinct (kind, id) rows ever erased for this fixture tag; empty
-    frame when no erasure has been recorded. Local-path existence check
-    matches ``managed_ingest``'s own local-warehouse discipline."""
-    path = _ledger_path(tag)
-    if not os.path.exists(path):
-        return spark.createDataFrame([], _LEDGER_SCHEMA)
-    return spark.read.parquet(path).distinct()
-
-
-def compact_ledger(
-    spark: SparkSession, path: str, schema: str
-) -> tuple[int, int]:
-    """Rewrite the append-only parquet ledger at ``path`` (rows typed
-    by the DDL ``schema``) as one file of distinct rows.
-
-    Every erasure batch appends one small file, so a long-running
-    deployment accumulates thousands and each scrub pays a
-    listing-bound read. Compaction is safe because every consumer
-    reads a ledger as a distinct SET — order and duplicates carry no
-    meaning — which also gives the crash discipline for free: the
-    compacted file is APPENDED first and the superseded files deleted
-    after, so a crash anywhere leaves duplicate rows (deduped at
-    read), never missing ones. There is no moment where the ledger is
-    absent — the staged-swap window the directory-rename approach
-    would open. The distinct set is collected driver-side (erasure
-    requests are human-scale by the module contract, like the scrub's
-    own collect). Shared by the batch ledger below and the streaming
-    stores' ledgers (``streaming/maintenance.compact_ledger``).
-
-    Returns ``(files_before, files_after)``; no-op at <= 1 data file.
-    """
-
-    def _data_files() -> list[str]:
-        return [
-            f for f in os.listdir(path)
-            if not f.startswith(("_", ".")) and not f.endswith(".crc")
-        ]
-
-    if not os.path.exists(path):
-        return (0, 0)
-    before = _data_files()
-    if len(before) <= 1:
-        return (len(before), len(before))
-    rows = spark.read.parquet(path).distinct().collect()
-    spark.createDataFrame(rows, schema).repartition(1).write.mode(
-        "append"
-    ).parquet(path)
-    for f in before:
-        os.remove(os.path.join(path, f))
-    return (len(before), len(_data_files()))
+    frame when no erasure has been recorded."""
+    return read_ledger(spark, _ledger_path(tag), _LEDGER_SCHEMA)
 
 
 def compact_erasure_ledger(spark: SparkSession, tag: str) -> tuple[int, int]:
-    """:func:`compact_ledger` of the per-tag batch ledger."""
+    """``layout.compact_ledger`` of the per-tag batch ledger."""
     return compact_ledger(spark, _ledger_path(tag), _LEDGER_SCHEMA)
 
 
@@ -246,7 +186,7 @@ def _forget_partitioned(
     # Cells with no survivors: dynamic overwrite never touches them, so
     # the forgotten rows would survive — drop the partition dir itself.
     for cell in set(cells) - live_cells:
-        _fs_delete(
+        delete(
             spark,
             os.path.join(warehouse_store(), table, f"{part_col}={cell}"),
         )
@@ -287,7 +227,7 @@ def _forget_full_rewrite(
     # at the warehouse root under its own name — no table reader scans
     # there, so visibility to table scans is not a concern.
     stage = os.path.join(warehouse_store(), f"{table}__forget_stage")
-    _fs_delete(spark, stage)
+    delete(spark, stage)
     survivors.write.mode("overwrite").parquet(stage)
     staged = spark.read.parquet(stage)
     n_staged = staged.count()
@@ -298,7 +238,7 @@ def _forget_full_rewrite(
         )
     if bucket_col is not None:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _fs_delete(spark, os.path.join(warehouse_store(), table))
+        delete(spark, os.path.join(warehouse_store(), table))
         write_bucketed(
             staged, bucket_col, table, n_buckets,
             path=os.path.join(warehouse_store(), table),
@@ -307,7 +247,7 @@ def _forget_full_rewrite(
         staged.write.mode("overwrite").insertInto(table, overwrite=True)
     spark.sql(f"REFRESH TABLE {table}")
     n_after = spark.table(table).count()
-    _fs_delete(spark, stage)
+    delete(spark, stage)
     return 1, n_before, n_after
 
 

@@ -30,7 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .layout import _fs_for, _is_data_file
+from .layout import _fs_path, _is_data_file
 
 _DEFAULT_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -43,9 +43,7 @@ _SCHEMA = (
 
 
 def _table_files(spark: SparkSession, table_path: str) -> list[tuple]:
-    fs, jvm = _fs_for(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(table_path)
+    fs, root = _fs_path(spark, table_path)
     if not fs.exists(root):
         # a vanished table (dropped store, unmounted snapshot) is a
         # 'missing' verdict at verify time, not a listing exception

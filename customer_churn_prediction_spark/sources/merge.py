@@ -13,11 +13,12 @@ determines cost at 100 TB:
   per batch, a non-starter at 100 TB). ``upsert_partitioned`` instead
   computes the AFFECTED partitions from the update batch (a tiny
   distinct), reads ONLY those partitions of the base (partition-pruned
-  scan), merges, and rewrites just them via dynamic partition
-  overwrite — cost O(touched partitions), the same contract a
-  table-format MERGE with partition predicates gives. The swap is
-  per-partition directory replacement, so a replayed batch is
-  idempotent (same input -> same partition contents).
+  scan), merges, and rewrites just those partitions — cost
+  O(touched partitions), the same contract a table-format MERGE with
+  partition predicates gives. Each touched partition directory is
+  replaced through the rewrite layer's one crash-safe swap
+  (``layout.swap_dir``), so a replayed batch is idempotent (same
+  input -> same partition contents).
 * **SCD-2 apply.** Current rows matched by an update are closed
   (``valid_to`` = batch timestamp, ``is_current`` = 0) and the update
   becomes the new current row. One left join of base-current against
@@ -33,8 +34,14 @@ orchestration can assert the merge did what the batch implied.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .layout import (
+    delete, heal_swaps_under, list_status, rename, swap_dir, swap_paths,
+)
 
 
 def upsert_partitioned(
@@ -58,15 +65,14 @@ def upsert_partitioned(
     a maintenance window that deletes the old row explicitly.
 
     DURABILITY: the merged output for ALL touched partitions is staged
-    to a sibling root in one Spark job (the base is untouched while
-    the only copy of its surviving rows is being rewritten), then each
-    partition directory is swapped in via the compaction rename
-    discipline — the only loss windows left are the per-partition
-    rename pairs (metadata ops, no data rewrite inside them), and a
-    crashed swap self-recovers on the next run: leftover ``_old`` dirs
-    are restored when the live dir is absent and GC'd when it exists,
-    exactly as in ``compact_partitions``. Re-running the same batch
-    after ANY crash point converges (asserted in
+    to the table root's stage sibling in one Spark job (the base is
+    untouched while the only copy of its surviving rows is being
+    rewritten), then each partition directory is replaced through
+    ``layout.swap_dir`` — the only loss windows left are the
+    per-partition rename pairs (metadata ops, no data rewrite inside
+    them), and ``layout.heal_swaps_under`` recovers a crashed swap on
+    the next run, exactly as in ``compact_partitions``. Re-running the
+    same batch after ANY crash point converges (asserted in
     tests/test_merge.py::test_upsert_recovers_from_crash_mid_swap);
     readers racing the swap can observe a partition briefly absent —
     the same caveat as compaction, where a transactional table format
@@ -78,60 +84,36 @@ def upsert_partitioned(
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
     if any(p is None for p in parts):
         raise ValueError(f"updates contain NULL {partition_col}")
-    if updates.count() != updates.select(key).distinct().count():
+    n_upd = updates.count()
+    if n_upd != updates.select(key).distinct().count():
         raise ValueError(
             f"updates contain duplicate {key} rows; an upsert batch must "
             f"carry one row per key (pre-reduce the batch upstream)"
         )
-    from .layout import _fs_for, _must
-
-    fs, jvm = _fs_for(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    _OLD = "._upsert_old"
-    # Recover/GC a crashed earlier run FIRST (the compact_partitions
-    # discipline): live dir present -> the swap completed, GC the old
-    # copy; live dir absent -> the crash hit between the two renames
-    # and the old dir holds the ONLY copy — restore it.
-    for st in fs.listStatus(Path(path)):
-        name = st.getPath().getName()
-        if not (name.startswith(".") and name.endswith(_OLD)):
-            continue
-        live = Path(path, name[1:-len(_OLD)])
-        if fs.exists(live):
-            _must(fs.delete(st.getPath(), True), "delete", st.getPath())
-        else:
-            _must(fs.rename(st.getPath(), live), "rename", st.getPath(), live)
-
+    heal_swaps_under(spark, path)
     base = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
     n_base = base.count()
-    n_upd = updates.count()
     survivors = base.join(
         updates.select(key, partition_col), [key, partition_col], "left_anti"
     )
     merged = survivors.select(*updates.columns).unionByName(updates)
-    # Stage ALL touched partitions in one job; the base stays intact
-    # while the only copy of its surviving rows is rewritten.
-    stage_root = path.rstrip("/") + "__upsert_stage"
-    stage_path = Path(stage_root)
-    if fs.exists(stage_path):
-        _must(fs.delete(stage_path, True), "delete", stage_path)
+    stage_root = swap_paths(path)[0]
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(
         stage_root
     )
     # Swap per partition directory — enumerate the STAGE's dirs so
     # hive value encoding is never reproduced by hand.
-    for st in fs.listStatus(stage_path):
+    for st in list_status(spark, stage_root):
         pname = st.getPath().getName()
         if not (st.isDirectory() and pname.startswith(f"{partition_col}=")):
             continue
-        live = Path(path, pname)
-        old = Path(path, f".{pname}{_OLD}")
-        if fs.exists(live):
-            _must(fs.rename(live, old), "rename", live, old)
-        _must(fs.rename(st.getPath(), live), "rename", st.getPath(), live)
-        if fs.exists(old):
-            _must(fs.delete(old, True), "delete", old)
-    _must(fs.delete(stage_path, True), "delete", stage_path)
+        staged = os.path.join(stage_root, pname)
+        swap_dir(
+            spark,
+            os.path.join(path, pname),
+            lambda stage: rename(spark, staged, stage),
+        )
+    delete(spark, stage_root)
     n_out = spark.read.parquet(path).where(
         F.col(partition_col).isin(parts)
     ).count()

@@ -21,6 +21,8 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .layout import delete
+
 
 def sf_tag(sf_dir: str) -> str:
     """Managed-table namespace tag for a dataset directory: basename +
@@ -73,12 +75,11 @@ def managed_ingest(
     sees the table (``forget.scrub_rebuilt_store``; a one-existence-
     check no-op for tables without a ledger)."""
     import os
-    import shutil
 
     if not spark.catalog.tableExists(table):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         path = os.path.join(warehouse_store(), table)
-        shutil.rmtree(path, ignore_errors=True)
+        delete(spark, path)
         write_fn(path)
         from .forget import scrub_rebuilt_store
 

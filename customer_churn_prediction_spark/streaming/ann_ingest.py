@@ -56,13 +56,11 @@ from ..similarity.ann import (
     _vec,
     _with_norm,
 )
+from ..sources.layout import append_ledger, compact_ledger, read_ledger
 from .maintenance import (
-    append_ledger,
     compact_epochs,
-    compact_ledger,
     erase_keys,
     read_epochs,
-    read_ledger,
     write_epoch,
 )
 from .windows import stream_to_batch_sink
@@ -141,6 +139,7 @@ def ivf_topk_from_store(
 
 
 _ERASED_SUBDIR = "_erased_ids"  # WAL ledger next to the store
+_LEDGER_SCHEMA = "vec_id long"
 
 
 def _ledger_path(store_dir: str) -> str:
@@ -149,7 +148,7 @@ def _ledger_path(store_dir: str) -> str:
 
 def read_erased_ids(spark: SparkSession, store_dir: str) -> DataFrame:
     """Distinct vec_ids ever erased from this store (empty when none)."""
-    return read_ledger(spark, _ledger_path(store_dir), "vec_id")
+    return read_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)
 
 
 def forget_from_store(
@@ -176,7 +175,10 @@ def forget_from_store(
     rows erased)."""
     ids = [int(i) for i in vec_ids]
     if record:
-        append_ledger(spark, _ledger_path(store_dir), "vec_id", ids)
+        append_ledger(
+            spark, _ledger_path(store_dir), _LEDGER_SCHEMA,
+            [(i,) for i in ids],
+        )
     return erase_keys(
         spark, store_dir, "vec_id", ids, ("epoch_id", "centroid_id")
     )
@@ -204,4 +206,4 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
     ``maintenance.compact_epochs`` with the identity merge — and fold
     the erasure ledger to one file."""
     compact_epochs(spark, store_dir, upto_epoch, _lists, ("centroid_id",))
-    compact_ledger(spark, _ledger_path(store_dir), "vec_id")
+    compact_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)

@@ -149,7 +149,7 @@ def publish_epoch_report(
     # are unions of createDataFrame(local-list) parts, and coalescing a
     # parallelized local collection evaluates all its Python partitions
     # SERIALLY inside the one task (~100 ms of worker spin-up each at
-    # local[32] — the _record_erasure trap, sources/forget.py). The
+    # local[32] — the append_ledger trap, sources/layout.py). The
     # shuffle is ~10 report rows; for JVM-computed reports (drift/DQ)
     # the cost difference is noise in either direction.
     report_df.repartition(1).write.mode("overwrite").parquet(

@@ -14,15 +14,19 @@ state — and composes the pieces below:
 - ``compact_epochs`` — the one fold: epochs ``<= upto_epoch`` go
   through the SAME ``merge`` the reader applies and are relabelled to
   the single ``_BASE_EPOCH``, newer epochs are kept as they are, and
-  the result replaces the store through ``compact_swap``;
+  the result replaces the store through ``layout.swap_dir``;
 - ``rebuild_base`` — the erasure path for lossy states: the store's
-  whole history is replaced by a state recomputed from the scrubbed
-  source;
-- ``erase_keys`` with ``append_ledger`` / ``read_ledger`` /
-  ``compact_ledger`` — the partition-scoped in-place erase and its
-  write-ahead ledger, for the stores whose rows are self-contained;
-  each of those families' ``compact`` also folds its ledger to one
-  file.
+  whole history is replaced, through the same swap, by a state
+  recomputed from the scrubbed source;
+- ``erase_keys`` — the partition-scoped in-place erase for the stores
+  whose rows are self-contained, behind the write-ahead ledger
+  (``layout.append_ledger`` / ``read_ledger`` / ``compact_ledger``,
+  the batch erasure ledger's set); each of those families'
+  ``compact`` also folds its ledger to one file.
+
+Every filesystem step goes through ``sources/layout``'s Hadoop API,
+so a ``file://``, ``hdfs://`` or ``s3a://`` store behaves like a
+plain local path.
 
 Twelve families use them (tests/test_maintained_stores.py runs the
 shared contract over each):
@@ -47,12 +51,11 @@ lands in every store at once.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import forget
+from ..sources.layout import delete, exists, heal_swap, list_status, swap_dir
 
 # Partition that holds folded or rebuilt history: never a live epoch
 # id, so a replay of a real epoch cannot collide with it.
@@ -82,57 +85,9 @@ def read_epochs(
     (the frame ``merge`` receives carries the partition columns), or
     an empty frame of ``empty_schema`` when nothing is stored yet, so
     a read before the first epoch answers instead of raising."""
-    if not os.path.isdir(path):
+    if not exists(spark, path):
         return spark.createDataFrame([], empty_schema)
     return merge(spark.read.parquet(path))
-
-
-def staged_swap(live_path: str, write_fn) -> None:
-    """Replace the store at ``live_path`` with whatever ``write_fn``
-    writes, atomically with respect to crashes:
-
-      1. entry-time self-heal of any PRIOR crashed swap —
-         old-without-live → rename old back; leftover stage → delete;
-      2. ``write_fn(stage_path)`` fully writes the replacement (the
-         write ACTION completes before anything moves);
-      3. live → old, stage → live, old deleted — fold-and-delete
-         become ONE visibility event, so a re-run is idempotent and
-         every crash window is recovered by step 1 on the next call.
-    """
-    stage = live_path + "__compact_stage"
-    old = live_path + "__compact_old"
-    if os.path.isdir(old):
-        if os.path.isdir(live_path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, live_path)
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)
-    write_fn(stage)
-    os.rename(live_path, old)
-    os.rename(stage, live_path)
-    shutil.rmtree(old)
-
-
-def compact_swap(live_path: str, write_fn) -> None:
-    """``staged_swap`` for COMPACTION — a fold of the store's own
-    epoch history, where ``write_fn`` reads ``live_path`` itself. A
-    store (or sub-store) that was never ingested — or whose root an
-    erasure removed after emptying it — has nothing to fold: a no-op,
-    mirroring ``read_epochs``'s missing-path guard, instead of letting
-    the fold's ``spark.read.parquet`` raise on the missing directory.
-
-    A missing live dir is NOT always "never ingested": a swap that
-    crashed between live→old and stage→live leaves old-without-live,
-    which ``staged_swap``'s entry-time self-heal would restore — so
-    heal that window FIRST, and only then treat a still-missing live
-    path as the no-op case."""
-    old = live_path + "__compact_old"
-    if os.path.isdir(old) and not os.path.isdir(live_path):
-        os.rename(old, live_path)
-    if not os.path.isdir(live_path):
-        return
-    staged_swap(live_path, write_fn)
 
 
 def compact_epochs(
@@ -152,8 +107,12 @@ def compact_epochs(
     frontier at or below the last committed epoch — a folded epoch
     that later replays would be merged twice (the caller owns that
     invariant, as for ``sources/layout.vacuum_epochs``). Crash safety
-    is ``compact_swap``; an already-folded store has nothing left
-    below the frontier to re-add, so a re-run is a no-op."""
+    is ``layout.swap_dir``; an already-folded store has nothing left
+    below the frontier to re-add, so a re-run is a no-op.
+
+    A never-ingested (or erased-to-empty) store is a no-op, like
+    ``read_epochs``'s guard — but only after the swap's heal: a swap
+    that crashed between its renames leaves only the old copy."""
     parts = ("epoch_id", *sub_partitions)
 
     def _write(stage: str) -> None:
@@ -170,7 +129,9 @@ def compact_epochs(
             .parquet(stage)
         )
 
-    compact_swap(path, _write)
+    heal_swap(spark, path)
+    if exists(spark, path):
+        swap_dir(spark, path, _write)
 
 
 def rebuild_base(live_path: str, state_df: DataFrame) -> None:
@@ -179,7 +140,7 @@ def rebuild_base(live_path: str, state_df: DataFrame) -> None:
     bit/register/cell cannot be unlearned in place (it may belong to
     other keys), so governance for such a store is: scrub the SOURCE,
     recompute the state from the clean source, and swap it in as the
-    base epoch. The swap is ``staged_swap``, so a crash mid-rebuild
+    base epoch. The swap is ``layout.swap_dir``, so a crash mid-rebuild
     never leaves a half-forgotten store — readers see the old state or
     the clean state, nothing between. OFFLINE (maintenance query
     stopped); the restarted query's checkpoint must be fresh, since
@@ -189,7 +150,8 @@ def rebuild_base(live_path: str, state_df: DataFrame) -> None:
     scrubbed source. Requires an existing store — rebuilding a store
     that never ingested is meaningless (there is nothing to
     forget)."""
-    if not os.path.isdir(live_path):
+    spark = state_df.sparkSession
+    if not exists(spark, live_path):
         raise FileNotFoundError(
             f"rebuild_base: no store at {live_path} — nothing to "
             "rebuild; a first build is the maintenance query's job"
@@ -198,7 +160,7 @@ def rebuild_base(live_path: str, state_df: DataFrame) -> None:
         # Scrub removed every key: the truthful state is "never
         # ingested" — remove the store and let read_epochs answer the
         # typed empty frame.
-        shutil.rmtree(live_path)
+        delete(spark, live_path)
         return
 
     def _write(stage: str) -> None:
@@ -210,37 +172,7 @@ def rebuild_base(live_path: str, state_df: DataFrame) -> None:
             .parquet(stage)
         )
 
-    staged_swap(live_path, _write)
-
-
-def append_ledger(
-    spark: SparkSession, path: str, key_col: str, ids: list[int]
-) -> None:
-    """Write-ahead record of an erasure batch: append ``ids`` to the
-    ledger at ``path`` BEFORE the store is touched, so a crash-replayed
-    epoch that re-delivers an erased key can be scrubbed again."""
-    if ids:
-        spark.createDataFrame(
-            [(i,) for i in ids], f"{key_col} long"
-        ).repartition(1).write.mode("append").parquet(path)
-
-
-def read_ledger(spark: SparkSession, path: str, key_col: str) -> DataFrame:
-    """Distinct ids ever recorded in the ledger at ``path`` (empty
-    when none). A SET at read time — duplicates from replayed scrubs
-    are free."""
-    return read_epochs(
-        spark, path, lambda rows: rows.distinct(), f"{key_col} long"
-    )
-
-
-def compact_ledger(spark: SparkSession, path: str, key_col: str) -> None:
-    """Fold the one-file-per-forget ledger at ``path`` into one file
-    of distinct ids: the batch ledger's append-then-delete compaction
-    (``sources/forget.compact_ledger``), so a crash leaves duplicate
-    ids, never missing ones. Each in-place family's ``compact`` runs
-    it; a no-op when the ledger is absent or already one file."""
-    forget.compact_ledger(spark, path, f"{key_col} long")
+    swap_dir(spark, live_path, _write)
 
 
 def erase_keys(
@@ -261,7 +193,9 @@ def erase_keys(
     would grow linearly with the touched partitions. Every other
     partition's files are left byte-untouched. Survivors stage to a
     sibling dir (a path write cannot read from itself; the stage also
-    makes a crash re-runnable), dynamic overwrite replaces exactly the
+    makes a crash re-runnable; it is no dot-prefixed swap stage
+    because it is read back, and Spark ignores a hidden root path),
+    dynamic overwrite replaces exactly the
     touched partitions, and partitions left EMPTY are deleted
     directly — then any parent partition dir they emptied, then the
     store root if no partition is left, so readers and ``compact``
@@ -272,7 +206,7 @@ def erase_keys(
     Returns (partitions_touched, rows_before, rows_after), counted
     over the TOUCHED partitions only — counting the whole store would
     cost two full scans of pure bookkeeping."""
-    if not os.path.isdir(path):
+    if not exists(spark, path):
         return 0, 0, 0
     store = spark.read.parquet(path)
     hit = (
@@ -294,7 +228,7 @@ def erase_keys(
         coarse = coarse.where(F.col(c).isin(sorted({p[i] for p in pairs})))
     touched = coarse.join(F.broadcast(pairs_df), list(part_cols), "left_semi")
     stage = path.rstrip("/") + "__forget_stage"
-    shutil.rmtree(stage, ignore_errors=True)
+    delete(spark, stage)
     (
         touched.where(~F.col(key_col).isin(ids))
         .write.mode("overwrite")
@@ -314,21 +248,21 @@ def erase_keys(
             .partitionBy(*part_cols)
             .parquet(path)
         )
-    shutil.rmtree(stage, ignore_errors=True)
+    delete(spark, stage)
     for p in set(pairs) - live:
         dirs = [f"{c}={v}" for c, v in zip(part_cols, p)]
         # the emptied leaf, then each parent it leaves without a
         # partition below it, then the root
         for depth in range(len(dirs), -1, -1):
             d = os.path.join(path, *dirs[:depth])
-            if depth < len(dirs) and _has_partitions(d):
+            if depth < len(dirs) and _has_partitions(spark, d):
                 break
-            shutil.rmtree(d, ignore_errors=True)
+            delete(spark, d)
     return len(pairs), n_after + n_erased, n_after
 
 
-def _has_partitions(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        "=" in name and os.path.isdir(os.path.join(d, name))
-        for name in os.listdir(d)
+def _has_partitions(spark: SparkSession, d: str) -> bool:
+    return any(
+        st.isDirectory() and "=" in st.getPath().getName()
+        for st in list_status(spark, d)
     )

@@ -49,15 +49,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.layout import append_ledger, compact_ledger, read_ledger
 from ..text.dedup import exploded_shingles, score_novelty_against
 from .maintenance import (
     _BASE_EPOCH,
-    append_ledger,
     compact_epochs,
-    compact_ledger,
     erase_keys,
     read_epochs,
-    read_ledger,
     rebuild_base,
     write_epoch,
 )
@@ -198,17 +196,20 @@ def compact(spark: SparkSession, store_dir: str, upto_epoch: int) -> None:
         upto_epoch,
         _distinct_pairs,
     )
-    compact_ledger(spark, _ledger_path(store_dir), "doc_id")
+    compact_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)
 
 
 # ------------------------------------------------------- governance
+
+_LEDGER_SCHEMA = "doc_id long"
+
 
 def _ledger_path(store_dir: str) -> str:
     return os.path.join(store_dir, "erased_docs")
 
 
 def read_erased_docs(spark: SparkSession, store_dir: str) -> DataFrame:
-    return read_ledger(spark, _ledger_path(store_dir), "doc_id")
+    return read_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)
 
 
 def forget_docs(
@@ -228,7 +229,10 @@ def forget_docs(
     (the compact invariant)."""
     ids = [int(i) for i in doc_ids]
     if record:
-        append_ledger(spark, _ledger_path(store_dir), "doc_id", ids)
+        append_ledger(
+            spark, _ledger_path(store_dir), _LEDGER_SCHEMA,
+            [(i,) for i in ids],
+        )
     erase_keys(
         spark,
         os.path.join(store_dir, GRAMS_SUBDIR),

@@ -67,13 +67,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.sessions import _session_numbered
+from ..sources.layout import append_ledger, compact_ledger, read_ledger
 from .maintenance import (
-    append_ledger,
     compact_epochs,
-    compact_ledger,
     erase_keys,
     read_epochs,
-    read_ledger,
     write_epoch,
 )
 from .windows import stream_to_batch_sink
@@ -258,17 +256,20 @@ def compact(
         upto_epoch,
         _latest_per_user,
     )
-    compact_ledger(spark, _ledger_path(store_dir), "user_id")
+    compact_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)
 
 
 # ------------------------------------------------------- governance
+
+_LEDGER_SCHEMA = "user_id long"
+
 
 def _ledger_path(store_dir: str) -> str:
     return os.path.join(store_dir, "erased_users")
 
 
 def read_erased_users(spark: SparkSession, store_dir: str) -> DataFrame:
-    return read_ledger(spark, _ledger_path(store_dir), "user_id")
+    return read_ledger(spark, _ledger_path(store_dir), _LEDGER_SCHEMA)
 
 
 def forget_users(
@@ -287,7 +288,10 @@ def forget_users(
     committed epochs only (the compact invariant)."""
     ids = [int(i) for i in user_ids]
     if record:
-        append_ledger(spark, _ledger_path(store_dir), "user_id", ids)
+        append_ledger(
+            spark, _ledger_path(store_dir), _LEDGER_SCHEMA,
+            [(i,) for i in ids],
+        )
     erase_keys(
         spark,
         os.path.join(store_dir, LOG_SUBDIR),

@@ -1,7 +1,8 @@
 """The cluster-safe checkpoint switch (r15, VERDICT r14 item 4).
 
-``SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir>`` must flip the iterative
-loops' per-round materialization from unreplicated localCheckpoint
+``SPARK_GRAFT_RELIABLE_CHECKPOINT=<dir>`` must flip every per-run
+materialization — the iterative loops' per-round checkpoints and the
+per-run intermediates alike — from unreplicated localCheckpoint
 blocks to Spark's reliable checkpointing (files under the directory),
 with identical results; unset, no reliable-checkpoint files appear.
 """
@@ -9,6 +10,8 @@ with identical results; unset, no reliable-checkpoint files appear.
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from customer_churn_prediction_spark.text import dedup
 
@@ -23,16 +26,24 @@ def _checkpoint_files(root: str) -> list[str]:
     return out
 
 
+# one query per materializer: the components loop checkpoints each
+# round through loop_checkpoint, containment_pairs its verification
+# tail through run_materialize
+@pytest.mark.parametrize(
+    "query",
+    [dedup.lsh_dedup_components, dedup.containment_pairs],
+    ids=["loop_checkpoint", "run_materialize"],
+)
 def test_flag_flips_loop_checkpoints_to_reliable(
-    spark, tmp_path, monkeypatch
+    query, spark, tmp_path, monkeypatch
 ):
     ck = str(tmp_path / "reliable_ck")
-    baseline = dedup.lsh_dedup_components(spark, SF_SMOKE)
+    baseline = query(spark, SF_SMOKE)
     base_rows = baseline.collect()
     assert not os.path.exists(ck)
 
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", ck)
-    routed = dedup.lsh_dedup_components(spark, SF_SMOKE)
+    routed = query(spark, SF_SMOKE)
     assert_df_equal(routed, baseline)
     files = _checkpoint_files(ck)
     assert files, (
@@ -44,7 +55,7 @@ def test_flag_flips_loop_checkpoints_to_reliable(
     # files under the reliable dir)
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     before = set(files)
-    again = dedup.lsh_dedup_components(spark, SF_SMOKE)
+    again = query(spark, SF_SMOKE)
     assert [tuple(r) for r in again.collect()] is not None
     assert set(_checkpoint_files(ck)) == before
     assert sorted(map(tuple, base_rows)) == sorted(

@@ -217,27 +217,23 @@ def test_staging_dirs_invisible_to_readers_and_gcd(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     n = spark.read.parquet(out).count()
-    lang = os.path.basename(
-        glob.glob(os.path.join(out, "lang=*"))[0]
-    ).split("=", 1)[1]
+    parts = sorted(
+        os.path.basename(d) for d in glob.glob(os.path.join(out, "lang=*"))
+    )
+    live = os.path.join(out, parts[0])
+    stage, old = layout.swap_paths(live)
     # simulate a crash: staged copy + old copy both left behind
     import shutil
 
-    shutil.copytree(
-        os.path.join(out, f"lang={lang}"),
-        os.path.join(out, f".lang={lang}._compact_tmp"),
-    )
-    shutil.copytree(
-        os.path.join(out, f"lang={lang}"),
-        os.path.join(out, f".lang={lang}._compact_old"),
-    )
+    shutil.copytree(live, stage)
+    shutil.copytree(live, old)
     # readers do not see the staged copies
     assert spark.read.parquet(out).count() == n
     # next compaction run GCs them and reports only real partitions
     report = layout.compact_partitions(spark, out, target_bytes=64 * 1024 * 1024)
-    assert not os.path.exists(os.path.join(out, f".lang={lang}._compact_tmp"))
-    assert not os.path.exists(os.path.join(out, f".lang={lang}._compact_old"))
-    assert all("._compact" not in r.partition for r in report.collect())
+    assert not os.path.exists(stage)
+    assert not os.path.exists(old)
+    assert sorted(r.partition for r in report.collect()) == parts
     assert spark.read.parquet(out).count() == n
 
 
@@ -245,23 +241,22 @@ def test_compaction_restores_partition_lost_between_swap_renames(
     spark, sf_dir, tmp_path
 ):
     """Crash point BETWEEN the two swap renames: the live partition
-    dir is gone and its only copy is `.p._compact_old`. The next run
+    dir is gone and its only copy is the swap's old sibling. The next run
     must RESTORE old -> live, never GC it (review r6: the previous GC
     deleted the only copy — silent data loss)."""
     out = str(tmp_path / "crash_mid_swap")
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     n = spark.read.parquet(out).count()
-    part = os.path.basename(glob.glob(os.path.join(out, "lang=*"))[0])
-    # simulate: rename(live -> old) happened, crash before tmp -> live
-    os.rename(
-        os.path.join(out, part), os.path.join(out, f".{part}._compact_old")
-    )
+    live = glob.glob(os.path.join(out, "lang=*"))[0]
+    old = layout.swap_paths(live)[1]
+    # simulate: rename(live -> old) happened, crash before stage -> live
+    os.rename(live, old)
     assert spark.read.parquet(out).count() < n  # partition is dark
     layout.compact_partitions(spark, out, target_bytes=64 * 1024 * 1024)
     # restored and visible again, staging gone, zero rows lost
-    assert os.path.isdir(os.path.join(out, part))
-    assert not os.path.exists(os.path.join(out, f".{part}._compact_old"))
+    assert os.path.isdir(live)
+    assert not os.path.exists(old)
     assert spark.read.parquet(out).count() == n
 
 
@@ -358,3 +353,55 @@ def test_vacuum_epochs_never_deletes_the_latest_pointer_target(
     # a frontier at or below the pointer is unaffected by the cap
     r2 = layout.vacuum_epochs(spark, sink, retain_from_epoch=2)
     assert r2.count() == 0
+
+
+# Modules under streaming/ and sources/ that may still touch the local
+# filesystem directly, each with its reason. Everything else reaches
+# storage through the Hadoop FileSystem of the path (layout.exists /
+# list_status / rename / delete), so a file://, hdfs:// or s3a://
+# store behaves like a plain local path.
+_LOCAL_FS_ALLOWED = {
+    # the TFRecord codecs write and finalize their own local part
+    # files outside Spark's writer
+    "sources/tfrecord.py": "local TFRecord part-file codec",
+    "sources/tfrecord_datasource.py": "local TFRecord datasource writer",
+    # the _LATEST report pointers need an atomic replace, which the
+    # Hadoop FileSystem API does not give on every filesystem
+    "streaming/drift.py": "_LATEST report pointer",
+    "streaming/sketch.py": "_LATEST report pointer (_prev_candidates)",
+}
+
+_LOCAL_FS_CALLS = {
+    "os.rename", "os.remove", "os.listdir", "os.path.isdir",
+    "os.path.exists", "shutil.rmtree",
+}
+
+
+def test_store_code_uses_only_the_hadoop_filesystem_api():
+    """No module under ``streaming/`` or ``sources/`` outside the
+    allow-list calls the local filesystem for an existence check,
+    listing, rename or delete."""
+    import ast
+
+    import customer_churn_prediction_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    calls = {}
+    for sub in ("streaming", "sources"):
+        for path in sorted(glob.glob(os.path.join(root, sub, "*.py"))):
+            rel = os.path.relpath(path, root)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            calls[rel] = [
+                f"{rel}:{node.lineno} {ast.unparse(node.func)}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and ast.unparse(node.func) in _LOCAL_FS_CALLS
+            ]
+    offenders = [
+        c for rel, found in calls.items() if rel not in _LOCAL_FS_ALLOWED
+        for c in found
+    ]
+    assert not offenders, offenders
+    # an allow-list entry whose module no longer needs it is stale
+    assert all(calls.get(rel) for rel in _LOCAL_FS_ALLOWED), calls

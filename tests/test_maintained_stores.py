@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from customer_churn_prediction_spark.catalog import load_table
 from customer_churn_prediction_spark.operators import sketches as sk
 from customer_churn_prediction_spark.similarity import ann
+from customer_churn_prediction_spark.sources import layout
 from customer_churn_prediction_spark.streaming import ann_ingest as sai
 from customer_churn_prediction_spark.streaming import bloom as sbl
 from customer_churn_prediction_spark.streaming import decay as sdc
@@ -338,7 +339,7 @@ class KMVFamily(Family):
 class IVFFamily(Family):
     name = "ivf"
     module = sai
-    live_subdir = ""  # staged_swap targets the store dir itself
+    live_subdir = ""  # the swap targets the store dir itself
     governance = "in_place"
 
     def waves(self, spark, sf_smoke):
@@ -982,7 +983,7 @@ def test_compact_heals_a_crashed_swap(fam, spark, sf_smoke, tmp_path):
     before = fam.state(spark, sf_smoke, store)
     live = os.path.join(store, fam.live_subdir) if fam.live_subdir \
         else store
-    os.rename(live, live + "__compact_old")
+    os.rename(live, layout.swap_paths(live)[1])
     fam.compact(spark, store)
     assert fam.state(spark, sf_smoke, store) == before
 
@@ -998,7 +999,7 @@ def test_compact_on_never_ingested_store_is_noop(
     """compact() on a store that never ingested (or whose sub-store
     an erasure emptied and removed) must be a no-op, mirroring the
     readers' missing-path guard — not raise AnalysisException from
-    the fold's parquet read (ADVICE r13; maintenance.compact_swap)."""
+    the fold's parquet read (ADVICE r13; maintenance.compact_epochs)."""
     store = str(tmp_path / "never_ingested")
     fam.compact(spark, store)  # must not raise
     assert not os.path.isdir(store)  # and must not conjure a store
@@ -1156,23 +1157,68 @@ def test_compact_folds_the_erasure_ledger(
 
     fam.forget(spark, store, [21])
     want.add(21)
-    real_remove = os.remove
+    real_delete = layout.delete
 
-    def crash(path, *a, **kw):
+    def crash(spark, path):
         if path.startswith(ledger):
             raise OSError("crash between append and delete")
-        return real_remove(path, *a, **kw)
+        return real_delete(spark, path)
 
-    monkeypatch.setattr(os, "remove", crash)
+    monkeypatch.setattr(layout, "delete", crash)
     with pytest.raises(OSError, match="crash between"):
         fam.compact(spark, store)
-    monkeypatch.setattr(os, "remove", real_remove)
+    monkeypatch.setattr(layout, "delete", real_delete)
     # the compacted file landed next to the two it supersedes
     assert len(_ledger_files(ledger)) == 3
     assert fam.erased(spark, store) == want
     fam.compact(spark, store)
     assert len(_ledger_files(ledger)) == 1
     assert fam.erased(spark, store) == want
+
+
+_STORES = [f for f in FAMILIES if f.live_subdir is not None]
+
+
+@pytest.mark.parametrize("fam", _STORES, ids=[f.name for f in _STORES])
+def test_uri_store_path_matches_plain_path(
+    fam, spark, sf_smoke, tmp_path, monkeypatch
+):
+    """Ingest, read, compact and erase on a ``file://`` store path
+    must leave exactly the state the plain path leaves: every
+    existence check, listing, rename and delete of the lifecycle goes
+    through the Hadoop FileSystem of the path, so a scheme-qualified
+    store neither reads as empty, nor skips its fold, nor keeps an
+    erased key."""
+    # the families' report sinks still write their _LATEST pointers
+    # through the local filesystem (ROADMAP G7), which takes the URI
+    # for a relative path: keep that stray tree inside tmp_path
+    monkeypatch.chdir(tmp_path)
+    stream_dir = str(tmp_path / "arrivals")
+    waves = fam.waves(spark, sf_smoke)
+    _stage(waves, stream_dir)
+    seen = []
+    for name, scheme in (("plain", ""), ("uri", "file://")):
+        local = str(tmp_path / name)
+        store = scheme + local
+        q = fam.run(spark, sf_smoke, stream_dir, store,
+                    str(tmp_path / f"ckpt_{name}"))
+        _drain_clean(q)
+        ingested = fam.state(spark, sf_smoke, store)
+        fam.compact(spark, store)
+        folded = sorted(
+            d for d in os.listdir(os.path.join(local, fam.live_subdir))
+            if d.startswith("epoch_id=")
+        )
+        compacted = fam.state(spark, sf_smoke, store)
+        if fam.governance == "in_place":
+            fam.erase(spark, sf_smoke, store)
+        else:
+            assert fam.rebuild(spark, store, fam.scrub(_union(waves)))
+        seen.append(
+            (ingested, folded, compacted, fam.state(spark, sf_smoke, store))
+        )
+    assert seen[0][0], "the plain-path store must hold state"
+    assert seen[1] == seen[0]
 
 
 def test_every_compacting_module_is_in_the_matrix():

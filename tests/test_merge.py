@@ -10,7 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from customer_churn_prediction_spark.catalog import load_table
-from customer_churn_prediction_spark.sources import merge
+from customer_churn_prediction_spark.sources import layout, merge
 
 
 def _seed_partitioned(spark, sf_dir, out):
@@ -200,7 +200,7 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
     """Simulate every distinct crash state of the staged-swap commit
     and assert a re-run of the same batch converges to the correct
     merged table: (a) live dir renamed away but stage not yet swapped
-    in (the only copy of survivors is the _old dir — must be RESTORED,
+    in (the only copy of survivors is the old dir — must be RESTORED,
     never GC'd), (b) stage root left behind after a completed swap."""
     import os
 
@@ -213,10 +213,9 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
         [(2, "a", 99), (4, "a", 40)], "k int, p string, v int"
     )
 
-    # Crash state (a): live p=a renamed to the _old name, no swap yet.
-    os.rename(
-        os.path.join(path, "p=a"), os.path.join(path, ".p=a._upsert_old")
-    )
+    # Crash state (a): live p=a renamed to the old name, no swap yet.
+    live = os.path.join(path, "p=a")
+    os.rename(live, layout.swap_paths(live)[1])
     merge.upsert_partitioned(spark, path, updates, key="k",
                              partition_col="p")
     got = {
@@ -227,7 +226,8 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
 
     # Crash state (b): stage root left behind with stale content.
     stale = spark.createDataFrame([(9, "a", 900)], "k int, p string, v int")
-    stale.write.partitionBy("p").parquet(path + "__upsert_stage")
+    stage_root = layout.swap_paths(path)[0]
+    stale.write.partitionBy("p").parquet(stage_root)
     merge.upsert_partitioned(spark, path, updates, key="k",
                              partition_col="p")
     got = {
@@ -235,4 +235,4 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     }
     assert got == {(1, "a", 10), (2, "a", 99), (3, "b", 30), (4, "a", 40)}
-    assert not os.path.exists(path + "__upsert_stage")
+    assert not os.path.exists(stage_root)
